@@ -2,10 +2,25 @@
 DAGs.
 
 Task graph mirrored from reference ``examples/process_orders.py:54-131``
-(sensor → normalize → DDL → load → dim/fact transforms, fan-out at
-``:115``) and ``create_dim_dates.py``, re-expressed as plain function
-composition: Spark's lazy DAG already provides intra-job ordering, so the
-"orchestrator" is just sequencing + idempotent writes (SURVEY.md §2.11).
+(sensor → normalize → DDL → load → dim/fact transforms) and
+``create_dim_dates.py``, re-expressed as function composition. Spark's
+lazy DAG provides the ordering inside each write; between writes the
+runner keeps the reference's task graph, including its fan-out: after
+staging, ``process_orders.py:115`` runs ``[dim, fact]`` in parallel, and
+``run_orders`` likewise runs three independent branches concurrently
+(``_fan_out``) once ``stg_orders`` is written:
+
+- the ``events_orders`` append and the ``dim_orders`` rebuild from it;
+- the ``_fact_dates_rejects`` dead-letter probe and its append;
+- the ``fact_orders_created`` idempotent append.
+
+Each branch writes its own tables and reads only ``stg_orders``,
+``dim_dates`` and what it writes. The branches inherit the caller's job
+group and tags. A failing branch does not cancel the others: the run
+waits for all of them and then raises the first failure, so no write is
+in flight after ``run_orders`` returns or raises. Re-running the same
+feed day then completes what the failed branch left undone and is a
+no-op for the branches that finished (every layer below is idempotent).
 
 Layer contract per run(ds, ts):
 
@@ -24,10 +39,13 @@ Re-running any stage with the same (ds, ts) is a no-op (tested).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from batch_data_pipeline_exercise_spark import schemas
 from batch_data_pipeline_exercise_spark.operators import sketches
@@ -92,6 +110,18 @@ class Pipeline:
         self.session_recycles += 1
         return self.spark
 
+    def _fan_out(self, *branches: Callable[[], None]) -> None:
+        """Run independent branches concurrently, each on a thread that
+        inherits this thread's job group, job tags and local properties
+        (captured when the branch is wrapped), so their Spark jobs are
+        attributed like the caller's own. Waits for every branch, then
+        re-raises the first failure in branch order: no write is still in
+        flight when this returns or raises."""
+        with ThreadPoolExecutor(max_workers=len(branches)) as pool:
+            futures = [pool.submit(inheritable_thread_target(self.spark)(b)) for b in branches]
+        for f in futures:
+            f.result()
+
     def _maybe_recycle(self) -> None:
         """Called at the end of each run_* (a layer boundary: everything
         the run produced is already in the warehouse)."""
@@ -147,62 +177,71 @@ class Pipeline:
         )
         self.wh.overwrite(stg, "stg_orders")
         stg = self.wh.read("stg_orders")
-
-        # bronze event log: append-once on (id, event_time) — the
-        # reference's uniqueness contract (README.md:41)
-        self.wh.append_once(stg, "events_orders", keys=["id", "event_time"])
-
-        # dim_orders: deterministic rebuild from the full log (M2)
-        log = self.wh.read("events_orders")
-        dim = scd2_from_events(
-            log.withColumnRenamed("id", "order_id"),
-            key="order_id",
-            attr_cols=["status"],
-            time_col="event_time",
-            extra_cols=["processed_time", "event_time"],
-        ).select("order_id", "status", "event_time", "processed_time", "start_time", "end_time")
-        self.wh.overwrite(dim, "dim_orders")
-
-        # fact_orders_created: earliest event per order wins (M3)
         dates = self.wh.read("dim_dates")
-        candidates = (
-            stg.join(F.broadcast(dates), F.to_date(stg.event_time) == dates.datum)
-            .select(
-                stg.id.alias("order_id"),
-                "product_id",
-                dates.id.alias("created_date_id"),
-                F.col("event_time").alias("created_time"),
-                "amount",
-                "total_price",
-                "processed_time",
+
+        def dim_orders() -> None:
+            # bronze event log: append-once on (id, event_time) — the
+            # reference's uniqueness contract (README.md:41)
+            self.wh.append_once(stg, "events_orders", keys=["id", "event_time"])
+            # dim_orders: deterministic rebuild from the full log (M2)
+            log = self.wh.read("events_orders")
+            dim = scd2_from_events(
+                log.withColumnRenamed("id", "order_id"),
+                key="order_id",
+                attr_cols=["status"],
+                time_col="event_time",
+                extra_cols=["processed_time", "event_time"],
+            ).select("order_id", "status", "event_time", "processed_time", "start_time", "end_time")
+            self.wh.overwrite(dim, "dim_orders")
+
+        def dead_letter() -> None:
+            # events outside dim_dates' calendar (pre-1970 / post-2049 —
+            # an upstream timestamp bug) would vanish from the fact while
+            # still counting in dim_orders; dead-letter them so the
+            # divergence is visible instead of silent
+            rejects = stg.join(
+                F.broadcast(dates.select("datum")), F.to_date(stg.event_time) == F.col("datum"), "left_anti"
             )
-        )
-        # events outside dim_dates' calendar (pre-1970 / post-2049 — an
-        # upstream timestamp bug) would vanish from the fact while still
-        # counting in dim_orders; dead-letter them so the divergence is
-        # visible instead of silent
-        rejects = stg.join(
-            F.broadcast(dates.select("datum")), F.to_date(stg.event_time) == F.col("datum"), "left_anti"
-        )
-        if rejects.limit(1).count() > 0:
-            # append_once, not append: re-running the same feed day is a
-            # no-op for the fact (idempotent_append_rows), so the dead
-            # letter must be replay-guarded too or every re-run doubles
-            # the divergence signal. Same key as the feed's uniqueness
-            # contract.
-            self.wh.append_once(rejects, "_fact_dates_rejects", keys=["id", "event_time"])
-        existing = self.wh.read("fact_orders_created") if self.wh.exists("fact_orders_created") else None
-        rows = idempotent_append_rows(existing, candidates, key="order_id", order_cols=["created_time"])
-        # date-partitioned for pruning: metric queries filter by creation
-        # date, so scans touch only the partitions in range. The partition
-        # column is a DateType derived from created_time — partitioning by
-        # the yyyymmdd STRING key would get type-inferred back as INT on
-        # read, silently breaking the declared schema.
-        rows = rows.withColumn("created_date", F.to_date("created_time"))
-        if existing is not None:
-            self.wh.append(rows, "fact_orders_created", partition_by=["created_date"])
-        else:
-            self.wh.overwrite(rows, "fact_orders_created", partition_by=["created_date"])
+            if rejects.limit(1).count() > 0:
+                # append_once, not append: re-running the same feed day is
+                # a no-op for the fact (idempotent_append_rows), so the
+                # dead letter must be replay-guarded too or every re-run
+                # doubles the divergence signal. Same key as the feed's
+                # uniqueness contract.
+                self.wh.append_once(rejects, "_fact_dates_rejects", keys=["id", "event_time"])
+
+        def fact_orders_created() -> None:
+            # earliest event per order wins (M3)
+            candidates = (
+                stg.join(F.broadcast(dates), F.to_date(stg.event_time) == dates.datum)
+                .select(
+                    stg.id.alias("order_id"),
+                    "product_id",
+                    dates.id.alias("created_date_id"),
+                    F.col("event_time").alias("created_time"),
+                    "amount",
+                    "total_price",
+                    "processed_time",
+                )
+            )
+            existing = self.wh.read("fact_orders_created") if self.wh.exists("fact_orders_created") else None
+            rows = idempotent_append_rows(existing, candidates, key="order_id", order_cols=["created_time"])
+            # date-partitioned for pruning: metric queries filter by
+            # creation date, so scans touch only the partitions in range.
+            # The partition column is a DateType derived from
+            # created_time — partitioning by the yyyymmdd STRING key would
+            # get type-inferred back as INT on read, silently breaking the
+            # declared schema.
+            rows = rows.withColumn("created_date", F.to_date("created_time"))
+            if existing is not None:
+                self.wh.append(rows, "fact_orders_created", partition_by=["created_date"])
+            else:
+                self.wh.overwrite(rows, "fact_orders_created", partition_by=["created_date"])
+
+        # the reference's [dim, fact] fan-out (process_orders.py:115): the
+        # three branches write disjoint tables and read only stg_orders,
+        # dim_dates and their own table
+        self._fan_out(dim_orders, dead_letter, fact_orders_created)
         self._maybe_recycle()
 
     # -- inventory feed (reference README.md:55-61) -------------------------

@@ -19,6 +19,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class Warehouse:
@@ -31,6 +32,9 @@ class Warehouse:
         # overwrites must REFRESH TABLE them (refreshByPath alone does NOT
         # invalidate a catalog table's cached relation)
         self._catalog_names: dict[str, set[str]] = {}
+        # schema Spark inferred per (table, merge_schema), handed back to
+        # later reads so they skip the footer-inference job
+        self._schemas: dict[tuple[str, bool], StructType] = {}
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -74,12 +78,35 @@ class Warehouse:
         """``merge_schema=True`` unions all part-file footers — needed to
         see columns added by ``append_evolve`` (NULL-filled for older
         files); off by default because footer merging reads every file's
-        metadata."""
+        metadata.
+
+        The schema Spark infers on the first read of a table is reused by
+        later reads through this instance, so they launch no inference
+        job. Every write here that can change a table's schema
+        (``overwrite`` and so ``compact``/``ingest_corpus``,
+        ``overwrite_partitions``, ``append_evolve``) forgets it; ``append``
+        and ``append_once`` conform to the existing columns and keep it. A
+        table rewritten outside this ``Warehouse`` instance needs a fresh
+        ``Warehouse`` to be read with its new schema. Threads may share an
+        instance as long as no read of a table overlaps a write of the
+        same table (the ``overwrite`` swap forbids that anyway)."""
         self._recover(table)
+        key = (table, merge_schema)
+        known = self._schemas.get(key)
+        if known is not None:
+            return self.spark.read.schema(known).parquet(self.path(table))
         r = self.spark.read
         if merge_schema:
             r = r.option("mergeSchema", "true")
-        return r.parquet(self.path(table))
+        df = r.parquet(self.path(table))
+        self._schemas[key] = df.schema
+        return df
+
+    def _forget_schema(self, table: str) -> None:
+        """Drop the reused read schemas of ``table`` before a write that
+        may change them."""
+        for merge_schema in (False, True):
+            self._schemas.pop((table, merge_schema), None)
 
     def partition_columns(self, table: str) -> list[str]:
         """Partition columns of an existing table, discovered from the
@@ -136,6 +163,7 @@ class Warehouse:
         ``_recover`` (run by every read/exists) restores ``__bak`` if the
         swap died in the middle."""
         self._recover(table)
+        self._forget_schema(table)
         target, tmp, bak = self.path(table), self.path(table) + "__tmp", self.path(table) + "__bak"
         w = df.write.mode("overwrite")
         if partition_by:
@@ -223,6 +251,7 @@ class Warehouse:
             # merged footers, not a sampled one: a table widened by
             # append_evolve must not lose its evolved columns here
             df = df.select(*self.read(table, merge_schema=True).columns)
+        self._forget_schema(table)
         conf = self.spark.conf
         prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -256,6 +285,7 @@ class Warehouse:
                     df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
             new = [c for c in df.columns if c not in have]
             df = df.select(*have, *new)
+        self._forget_schema(table)
         w = df.write.mode("append")
         if partition_by:
             w = w.partitionBy(*partition_by)
