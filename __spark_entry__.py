@@ -6,9 +6,8 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 The actual registry lives in
-``batch_data_pipeline_exercise_spark/plans/contract.py`` (and
-``plans/contract_ext.py`` for the LLM-pipeline extension operators);
-this module just re-exports it.
+``batch_data_pipeline_exercise_spark/plans/contract*.py``, collected by
+``plans/registry.py``; this module just re-exports it.
 """
 
 from __future__ import annotations
@@ -22,12 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from batch_data_pipeline_exercise_spark.plans import contract
-from batch_data_pipeline_exercise_spark.plans import contract_ext  # noqa: F401 — registers extension queries
-from batch_data_pipeline_exercise_spark.plans import contract2  # noqa: F401 — registers breadth queries
-from batch_data_pipeline_exercise_spark.plans import contract3  # noqa: F401 — registers TPC-H + corpus breadth
-from batch_data_pipeline_exercise_spark.plans import contract4  # noqa: F401 — registers robust-stats + sampling breadth
-from batch_data_pipeline_exercise_spark.plans import contract5  # noqa: F401 — registers sequence/drift/sketch breadth
-from batch_data_pipeline_exercise_spark.plans import contract6  # noqa: F401 — registers round-6 breadth (allocation, sweep-line, rebuild)
+from batch_data_pipeline_exercise_spark.plans import registry  # noqa: F401 — registers every query
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -144,14 +144,6 @@ def minhash_signatures(shingles: DataFrame, k: int = 32) -> DataFrame:
     return sig.select("id", F.array(*[F.col(f"h{i}") for i in range(k)]).alias("sig"))
 
 
-#: default implementation for ``minhash_signatures_docs``: "arrow" (the
-#: vectorized mapInArrow/NumPy kernel) or "sql" (the pure-JVM
-#: higher-order ``aggregate`` fold). Both are bit-identical — pinned by
-#: ``tests/test_minhash_fused.py``; the module default exists so an A/B
-#: can force either form.
-SIG_DOCS_IMPL = "arrow"
-
-
 def _sig_arrow_batches(n: int, k: int):
     """mapInArrow kernel factory for the minhash signature (guide §4.2):
     per batch, the normalized text arrives as ONE contiguous Arrow UTF-8
@@ -163,8 +155,8 @@ def _sig_arrow_batches(n: int, k: int):
     memoryview slices; the Kirsch-Mitzenmacher fold
     gᵢ = (w0 + i·w1) mod 2³², min over shingles, is one vectorized
     NumPy broadcast + ``minimum.reduceat`` per row chunk. Exactly the
-    arithmetic of the JVM fold — md5 bytes are md5 bytes, and the mask
-    IS the mod — so components are bit-identical."""
+    arithmetic of ``minhash_signatures`` — md5 bytes are md5 bytes, and
+    the mask IS the mod — so components are bit-identical."""
 
     def fn(batches):
         import hashlib
@@ -243,7 +235,6 @@ def minhash_signatures_docs(
     text_col: str = "text",
     n: int = 3,
     k: int = 32,
-    impl: str | None = None,
 ) -> DataFrame:
     """Fused ``minhash_signatures(word_shingles(df, distinct=False), k)``
     with NO explode and NO shuffle: the whole signature is one map-only
@@ -258,93 +249,28 @@ def minhash_signatures_docs(
     the raw document table; ``minhash_signatures`` stays as the entry
     point for callers that already hold an exploded shingle relation.
 
-    Two implementations, selected by ``impl`` (default
-    ``SIG_DOCS_IMPL``), bit-identical by construction and by test:
+    The signature runs as one vectorized ``mapInArrow`` kernel (guide
+    §4.2): the JVM computes the normalized text (codegen), Python
+    slices word n-grams as contiguous byte ranges of the Arrow UTF-8
+    buffer, md5s the slices, and folds the k running minima as one
+    NumPy broadcast + ``minimum.reduceat``. Measured at sf0.1 /
+    local[32] (r14, isolated interleaved A/B) against the pure-JVM
+    higher-order ``aggregate`` fold it replaced: k=32 ~2×, k=65 ~3×
+    less executor CPU, same wall or better warm. The test reference
+    is the explode form above (``tests/test_minhash_fused.py``).
 
-    - ``"arrow"``: vectorized ``mapInArrow`` kernel (guide §4.2) — the
-      JVM computes the normalized text (codegen), Python slices word
-      n-grams as contiguous byte ranges of the Arrow UTF-8 buffer,
-      md5s the slices, and folds the k running minima as one NumPy
-      broadcast + ``minimum.reduceat``. Replaces the interpreted
-      higher-order fold (k min-updates per shingle, one fresh k-array
-      allocation per shingle) with native vector code; measured at
-      sf0.1 / local[32] (r14, isolated interleaved A/B): k=32
-      ~2×, k=65 ~3× less executor CPU than the SQL fold, same wall or
-      better warm.
-    - ``"sql"``: the pure-JVM form — one per-row projection (shingle
-      array → md5 word pairs → single ``aggregate`` fold carrying all
-      k running minima). Kept as the A/B baseline and for
-      environments where the Python worker boundary is unavailable.
-
-    Why the fused shape wins over the explode form regardless of impl
-    (measured r14): the explode form pays ~1.2 executor-CPU s
-    materializing 1.5M shingle rows through Generate and ~3.7 s
-    updating 32 min buffers per row in the hash aggregate — the fused
-    kernel does the same arithmetic in one map-only stage, so the
-    scan, shingling, hashing and min-fold need no stage boundary at
-    any scale.
+    Why the fused shape wins over the explode form (measured r14): the
+    explode form pays ~1.2 executor-CPU s materializing 1.5M shingle
+    rows through Generate and ~3.7 s updating 32 min buffers per row in
+    the hash aggregate — the fused kernel does the same arithmetic in
+    one map-only stage, so the scan, shingling, hashing and min-fold
+    need no stage boundary at any scale.
     """
     assert k >= 1
-    impl = impl or SIG_DOCS_IMPL
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
-    if impl == "arrow":
-        norm = text_ops.normalize_ws(text_col)
-        base = df.filter(F.length(norm) > 0).select(
-            F.col(id_col).alias("id"), norm.alias("__norm")
-        )
-        id_type = base.schema["id"].dataType.simpleString()
-        return base.mapInArrow(
-            _sig_arrow_batches(n, k), schema=f"id {id_type}, sig array<bigint>"
-        )
-    L = F.lit(2 ** 32)
-    shingle_arr = text_ops.bind_once(
-        tokenize(text_col),
-        lambda tk: F.filter(
-            F.transform(
-                F.sequence(F.lit(0), F.greatest(F.size(tk) - n, F.lit(0))),
-                lambda i: F.concat_ws(" ", F.slice(tk, i + 1, n)),
-            ),
-            lambda s: F.length(s) > 0,
-        ),
-    )
-    # Row-drop contract (same as the explode form): docs with no
-    # non-empty shingle emit no signature. That set is EXACTLY the docs
-    # whose normalized text is empty — if the normalized string is
-    # non-empty, shingle 0 (concat_ws over the first <= n tokens) is
-    # non-empty too, even in the all-empty-tokens edge (" " normalizes
-    # to ["", ""] whose joined shingle is the separator). Filtering on
-    # the cheap scalar instead of ``size(shingle_arr) > 0`` matters for
-    # the plan: Catalyst pushes this Filter below load()'s spreading
-    # exchange onto the single-row-group scan side, so a predicate that
-    # embedded the shingle transform would run the whole array kernel
-    # serially there (and then AGAIN, spread, in the projection).
-    base = df.filter(F.length(text_ops.normalize_ws(text_col)) > 0).select(
-        F.col(id_col).alias("id"), shingle_arr.alias("__sh")
-    )
-    # one md5 per shingle, materialized as (w0, w1) structs before the
-    # fold so the digest is computed exactly once per shingle
-    words = text_ops.bind_once(
-        F.col("__sh"),
-        lambda arr: F.transform(
-            F.transform(arr, lambda s: F.md5(s)),
-            lambda h: F.struct(
-                F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint").alias("w0"),
-                F.conv(F.substring(h, 9, 8), 16, 10).cast("bigint").alias("w1"),
-            ),
-        ),
-    )
-    # acc starts at 2^32 — strictly above every (w0 + i·w1) mod 2^32, so
-    # the first shingle always replaces it (base is non-empty by filter)
-    init = F.array(*[F.lit(2 ** 32).cast("bigint") for _ in range(k)])
-    sig = F.aggregate(
-        "__ws",
-        init,
-        lambda acc, p: F.transform(
-            acc, lambda m, i: F.least(m, (p["w0"] + i.cast("bigint") * p["w1"]) % L)
-        ),
-    )
-    return base.select("id", words.alias("__ws")).select("id", sig.alias("sig"))
+    norm = text_ops.normalize_ws(text_col)
+    base = df.filter(F.length(norm) > 0).select(F.col(id_col).alias("id"), norm.alias("__norm"))
+    id_type = base.schema["id"].dataType.simpleString()
+    return base.mapInArrow(_sig_arrow_batches(n, k), schema=f"id {id_type}, sig array<bigint>")
 
 
 def lsh_band_keys(signatures: DataFrame, bands: int, rows: int) -> DataFrame:

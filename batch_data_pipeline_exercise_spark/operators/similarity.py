@@ -1,12 +1,13 @@
 """Similarity search over embedding columns (array<float>).
 
 Baseline: brute-force cosine top-k — exact, one broadcast join, linear
-scan; the JVM evaluates the dot product via ``zip_with``/``aggregate``
-(no Python in the loop). Scale path: LSH random-hyperplane bucketing —
-sign-bit sketches restrict candidate generation to equal buckets
-(tunable recall), turning the all-pairs O(n·q) scan into bucket-local
-work. Both are deterministic: hyperplanes come from a seeded generator
-and are baked into the plan as literals.
+scan. Scale path: LSH random-hyperplane bucketing — sign-bit sketches
+restrict candidate generation to equal buckets (tunable recall), turning
+the all-pairs O(n·q) scan into bucket-local work. Pair scoring and every
+sign-sketch key run as vectorized mapInArrow kernels
+(``_cosine_pairs_arrow_batches``, ``_sketch_arrow_batches``) whose
+sequential folds match the JVM ``aggregate`` forms bit for bit. Both
+paths are deterministic: hyperplanes come from a seeded generator.
 """
 
 from __future__ import annotations
@@ -29,10 +30,6 @@ def _dot(a: Column, b: Column) -> Column:
 
 def _norm(v: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 # NOTE on formulation (measured at sf0.1, 2000×64-dim vectors): the
@@ -88,19 +85,6 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def with_lsh_bucket(
-    df: DataFrame, planes: list[list[float]], vec_col: str = "embedding", out_col: str = "bucket"
-) -> DataFrame:
-    """Sign-bit sketch: bucket = Σ (dot(v, plane_i) >= 0) << i. Pure
-    column expressions — the planes are plan literals, no UDF."""
-    v = F.col(vec_col).cast("array<double>")
-    bucket = F.lit(0).cast("bigint")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bucket = bucket + F.when(_dot(v, plane) >= 0, F.lit(2 ** i)).otherwise(F.lit(0))
-    return df.withColumn(out_col, bucket)
-
-
 def cosine_topk_lsh(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -122,38 +106,26 @@ def cosine_topk_lsh(
     one extra Spark action to probe the vector width."""
     if dim is None:
         dim = len(embeddings.select(vec_col).first()[0])
-    planes = hyperplanes(dim, n_planes, seed)
-    e = with_lsh_bucket(
-        embeddings.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__v"),
-            _norm(F.col(vec_col).cast("array<double>")).alias("__nv"),
-        ),
-        planes,
-        "__v",
-        "eb",
-    )
-    q = with_lsh_bucket(
-        queries.select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(query_vec_col).alias("__q"),
-            _norm(F.col(query_vec_col).cast("array<double>")).alias("__nq"),
-        ),
-        planes,
-        "__q",
-        "qb",
-    )
-    scored = (
-        F.broadcast(q)
-        .join(e, (F.col("qb") == F.col("eb")) & (F.col("query_id") != F.col("neighbor_id")))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                _dot(F.col("__q").cast("array<double>"), F.col("__v").cast("array<double>"))
-                / (F.col("__nq") * F.col("__nv"))
-            ).alias("cosine"),
+
+    def bucketed(df, id_in, vec_in, id_out, v, nrm, bkt):
+        # the sign-sketch kernel as ONE band of n_planes rows: bucket
+        # = Σ (dot(v, plane_i) >= 0) << i, and __n is the _norm fold
+        inp = df.select(
+            F.col(id_in).alias(id_out),
+            F.col(vec_in).alias(v),
+            F.col(vec_in).cast("array<double>").alias("__vd"),
         )
+        return _sign_sketch(inp, dim, 1, n_planes, seed).select(
+            id_out, v, F.col("__n").alias(nrm), F.col("__bands")[0]["key"].alias(bkt)
+        )
+
+    e = bucketed(embeddings, id_col, vec_col, "neighbor_id", "__v", "__nv", "eb")
+    q = bucketed(queries, query_id_col, query_vec_col, "query_id", "__q", "__nq", "qb")
+    joined = F.broadcast(q).join(
+        e, (F.col("qb") == F.col("eb")) & (F.col("query_id") != F.col("neighbor_id"))
+    )
+    scored = _cosine_scored_pairs(
+        joined, "query_id", "neighbor_id", "__q", "__v", "__nq", "__nv"
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -720,34 +692,6 @@ def embedding_near_dup_pairs(
 
 
 
-def _bands_sql(dim: int, bands: int, rows_per_band: int, seed: int) -> str:
-    """The multi-band sign-sketch projection as ONE SQL expression
-    string over a pre-cast ``__vd`` array<double> column — shared by
-    ``banded_sign_sketch`` (the materialized index) and
-    ``sign_lsh_occupancy_stats`` (the pre-flight scout, which must NOT
-    pay the index's vector-pinning checkpoint). See
-    ``banded_sign_sketch`` for why this is a parsed string and not a
-    Column tree."""
-    planes = hyperplanes(dim, bands * rows_per_band, seed)
-
-    def plane_sql(p: list[float]) -> str:
-        return "array(" + ", ".join(f"{float(x)!r}D" for x in p) + ")"
-
-    def band_key_sql(bi: int) -> str:
-        terms = []
-        for r in range(rows_per_band):
-            dot = (
-                f"aggregate(zip_with(__vd, {plane_sql(planes[bi * rows_per_band + r])}, "
-                "(x, y) -> x * y), 0D, (acc, x) -> acc + x)"
-            )
-            terms.append(f"(CASE WHEN {dot} >= 0 THEN CAST({2 ** r} AS BIGINT) ELSE CAST(0 AS BIGINT) END)")
-        return " + ".join(terms)
-
-    return "array(" + ", ".join(
-        f"named_struct('band', {bi}, 'key', {band_key_sql(bi)})" for bi in range(bands)
-    ) + ")"
-
-
 class LshCandidateBudgetError(ValueError):
     """The pre-flight scout priced the LSH candidate join OVER the
     caller's budget: carries the exact per-band collision count and a
@@ -1070,12 +1014,10 @@ def sign_lsh_occupancy_stats(
     sc = embeddings.sparkSession.sparkContext
     if _plan_partition_count(embeddings) < sc.defaultParallelism:
         embeddings = embeddings.repartition(sc.defaultParallelism)
-    bk = (
-        embeddings.withColumn("__vd", F.col(vec_col).cast("array<double>"))
-        .select(F.col(id_col).alias("id"), F.expr(_bands_sql(dim, bands, rows_per_band, seed)).alias("__bands"))
-        .select("id", F.explode("__bands").alias("bk"))
-        .select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    inp = embeddings.select(
+        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("__vd")
     )
+    bk = _explode_band_keys(_sign_sketch(inp, dim, bands, rows_per_band, seed))
     return _occupancy_summary(bk, bands, n_col="n_vectors")
 
 
@@ -1128,41 +1070,33 @@ def _incremental_occupancy_summary(
     )
 
 
-#: default implementation for ``banded_sign_sketch``'s projection:
-#: "arrow" (vectorized mapInArrow/NumPy kernel) or "sql" (the one-string
-#: JVM expression). Bit-identical — the dot folds run in the same
-#: element order with the same IEEE-754 double rounding per step (a
-#: strict left fold is ``np.add``-accumulation order; NumPy only
-#: reassociates in reductions, never in elementwise accumulation) and
-#: the planes are the same Python floats either way (the SQL path
-#: round-trips them exactly through repr). Pinned by
-#: ``tests/test_similarity_multimodal.py``.
-SKETCH_IMPL = "arrow"
-
-
 def _sketch_arrow_batches(dim: int, bands: int, rows_per_band: int, seed: int):
     """mapInArrow kernel factory for the multi-band sign sketch (guide
-    §4.2): per batch the pre-cast ``array<double>`` vectors arrive as
-    one contiguous Arrow buffer; the bands × rows_per_band plane dots
-    run as ``dim`` vectorized multiply-accumulate steps over a
-    (rows, planes) accumulator — PER-ELEMENT SEQUENTIAL, so every
-    intermediate rounding matches the JVM ``aggregate`` fold exactly —
-    then sign bits pack into per-band integer keys. Replaces the
-    interpreted per-plane higher-order folds (bands·rows·dim lambda
-    evaluations per row) AND their one-time codegen/JIT warmup for the
-    multi-thousand-node expression tree.
+    §4.2): input batches carry passthrough columns plus the pre-cast
+    ``array<double>`` vector as the LAST column; output is the
+    passthrough columns plus ``__n`` (the norm) and ``__bands``. The
+    vectors arrive as one contiguous Arrow buffer; the bands ×
+    rows_per_band plane dots run as ``dim`` vectorized multiply-
+    accumulate steps over a (rows, planes) accumulator — PER-ELEMENT
+    SEQUENTIAL, so every intermediate rounding matches a JVM
+    ``aggregate`` left fold exactly (the SQL reference form in
+    ``tests/kernel_reference.py``, pinned by
+    ``tests/test_sketch_kernel.py``): NumPy only reassociates in
+    reductions, never in elementwise accumulation. Sign bits then pack
+    into per-band integer keys. The kernel replaced the interpreted
+    per-plane higher-order folds (bands·rows·dim lambda evaluations per
+    row) AND their one-time codegen/JIT warmup for the multi-thousand-
+    node expression tree.
 
-    Null vectors replicate the SQL semantics: ``__n`` NULL, every band
-    key 0 (NULL dot fails ``>= 0``). Empty vectors key to 0 too — the
-    SQL ``zip_with`` pads them against the plane with nulls, nulling
-    the fold — with ``__n`` 0.0 (the norm's ``transform`` yields an
-    empty array, folded to the 0.0 base). Ragged widths (≠ dim) raise —
-    the SQL path would silently emit null-padded-zip garbage keys for
-    those, and no engine caller can produce them (dim is probed or
+    Null vectors key to 0 in every band with ``__n`` NULL (a NULL dot
+    fails ``>= 0`` in the SQL form). Empty vectors key to 0 too — the
+    SQL ``zip_with`` pads them against the plane with nulls, nulling the
+    fold — with ``__n`` 0.0 (the norm's ``transform`` yields an empty
+    array, folded to the 0.0 base). Ragged widths (≠ dim) raise — the
+    SQL form would silently emit null-padded-zip garbage keys for those,
+    and no engine caller can produce them (dim is probed or
     caller-pinned)."""
-    from batch_data_pipeline_exercise_spark.operators.similarity import hyperplanes as _hp
-
-    planes = _hp(dim, bands * rows_per_band, seed)
+    planes = hyperplanes(dim, bands * rows_per_band, seed)
 
     def fn(batches):
         import numpy as np
@@ -1172,8 +1106,10 @@ def _sketch_arrow_batches(dim: int, bands: int, rows_per_band: int, seed: int):
         pw2 = (1 << np.arange(rows_per_band, dtype=np.int64))
         band_ids = np.arange(bands, dtype=np.int32)
         for batch in batches:
-            ids, vcol, dcol = batch.column(0), batch.column(1), batch.column(2)
-            n = len(ids)
+            keep = [batch.column(i) for i in range(batch.num_columns - 1)]
+            names = batch.schema.names[:-1] + ["__n", "__bands"]
+            dcol = batch.column(batch.num_columns - 1)
+            n = len(dcol)
             if n == 0:
                 empty_bands = pa.ListArray.from_arrays(
                     pa.array(np.zeros(1, dtype=np.int32)),
@@ -1183,8 +1119,7 @@ def _sketch_arrow_batches(dim: int, bands: int, rows_per_band: int, seed: int):
                     ),
                 )
                 yield pa.RecordBatch.from_arrays(
-                    [ids, vcol, pa.array([], type=pa.float64()), empty_bands.slice(0, 0)],
-                    ["id", "__v", "__n", "__bands"],
+                    keep + [pa.array([], type=pa.float64()), empty_bands.slice(0, 0)], names
                 )
                 continue
             offs = np.asarray(dcol.offsets, dtype=np.int64)
@@ -1244,11 +1179,23 @@ def _sketch_arrow_batches(dim: int, bands: int, rows_per_band: int, seed: int):
                 ),
             )
             yield pa.RecordBatch.from_arrays(
-                [ids, vcol, pa.array(norms, mask=norm_null), bands_arr],
-                ["id", "__v", "__n", "__bands"],
+                keep + [pa.array(norms, mask=norm_null), bands_arr], names
             )
 
     return fn
+
+
+def _sign_sketch(inp: DataFrame, dim: int, bands: int, rows_per_band: int, seed: int) -> DataFrame:
+    """Run the sketch kernel over ``inp``, whose LAST column is the
+    pre-cast ``array<double>`` vector: the other columns pass through,
+    ``__n`` and ``__bands`` are appended. The one producer of sign-sketch
+    band keys — the materialized index, the pre-flight scout and the
+    LSH top-k buckets alike."""
+    keep = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in inp.schema.fields[:-1])
+    return inp.mapInArrow(
+        _sketch_arrow_batches(dim, bands, rows_per_band, seed),
+        schema=f"{keep}, __n double, __bands array<struct<band:int,key:bigint>>",
+    )
 
 
 def banded_sign_sketch(
@@ -1259,7 +1206,6 @@ def banded_sign_sketch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
-    impl: str | None = None,
 ) -> DataFrame:
     """Materialized multi-band sign sketch: (id, __v, __n, __bands) with
     __bands = array<struct<band, key>> — the persistable LSH index table
@@ -1267,22 +1213,12 @@ def banded_sign_sketch(
     band-key index in ``operators/dedup.py``).
 
     ONE pass, ONE pin: vectors, norms, and every band key come out of a
-    single projection, materialized once; the band-key self-join's two
-    sides and both verify sides re-read the checkpoint instead of
-    re-folding the bands × rows × dim multiply-adds (same pathology
-    class as lsh_candidate_pairs). The sketch is emitted as ONE SQL
-    expression string parsed JVM-side: building it from F.lit/F.when
-    objects costs thousands of py4j round trips (measured ~5 s of pure
-    driver-side plan construction for 64 planes × 64 dims — more than
-    the entire cluster-side execution). repr() double literals
-    round-trip exactly through the SQL parser, so plan semantics are
-    bit-identical to the Column form."""
+    single kernel pass (``_sketch_arrow_batches``), materialized once;
+    the band-key self-join's two sides and both verify sides re-read the
+    checkpoint instead of re-folding the bands × rows × dim
+    multiply-adds (same pathology class as lsh_candidate_pairs)."""
     if dim is None:
         dim = len(embeddings.select(vec_col).first()[0])
-    impl = impl or SKETCH_IMPL
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
-    v = F.col(vec_col).cast("array<double>")
     # spread BEFORE the sketch projection when the input arrives in fewer
     # partitions than cores (single-row-group files): the sketch is
     # compute-dense per row and would otherwise fold on one core. Skipped
@@ -1294,30 +1230,12 @@ def banded_sign_sketch(
     sc = embeddings.sparkSession.sparkContext
     if _plan_partition_count(embeddings) < sc.defaultParallelism:
         embeddings = embeddings.repartition(sc.defaultParallelism)
-    if impl == "arrow":
-        idt = embeddings.schema[id_col].dataType.simpleString()
-        vect = embeddings.schema[vec_col].dataType.simpleString()
-        inp = embeddings.select(
-            F.col(id_col).alias("id"), F.col(vec_col).alias("__v"), v.alias("__vd")
-        )
-        return inp.mapInArrow(
-            _sketch_arrow_batches(dim, bands, rows_per_band, seed),
-            schema=(
-                f"id {idt}, __v {vect}, __n double, "
-                "__bands array<struct<band:int,key:bigint>>"
-            ),
-        ).localCheckpoint()
-    bands_sql = _bands_sql(dim, bands, rows_per_band, seed)
-    return (
-        embeddings.withColumn("__vd", v)
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("__v"),
-            _norm(v).alias("__n"),
-            F.expr(bands_sql).alias("__bands"),
-        )
-        .localCheckpoint()
+    inp = embeddings.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("__v"),
+        F.col(vec_col).cast("array<double>").alias("__vd"),
     )
+    return _sign_sketch(inp, dim, bands, rows_per_band, seed).localCheckpoint()
 
 
 def _explode_band_keys(vecs: DataFrame) -> DataFrame:
@@ -1493,25 +1411,20 @@ def _bucketed_self_pairs(
 VERIFY_BROADCAST_MAX_BYTES = 256 * 2**20
 
 
-#: default implementation for the pairwise-cosine scoring projection
-#: (``_verify_cosine_pairs``, ``cosine_topk_bruteforce``): "arrow" (the
-#: vectorized mapInArrow/NumPy kernel) or "sql" (the interpreted
-#: ``aggregate``/``zip_with`` fold). Bit-identical — the kernel
-#: accumulates the dot ELEMENTWISE-SEQUENTIALLY per (row, dim) step
-#: (the entry-12 pattern: one rounded multiply + one rounded add per
-#: step, exactly the JVM left fold; NumPy only reassociates in
-#: reductions like reduceat/sum, which are deliberately NOT used) and
-#: the division cosine = dot / (na * nb) is the same two double ops.
-#: Pinned by ``tests/test_cosine_kernel.py``.
-COSINE_PAIRS_IMPL = "arrow"
-
-
 def _cosine_pairs_arrow_batches(ansi: bool):
     """mapInArrow kernel factory for pairwise cosine (guide §4.2):
     input batches are (id1, id2, __va, __vb, __na, __nb) with the
     vectors pre-cast to ``array<double>`` JVM-side (the float→double
     widening stays where the SQL fold does it); output is
     (id1, id2, cosine).
+
+    Bit-identical to the JVM ``_dot(a, b) / (na * nb)`` fold (the test
+    reference in ``tests/kernel_reference.py``, pinned by
+    ``tests/test_cosine_kernel.py``): the dot accumulates ELEMENTWISE-
+    SEQUENTIALLY per (row, dim) step — one rounded multiply + one
+    rounded add per step, exactly the JVM left fold; NumPy only
+    reassociates in reductions like reduceat/sum, which are deliberately
+    NOT used — and the division is the same two double ops.
 
     NULL semantics replicate the SQL fold: a NULL vector or NULL norm
     on either side → NULL cosine (``zip_with`` against NULL nulls the
@@ -1621,35 +1534,21 @@ def _cosine_scored_pairs(
     vb: str,
     na: str,
     nb: str,
-    impl: str | None = None,
 ) -> DataFrame:
     """(id1, id2, cosine) over a pre-joined pair relation carrying both
     vectors and both pre-computed norms — the one scoring projection
-    behind the verify stage and the brute-force top-k. ``impl`` selects
-    the arrow kernel (default ``COSINE_PAIRS_IMPL``) or the JVM fold;
-    both bit-identical (see ``COSINE_PAIRS_IMPL``).
+    behind the verify stage and the brute-force and LSH top-k, run by
+    the arrow kernel ``_cosine_pairs_arrow_batches``.
 
     ``spark.sql.ansi.enabled`` is SNAPSHOTTED here, at plan-build time,
     into the kernel closure (a worker cannot read session conf at
-    execution): the arrow path's zero-norm behavior — raise under ANSI,
-    NULL cosine otherwise — therefore follows the conf value in force
-    when the DataFrame was BUILT. A session that flips the conf between
-    building and executing the plan would see the stale dialect; no
-    engine caller does that (queries build and execute in one call),
-    and the both-flavors smoke in tests/test_cosine_kernel.py pins each
-    dialect end-to-end (ADVICE r14)."""
-    impl = impl or COSINE_PAIRS_IMPL
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
-    if impl == "sql":
-        return joined.select(
-            id1,
-            id2,
-            (
-                _dot(F.col(va).cast("array<double>"), F.col(vb).cast("array<double>"))
-                / (F.col(na) * F.col(nb))
-            ).alias("cosine"),
-        )
+    execution): the zero-norm behavior — raise under ANSI, NULL cosine
+    otherwise — therefore follows the conf value in force when the
+    DataFrame was BUILT. A session that flips the conf between building
+    and executing the plan would see the stale dialect; no engine caller
+    does that (queries build and execute in one call), and the
+    both-flavors smoke in tests/test_cosine_kernel.py pins each dialect
+    end-to-end (ADVICE r14)."""
     t1 = joined.schema[id1].dataType.simpleString()
     t2 = joined.schema[id2].dataType.simpleString()
     inp = joined.select(
@@ -1716,8 +1615,8 @@ def _verify_cosine_pairs(
     if min_band_dedup:
         # first (minimum) colliding band of the pair, from the two band
         # arrays: keys are equal at position i iff the pair collides in
-        # band i (arrays are band-ordered by construction in both sketch
-        # impls; the band fields are compared anyway for safety). The
+        # band i (arrays are band-ordered by construction in the sketch
+        # kernel; the band fields are compared anyway for safety). The
         # emitted band row survives only when it IS that minimum, which
         # keeps exactly one row per colliding pair — before the cosine
         # kernel, so the scoring work matches the distinct path's.

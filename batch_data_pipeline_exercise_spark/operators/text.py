@@ -1,10 +1,11 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
 Beyond-reference surface (BASELINE.json north star): language ID, quality
-scoring, token counting, document fingerprinting. All of it stays JVM-side
-(built-in ``pyspark.sql.functions`` — no Python UDFs in the hot path), so
-every operator here is a narrow projection that scales to 100 TB as a
-single pass over the text column.
+scoring, token counting, document fingerprinting. Every operator here is
+a narrow map-only pass that scales to 100 TB as a single pass over the
+text column: built-in ``pyspark.sql.functions``, except the scorer counts
+and the exploded n-grams, which run as vectorized mapInArrow kernels (no
+per-row Python UDFs).
 
 Cross-engine note: fingerprints use md5 (identical hex in Spark and
 DuckDB), not xxhash64 (Spark-private seed), so oracle queries can
@@ -37,77 +38,14 @@ ENGLISH_STOPWORDS = [
 ]
 
 
-def substring_count(text: Column, needle: str) -> Column:
-    """Occurrences of a literal substring: (len(s) - len(replace(s, m, ''))) / len(m).
-    Pure string ops → identical in any engine."""
-    return (F.length(text) - F.length(F.replace(text, F.lit(needle), F.lit("")))) / F.lit(len(needle))
-
-
-def _substring_count_sql(text_sql: str, needle: str) -> str:
-    """SQL-string twin of ``substring_count`` — same ops, same int/int
-    division (→ double in Spark SQL exactly as in the Column form).
-
-    The marker/stopword scorers sum dozens of these; building them as
-    Column objects costs one py4j round trip PER operation (~2 ms each,
-    seconds per query of pure driver-side construction), while one
-    F.expr string is a single call parsed JVM-side. Quotes in the needle
-    are doubled so a future marker like French "l'" cannot break or
-    shift the SQL (same escape rule in Spark SQL and DuckDB)."""
-    lit = needle.replace("'", "''")
-    return f"(length({text_sql}) - length(replace({text_sql}, '{lit}', ''))) / {len(needle)}"
-
-
-def _sum_counts_sql(text_sql: str, needles: list[str]) -> str:
-    """Left fold with a double 0.0 start, mirroring
-    ``sum((substring_count(...) for ...), F.lit(0.0))`` exactly."""
-    acc = "CAST(0.0 AS DOUBLE)"
-    for n in needles:
-        acc = f"({acc} + {_substring_count_sql(text_sql, n)})"
-    return acc
-
-
-def _regexp_count_fold_sql(text_sql: str, needles: list[str]) -> str:
-    """Spark-side twin of ``_sum_counts_sql``: one ``regexp_count`` per
-    needle instead of a length/replace/length triple.
-
-    Value-identical by construction: ``regexp_count`` over a literal
-    pattern counts non-overlapping occurrences left-to-right — exactly
-    what the replace-based length diff counts (``" the the "`` is 1 hit
-    either way, the shared space is consumed). Each fold term is an
-    exact small-integer double, so summing ints and casting once equals
-    the summed-doubles fold bit-for-bit.
-
-    Why it exists: the 20-term stopword fold plus the 4×5 language
-    marker folds were the bulk of the fused corpus-prep stage's
-    generated method — past janino's 64 KB whole-stage-codegen limit,
-    dropping the entire stage (the pipeline's biggest scan) to
-    interpreted execution. The regexp_count form generates ~3× less
-    code per term, keeping the fused stage compiled. DuckDB oracles
-    keep the replace-fold form — DuckDB has no codegen ceiling to
-    dodge, and keeping both forms is the cross-engine check that the
-    semantics stayed put.
-
-    Needles must be letters/spaces only (asserted) — they are injected
-    into a regex inside a SQL literal."""
-    for n in needles:
-        assert all(c.isalpha() or c == " " for c in n), f"unsafe needle {n!r}"
-    terms = " + ".join(f"regexp_count({text_sql}, '{n}')" for n in needles)
-    return f"CAST({terms} AS DOUBLE)"
-
-
 STAT_COLS = ["n_chars", "n_words", "n_tokens", "n_punct", "punct_ratio", "stopword_ratio", "avg_word_len"]
 
-#: default implementation for the scorer count columns behind
-#: ``with_text_stats`` / ``with_lang_id`` / ``with_quality_lang``:
-#: "arrow" (one vectorized mapInArrow/NumPy counting pass) or "sql"
-#: (the per-needle regexp_count folds). The kernel computes ONLY
-#: integer counts (codepoints, whitespace/punct bytes, token runs,
-#: stopword/marker substring hits, CJK codepoints) — every ratio,
-#: quality weight, and the language argmax stays in the JVM with the
-#: identical expressions, so value equality reduces to integer-count
-#: equality (pinned by ``tests/test_scorer_kernel.py``).
-TEXT_COUNTS_IMPL = "arrow"
-
+# The scorer kernel computes ONLY integer counts (codepoints,
+# whitespace/punct bytes, token runs, stopword/marker substring hits, CJK
+# codepoints); every ratio, quality weight and the language argmax stays
+# in the JVM, so value equality with the regexp_count reference forms in
+# tests/kernel_reference.py reduces to integer-count equality (pinned by
+# tests/test_scorer_kernel.py).
 _STATS_COUNT_COLS = ["__c_chars", "__c_ws", "__c_wruns", "__c_tok", "__c_punct", "__c_stop"]
 _LANG_COUNT_COLS = ["__c_en", "__c_fr", "__c_es", "__c_de", "__c_cjk"]
 
@@ -119,8 +57,8 @@ def _scorer_counts_arrow_batches(t_idx: int, want_stats: bool, want_lang: bool):
     JVM so unicode case rules cannot drift) as the LAST column; output
     is the input minus ``__pad`` plus the requested count columns.
 
-    Count definitions (all exact integers, replicating the regex twins
-    byte-for-byte over the UTF-8 buffer):
+    Count definitions (all exact integers, replicating the regex
+    reference forms byte-for-byte over the UTF-8 buffer):
 
     - ``__c_chars``  codepoints of t (= length(t); bytes minus UTF-8
       continuation bytes),
@@ -284,7 +222,7 @@ def _scorer_counts(df: DataFrame, text_col: str, want_stats: bool, want_lang: bo
     )
     # backtick-quote passthrough names: a caller column needing quoting
     # (space, dash, dot, reserved word) must round-trip the DDL schema
-    # string exactly as the SQL impl would handle it (ADVICE r14)
+    # string exactly (ADVICE r14)
     fields = ", ".join(
         "`{}` {}".format(f.name.replace("`", "``"), f.dataType.simpleString())
         for f in df.schema.fields
@@ -327,44 +265,19 @@ def _stats_from_counts(df: DataFrame, text_col: str) -> DataFrame:
     ).drop(*_STATS_COUNT_COLS)
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text", impl: str | None = None) -> DataFrame:
+def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / word / token / punctuation statistics, one projection.
     Pre-existing columns with the same names are replaced (the documents
-    testdata table ships its own ``n_chars``). ``impl`` selects the
-    arrow counting kernel (default ``TEXT_COUNTS_IMPL``) or the
-    regexp_count folds; identical values by construction and by test
-    (``tests/test_scorer_kernel.py``)."""
-    impl = impl or TEXT_COUNTS_IMPL
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
+    testdata table ships its own ``n_chars``). The counts come from the
+    arrow counting kernel; the regexp_count reference form lives in
+    ``tests/kernel_reference.py`` (``tests/test_scorer_kernel.py``)."""
     df = df.drop(*[c for c in STAT_COLS if c in df.columns])
-    if impl == "arrow":
-        return _stats_from_counts(_scorer_counts(df, text_col, True, False), text_col)
-    t = F.col(text_col)
-    n_words = F.size(F.split(F.trim(t), "\\s+"))
-    n_tokens = F.regexp_count(t, F.lit(TOKEN_PATTERN))
-    n_punct = F.regexp_count(t, F.lit("[.,;:!?'\"()\\[\\]{}-]"))
-    # materialize the padded text ONCE: inlining it per fold term both
-    # re-lowercases the text 2×|needles| times per row and blows the
-    # whole-stage-codegen method past janino's 64 KB limit (interpreted
-    # fallback for the entire stage). Same value, same fold, same result.
-    df = df.withColumn("__pad", F.concat(F.lit(" "), F.lower(t), F.lit(" ")))
-    stop_hits = F.expr(_regexp_count_fold_sql("__pad", [f" {w} " for w in ENGLISH_STOPWORDS]))
-    return df.select(
-        "*",
-        F.length(t).alias("n_chars"),
-        n_words.alias("n_words"),
-        n_tokens.cast("bigint").alias("n_tokens"),
-        n_punct.cast("bigint").alias("n_punct"),
-        (n_punct / F.greatest(F.length(t), F.lit(1))).alias("punct_ratio"),
-        (stop_hits / F.greatest(n_words, F.lit(1))).alias("stopword_ratio"),
-        (F.length(F.regexp_replace(t, "\\s", "")) / F.greatest(n_words, F.lit(1))).alias("avg_word_len"),
-    ).drop("__pad")
+    return _stats_from_counts(_scorer_counts(df, text_col, True, False), text_col)
 
 
 def _quality_from_stats(stats: DataFrame) -> DataFrame:
     """The quality_score arithmetic over the STAT_COLS — pure fixed-order
-    double expressions, shared verbatim by both impls."""
+    double expressions, shared verbatim with the test reference."""
     len_score = F.least(F.col("n_chars") / F.lit(200.0), F.lit(1.0))
     stop_score = F.least(F.col("stopword_ratio") * F.lit(4.0), F.lit(1.0))
     punct_score = F.when(F.col("punct_ratio") <= 0.1, F.lit(1.0)).otherwise(
@@ -379,18 +292,18 @@ def _quality_from_stats(stats: DataFrame) -> DataFrame:
     )
 
 
-def with_quality_score(df: DataFrame, text_col: str = "text", impl: str | None = None) -> DataFrame:
+def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Composite [0,1] quality heuristic: length band + stopword presence +
     sane punctuation + sane word length. Weights are arbitrary but fixed;
     the point is a deterministic, filterable scalar."""
-    stats = with_text_stats(df, text_col, impl=impl) if "stopword_ratio" not in df.columns else df
+    stats = with_text_stats(df, text_col) if "stopword_ratio" not in df.columns else df
     return _quality_from_stats(stats)
 
 
 def _lang_pred_from_scores(cjk: Column, t: Column) -> Column:
     """The deterministic argmax over __score_* columns plus the CJK
-    short-circuit — shared verbatim by both impls (the when-chain is
-    pure arithmetic over the score columns)."""
+    short-circuit — shared verbatim with the test reference (the
+    when-chain is pure arithmetic over the score columns)."""
     best = F.lit("und")
     best_score = F.lit(0.0)
     # fixed iteration order; strict > keeps the earlier language on ties
@@ -404,7 +317,7 @@ def _lang_pred_from_scores(cjk: Column, t: Column) -> Column:
 
 def _lang_from_counts(df: DataFrame, text_col: str) -> DataFrame:
     """lang_pred from the kernel's count columns — the scores are the
-    identical CAST(int-sum AS DOUBLE) the fold form produces."""
+    identical CAST(int-sum AS DOUBLE) the regexp_count fold produces."""
     t = F.col(text_col)
     with_scores = df.select(
         "*",
@@ -416,50 +329,20 @@ def _lang_from_counts(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def with_lang_id(df: DataFrame, text_col: str = "text", impl: str | None = None) -> DataFrame:
+def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """n-gram-heuristic language ID over the stopword marker table; CJK
     character density short-circuits to 'zh'. Ties resolve by fixed
     language order (en, fr, es, de) — deterministic by construction.
-    ``impl`` selects the arrow counting kernel (default
-    ``TEXT_COUNTS_IMPL``) or the regexp_count folds; identical values
-    by construction and by test."""
-    impl = impl or TEXT_COUNTS_IMPL
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
-    if impl == "arrow":
-        return _lang_from_counts(_scorer_counts(df, text_col, False, True), text_col)
-    t = F.col(text_col)
-    # Materialize the pad and the per-language scores as real columns
-    # before the argmax: the when-chain below references each score and
-    # the running best REPEATEDLY, so inlined score trees would be
-    # duplicated exponentially in the final expression (the generated
-    # method blew janino's 64 KB whole-stage-codegen limit and the whole
-    # stage fell back to interpreted execution). Column references keep
-    # the argmax tiny; values are identical.
-    with_scores = df.withColumn("__pad", F.concat(F.lit(" "), F.lower(t), F.lit(" "))).select(
-        "*",
-        *[
-            F.expr(_regexp_count_fold_sql("__pad", markers)).alias(f"__score_{lang}")
-            for lang, markers in LANG_MARKERS.items()
-        ],
-    )
-    cjk = F.regexp_count(t, F.lit(CJK_RANGE))
-    lang_col = _lang_pred_from_scores(cjk, t)
-    return with_scores.withColumn("lang_pred", lang_col).drop(
-        "__pad", *[f"__score_{lang}" for lang in LANG_MARKERS]
-    )
+    The marker counts come from the arrow counting kernel; the
+    regexp_count reference form lives in ``tests/kernel_reference.py``."""
+    return _lang_from_counts(_scorer_counts(df, text_col, False, True), text_col)
 
 
-def with_quality_lang(df: DataFrame, text_col: str = "text", impl: str | None = None) -> DataFrame:
+def with_quality_lang(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Fused ``with_lang_id(with_quality_score(df))`` — the corpus-prep
-    scorer. On the arrow path the stats AND lang counts come out of ONE
-    kernel pass (one text transfer instead of two); the SQL path is the
-    literal composition. Identical output either way."""
-    impl = impl or TEXT_COUNTS_IMPL
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
-    if impl == "sql":
-        return with_lang_id(with_quality_score(df, text_col, impl="sql"), text_col, impl="sql")
+    scorer. The stats AND lang counts come out of ONE kernel pass (one
+    text transfer instead of two); the output equals the literal
+    composition."""
     d = df.drop(*[c for c in STAT_COLS if c in df.columns])
     counted = _scorer_counts(d, text_col, True, True)
     stats = _stats_from_counts(counted, text_col)
@@ -540,15 +423,6 @@ def word_ngrams(text_col: str = "text", n: int = 5):
     return bind_once(tokenize(text_col), build)
 
 
-#: default implementation for ``word_ngrams_exploded``: "arrow" (the
-#: vectorized mapInArrow/NumPy kernel) or "sql" (the pure-JVM
-#: explode(array_distinct(word_ngrams(...))) projection). Both produce
-#: the identical (id, gram) row set — pinned by
-#: ``tests/test_gram_kernel.py``; the module default exists so an A/B
-#: can force either form.
-GRAMS_IMPL = "arrow"
-
-
 def _grams_arrow_batches(n: int):
     """mapInArrow kernel factory for the exploded distinct word-n-gram
     relation (guide §4.2, same buffer-slicing trick as the minhash
@@ -567,13 +441,14 @@ def _grams_arrow_batches(n: int):
       ``dictionary_encode`` (exact byte equality, C++) + one
       ``np.unique`` over packed (row, code) int64 keys.
 
-    Row-set contract is IDENTICAL to the SQL form: one row per distinct
-    gram per document, documents with fewer than n tokens emit nothing
-    (``word_ngrams`` drops windows past the end), NULL text emits
-    nothing (pre-filtered). Row ORDER within a partition differs (the
-    SQL form keeps first-occurrence order, this form (row, dictionary
-    code) order) — every consumer is an aggregate/join/window keyed on
-    the gram or the id, so the query results are identical; pinned by
+    Row-set contract is IDENTICAL to ``explode(array_distinct(
+    word_ngrams(...)))``: one row per distinct gram per document,
+    documents with fewer than n tokens emit nothing (``word_ngrams``
+    drops windows past the end), NULL text emits nothing
+    (pre-filtered). Row ORDER within a partition differs (the explode
+    form keeps first-occurrence order, this form (row, dictionary code)
+    order) — every consumer is an aggregate/join/window keyed on the
+    gram or the id, so the query results are identical; pinned by
     ``tests/test_gram_kernel.py`` with sorted-row equality."""
 
     def fn(batches):
@@ -667,36 +542,23 @@ def word_ngrams_exploded(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 5,
-    impl: str | None = None,
 ) -> DataFrame:
     """The exploded distinct word-n-gram relation — (id_col, g), one row
     per distinct gram per document. The SINGLE Spark-side entry point
     behind every gram-based screen (contamination, bloom pruning,
     novelty); the DuckDB twin stays the _GRAMS5_CTE the oracles compose.
 
-    Two implementations, selected by ``impl`` (default ``GRAMS_IMPL``),
-    identical row sets by construction and by test
-    (``tests/test_gram_kernel.py``):
-
-    - ``"arrow"``: vectorized ``mapInArrow`` kernel (guide §4.2) — the
-      JVM computes the normalized text (codegen), the kernel slices
-      grams as contiguous byte ranges of the Arrow buffer and dedups
-      per row with dictionary-encode + one np.unique. Replaces the
-      interpreted higher-order chain (transform/slice/concat_ws per
-      gram + array_distinct string compares + Generate) with native
-      vector code; map-only either way, so the plan keeps zero
-      exchanges up to the first consumer shuffle at any scale.
-    - ``"sql"``: the pure-JVM form — ``explode(array_distinct(
-      word_ngrams(...)))``. Kept as the A/B baseline and for
-      environments where the Python worker boundary is unavailable.
+    Runs as a vectorized ``mapInArrow`` kernel (guide §4.2): the JVM
+    computes the normalized text (codegen), the kernel slices grams as
+    contiguous byte ranges of the Arrow buffer and dedups per row with
+    dictionary-encode + one np.unique. It replaced the interpreted
+    higher-order chain (transform/slice/concat_ws per gram +
+    array_distinct string compares + Generate) with native vector
+    code; map-only either way, so the plan keeps zero exchanges up to
+    the first consumer shuffle at any scale. The test reference is
+    ``explode(array_distinct(word_ngrams(...)))``
+    (``tests/test_gram_kernel.py``).
     """
-    impl = impl or GRAMS_IMPL
-    if impl not in ("arrow", "sql"):
-        raise ValueError(f"impl must be 'arrow' or 'sql', got {impl!r}")
-    if impl == "sql":
-        return df.select(
-            F.col(id_col), F.explode(F.array_distinct(word_ngrams(text_col, n))).alias("g")
-        )
     norm = normalize_ws(text_col)
     base = df.filter(norm.isNotNull()).select(F.col(id_col).alias("id"), norm.alias("__norm"))
     idt = base.schema["id"].dataType.simpleString()

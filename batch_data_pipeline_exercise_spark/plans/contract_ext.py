@@ -450,13 +450,12 @@ def corpus_prep_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     the byte-identical survivor set the shipped parameters see.
 
     The fused stats+quality+lang-id+fingerprint stage compiles clean
-    since the marker/stopword folds moved to per-needle regexp_count
-    (operators/text.py::_regexp_count_fold_sql) — the replace-fold
-    form blew janino's 64 KB whole-stage-codegen limit and dropped
-    this whole stage (the pipeline's biggest scan) to interpreted
-    execution. Measured at sf0.1: wall time is a wash (7.6 → 7.8 s,
-    within jitter — literal-pattern Java regex ≈ UTF8String.replace),
-    but the stage stays inside WSCG with headroom for composition.
+    since the marker/stopword folds left the generated code: first as
+    per-needle regexp_count (kept as the test reference in
+    tests/kernel_reference.py), now as one arrow counting kernel
+    (operators/text.py). The replace-fold form blew janino's 64 KB
+    whole-stage-codegen limit and dropped this whole stage (the
+    pipeline's biggest scan) to interpreted execution.
     Score ONCE, pin the scored rows, THEN filter. Filtering directly
     on the derived lang_pred/quality_score columns looks free but is
     not: predicate pushdown SUBSTITUTES the full 40-regex scorer
@@ -1085,8 +1084,8 @@ _LSH_PLANES = similarity.hyperplanes(EMB_DIM, n_planes=8, seed=42)
 def _lsh_bucket_sql(vexpr: str, planes: list[list[float]]) -> str:
     """DuckDB expression for the sign-bit LSH bucket — same plane order,
     same fold (``list_dot_product`` ≡ sequential aggregate, verified
-    bit-identical in round 1), same ``>= 0`` sign rule as
-    ``similarity.with_lsh_bucket``."""
+    bit-identical in round 1), same ``>= 0`` sign rule as the
+    sign-sketch kernel behind ``similarity.cosine_topk_lsh``."""
     terms = []
     for i, p in enumerate(planes):
         lit = "[" + ", ".join(repr(float(x)) for x in p) + "]"

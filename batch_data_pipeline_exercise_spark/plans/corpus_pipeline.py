@@ -131,7 +131,7 @@ class CorpusPipeline:
             # persisted index and cannot change per increment.
             # Per-family occupancy targets — the two LSH families have
             # OPPOSITE occupancy physics and one number cannot serve both
-            # (measured: tests/sized_corpus_probe.py, the 2×3 sign sketch
+            # (measured: evidence/SIZEDCORPUS_r11.jsonl, the 2×3 sign sketch
             # a shared loose target derived priced 49M collisions for 11k
             # vectors and was refused by its own budget gate on day 2):
             # - minhash band keys are md5s over signature rows — the key

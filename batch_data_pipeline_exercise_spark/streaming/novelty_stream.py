@@ -60,13 +60,11 @@ def fold_novelty(
     treated as written by a crashed earlier attempt at THIS batch and
     still counts as novel — see the module docstring's protocol.
     """
+    # per-doc distinct grams, map-only; batches carry one row per doc_id
+    # (see dedup.word_shingles)
     grams = (
-        batch.select(
-            F.col(id_col).alias("doc_id"),
-            # per-doc distinct via array_distinct — no exchange; batches
-            # carry one row per doc_id (see dedup.word_shingles)
-            F.explode(F.array_distinct(text.word_ngrams("text", n))).alias("g"),
-        )
+        text.word_ngrams_exploded(batch, id_col, "text", n)
+        .select(F.col(id_col).alias("doc_id"), "g")
         .localCheckpoint()
     )
     first_new = grams.groupBy("g").agg(F.min("doc_id").alias("first_new"))

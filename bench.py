@@ -38,13 +38,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F
 
-from batch_data_pipeline_exercise_spark.plans import contract
-from batch_data_pipeline_exercise_spark.plans import contract_ext  # noqa: F401 — registers extension queries
-from batch_data_pipeline_exercise_spark.plans import contract2  # noqa: F401 — registers breadth queries
-from batch_data_pipeline_exercise_spark.plans import contract3  # noqa: F401 — registers TPC-H + corpus breadth
-from batch_data_pipeline_exercise_spark.plans import contract4  # noqa: F401 — registers robust-stats + sampling breadth
-from batch_data_pipeline_exercise_spark.plans import contract5  # noqa: F401 — registers sequence/drift/sketch breadth
-from batch_data_pipeline_exercise_spark.plans import contract6  # noqa: F401 — registers round-6 breadth
+from batch_data_pipeline_exercise_spark.plans.registry import REGISTRY
 from batch_data_pipeline_exercise_spark.session import get_spark
 
 
@@ -279,7 +273,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     ui_url = spark.sparkContext.uiWebUrl
 
-    headline = [q for q in contract.REGISTRY.values() if q.bench]
+    headline = [q for q in REGISTRY.values() if q.bench]
 
     # warmup: run the first headline query once, untimed
     headline[0].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()

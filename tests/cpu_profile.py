@@ -28,15 +28,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-from batch_data_pipeline_exercise_spark.plans import contract  # noqa: E402
-from batch_data_pipeline_exercise_spark.plans import (  # noqa: F401,E402
-    contract2,
-    contract3,
-    contract4,
-    contract5,
-    contract6,
-    contract_ext,
-)
+from batch_data_pipeline_exercise_spark.plans.registry import REGISTRY  # noqa: E402
 from batch_data_pipeline_exercise_spark.session import get_spark  # noqa: E402
 from bench import _clear_session_state, _settled_totals  # noqa: E402
 
@@ -45,7 +37,7 @@ def main() -> None:
     sf_dir, out_path = sys.argv[1], Path(sys.argv[2])
     names = sys.argv[3:]
     if names == ["--all"]:
-        names = sorted(contract.REGISTRY)
+        names = sorted(REGISTRY)
     out_path.parent.mkdir(exist_ok=True)
 
     spark = get_spark(
@@ -59,14 +51,14 @@ def main() -> None:
 
     # warmup absorbs JVM/codegen startup so the first profiled query
     # isn't charged for it
-    contract.REGISTRY[names[0]].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+    REGISTRY[names[0]].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
     _clear_session_state(spark)
 
     prev = _settled_totals(ui_url)
     with out_path.open("a") as fh:
         for name in names:
             t0 = time.perf_counter()
-            contract.REGISTRY[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+            REGISTRY[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             wall = time.perf_counter() - t0
             # drop the query's pinned blocks BEFORE reading counters so
             # the next query starts with clean execution memory — see

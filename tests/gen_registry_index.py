@@ -23,15 +23,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-from batch_data_pipeline_exercise_spark.plans import contract  # noqa: E402
-from batch_data_pipeline_exercise_spark.plans import (  # noqa: F401,E402
-    contract2,
-    contract3,
-    contract4,
-    contract5,
-    contract6,
-    contract_ext,
-)
+from batch_data_pipeline_exercise_spark.plans.registry import REGISTRY  # noqa: E402
 
 #: keyword → family, first hit wins (checked against name, then doc)
 FAMILIES = [
@@ -102,7 +94,7 @@ def evidence_counts() -> tuple[dict[str, tuple[int, int]], list[str]]:
 def build_rows() -> tuple[list[dict[str, str]], list[str]]:
     ev, files = evidence_counts()
     rows = []
-    for name, q in sorted(contract.REGISTRY.items()):
+    for name, q in sorted(REGISTRY.items()):
         g, t = ev.get(name, (0, 0))
         rows.append(
             {
@@ -130,7 +122,7 @@ def render(rows: list[dict[str, str]], files: list[str]) -> str:
         "",
         "Generated by `python tests/gen_registry_index.py` — do not edit by hand.",
         f"`tests/test_registry_index.py` keeps the location/flag columns in sync "
-        f"with `contract.REGISTRY`; the evidence column is a point-in-time read "
+        f"with `REGISTRY`; the evidence column is a point-in-time read "
         f"of the CORRECTNESS files and is NOT asserted on.",
         "",
         f"**{len(rows)} queries** ({n_oracle} oracle-paired, {len(rows) - n_oracle} "
@@ -153,7 +145,7 @@ def render(rows: list[dict[str, str]], files: list[str]) -> str:
 def main() -> None:
     rows, files = build_rows()
     (REPO / "REGISTRY.md").write_text(render(rows, files))
-    print(f"wrote REGISTRY.md ({len(contract.REGISTRY)} queries; evidence: {files})")
+    print(f"wrote REGISTRY.md ({len(REGISTRY)} queries; evidence: {files})")
 
 
 if __name__ == "__main__":

@@ -49,7 +49,7 @@ def mixture_embeddings_table(base_rows, factor: int, key_rng: int):
     stride partners; replica 0 exact (see module docstring for why a
     mixture, not a perturbation). ``base_rows`` is an iterable of
     (vec_id, embedding, label) sorted by vec_id. Extracted from main()
-    so single-table scale probes (tests/kmeans_scale_probe.py) generate
+    so single-table scale probes (evidence/KMEANS_sf10_r12.jsonl) generate
     byte-identical data to the full generator."""
     import numpy as np
     import pyarrow as pa

@@ -15,15 +15,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from batch_data_pipeline_exercise_spark.plans import contract  # noqa: E402
-from batch_data_pipeline_exercise_spark.plans import (  # noqa: F401,E402
-    contract2,
-    contract3,
-    contract4,
-    contract5,
-    contract6,
-    contract_ext,
-)
+from batch_data_pipeline_exercise_spark.plans.registry import REGISTRY  # noqa: E402
 from batch_data_pipeline_exercise_spark.session import get_spark  # noqa: E402
 from tests.test_plan_snapshots import FIXTURE, _pinned_names, plan_shape  # noqa: E402
 
@@ -41,7 +33,7 @@ def main() -> None:
     sf_dir = "/root/testdata/sf0.001"
     shapes = {}
     for name in _pinned_names():
-        plan = contract.REGISTRY[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        plan = REGISTRY[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         shapes[name] = plan_shape(plan)
         print(name, shapes[name])
     FIXTURE.write_text(json.dumps(shapes, indent=1, sort_keys=True) + "\n")

@@ -64,15 +64,7 @@ import duckdb  # noqa: E402
 
 from tests import sweep_routing  # noqa: E402
 
-from batch_data_pipeline_exercise_spark.plans import contract  # noqa: E402
-from batch_data_pipeline_exercise_spark.plans import (  # noqa: F401,E402
-    contract2,
-    contract3,
-    contract4,
-    contract5,
-    contract6,
-    contract_ext,
-)
+from batch_data_pipeline_exercise_spark.plans.registry import REGISTRY  # noqa: E402
 from batch_data_pipeline_exercise_spark.session import get_spark  # noqa: E402
 
 TABLES = (
@@ -167,7 +159,7 @@ def main() -> None:
     # top-5). Unknown names are an error, not a silent no-op.
     only = {n.strip() for n in os.environ.get("SWEEP_ONLY", "").split(",") if n.strip()}
     if only:
-        unknown = only - set(contract.REGISTRY)
+        unknown = only - set(REGISTRY)
         if unknown:
             raise SystemExit(f"SWEEP_ONLY names not in registry: {sorted(unknown)}")
 
@@ -185,7 +177,7 @@ def main() -> None:
         if not 0 <= shard < n_shards:
             raise SystemExit(f"SWEEP_SHARD must be in [0, {n_shards}), got {shard}")
         only = sweep_routing.shard_split(
-            sorted(only or contract.REGISTRY), n_shards, shard, sf if routing else 0.0
+            sorted(only or REGISTRY), n_shards, shard, sf if routing else 0.0
         )
 
     done: set[str] = set()
@@ -309,7 +301,7 @@ def main() -> None:
     since_recycle = 0
 
     with out.open("a") as fh:
-        for name, q in sorted(contract.REGISTRY.items()):
+        for name, q in sorted(REGISTRY.items()):
             if only and name not in only:
                 continue
             if name in done:
@@ -448,7 +440,7 @@ def main() -> None:
             {
                 "sf_dir": sf_dir,
                 "sf": sf,
-                "queries": len(contract.REGISTRY),
+                "queries": len(REGISTRY),
                 "resumed_past": len(done),
                 "oracle_match": n_match,
                 "rows_only": n_rows_only,

@@ -10,9 +10,8 @@ runs are always distinguishable from pinned ones.
 
 This file drives the mechanism end-to-end at a suite-sized corpus (60k
 vectors — the sf3 embedding count); the verdict's literal 600k scenario
-runs as a one-off probe (``tests/auto_resize_probe.py`` ->
-``evidence/AUTORESIZE_r14.jsonl``) because its sketch+verify work is a
-multi-minute local[32] job, and the sizing solve itself is pinned at
+was measured once (``evidence/AUTORESIZE_r14.jsonl``) because its
+sketch+verify work is a multi-minute local[32] job, and the sizing solve itself is pinned at
 600k in ``tests/test_sizing_model.py``.
 """
 

@@ -13,13 +13,7 @@ import math
 import duckdb
 import pytest
 
-from batch_data_pipeline_exercise_spark.plans import contract
-from batch_data_pipeline_exercise_spark.plans import contract_ext  # noqa: F401 — registers extension queries
-from batch_data_pipeline_exercise_spark.plans import contract2  # noqa: F401 — registers breadth queries
-from batch_data_pipeline_exercise_spark.plans import contract3  # noqa: F401 — registers TPC-H + corpus breadth
-from batch_data_pipeline_exercise_spark.plans import contract4  # noqa: F401 — registers robust-stats + sampling breadth
-from batch_data_pipeline_exercise_spark.plans import contract5  # noqa: F401 — registers sequence/drift/sketch breadth
-from batch_data_pipeline_exercise_spark.plans import contract6  # noqa: F401 — registers round-6 breadth
+from batch_data_pipeline_exercise_spark.plans.registry import REGISTRY
 
 TABLES = [
     "region",
@@ -96,12 +90,12 @@ _SLOW_ORACLES = {"corpus_prep_pipeline"}
     "name",
     [
         pytest.param(n, marks=[pytest.mark.slow] if n in _SLOW_ORACLES else [])
-        for n, q in contract.REGISTRY.items()
+        for n, q in REGISTRY.items()
         if q.oracle
     ],
 )
 def test_query_matches_oracle(spark, sf_dir, name):
-    q = contract.REGISTRY[name]
+    q = REGISTRY[name]
     sdf = q.fn(spark, sf_dir)
     spark_rows = [tuple(r) for r in sdf.collect()]
     spark_cols = sdf.columns
@@ -153,7 +147,8 @@ def test_emb_sketch_env_override_stays_mirrored():
 
     script = r"""
 import json, sys
-from batch_data_pipeline_exercise_spark.plans import contract, contract_ext
+from batch_data_pipeline_exercise_spark.plans import contract_ext
+from batch_data_pipeline_exercise_spark.plans.registry import REGISTRY
 from batch_data_pipeline_exercise_spark.session import get_spark
 from tests.test_contract_oracle import duck_con, to_rowset
 
@@ -164,7 +159,7 @@ sf = "/root/testdata/sf0.001"
 out = {}
 for name in ("embedding_near_dup_pairs", "embedding_incremental_near_dups",
              "embedding_dedup_survivors"):
-    q = contract.REGISTRY[name]
+    q = REGISTRY[name]
     sdf = q.fn(spark, sf)
     srs = to_rowset(sdf.columns, [tuple(r) for r in sdf.collect()])
     con = duck_con(sf)
@@ -186,7 +181,6 @@ print(json.dumps(out))
     # differs from the default sketch's result (8x8 at sf0.001 finds a
     # different candidate->verified pair set than 4x6)
     import duckdb  # noqa: F401 — ensure default-side run uses this process's registry
-    from batch_data_pipeline_exercise_spark.plans import contract
 
     assert (out["embedding_near_dup_pairs"]["n"]
             != _default_near_dup_count()), "override did not change the plan"
@@ -232,10 +226,8 @@ def _default_near_dup_count() -> int:
     """Row count of embedding_near_dup_pairs' ORACLE at the default 8x8
     sketch (DuckDB-only — no second Spark session needed; the oracle IS
     the mirrored semantics)."""
-    from batch_data_pipeline_exercise_spark.plans import contract
-
     con = duck_con("/root/testdata/sf0.001")
     try:
-        return len(con.execute(contract.REGISTRY["embedding_near_dup_pairs"].oracle).fetchall())
+        return len(con.execute(REGISTRY["embedding_near_dup_pairs"].oracle).fetchall())
     finally:
         con.close()

@@ -1,6 +1,7 @@
 """The arrow pairwise-cosine kernel must be bit-identical to the JVM
 aggregate/zip_with fold — the r14 optimization replaced the interpreted
-per-pair dot fold, never the values.
+per-pair dot fold, never the values. The fold lives in
+tests/kernel_reference.py.
 
 The kernel accumulates elementwise-sequentially per (row, dim) step, so
 every intermediate IEEE-754 rounding matches the JVM left fold; the
@@ -17,6 +18,7 @@ import math
 import pytest
 
 from batch_data_pipeline_exercise_spark.operators import similarity as S
+from tests import kernel_reference as ref
 
 ROWS = [
     (1, 2, [1.0, 2.0, 3.0], [4.0, 5.0, 6.0], 3.7416573867739413, 8.774964387392123),
@@ -43,13 +45,13 @@ def test_arrow_equals_sql_fold(pairs_df):
     a = {
         (r["id1"], r["id2"]): r["cosine"]
         for r in S._cosine_scored_pairs(
-            pairs_df, "id1", "id2", "__va", "__vb", "__na", "__nb", impl="arrow"
+            pairs_df, "id1", "id2", "__va", "__vb", "__na", "__nb"
         ).collect()
     }
     s = {
         (r["id1"], r["id2"]): r["cosine"]
-        for r in S._cosine_scored_pairs(
-            pairs_df, "id1", "id2", "__va", "__vb", "__na", "__nb", impl="sql"
+        for r in ref.cosine_scored_pairs(
+            pairs_df, "id1", "id2", "__va", "__vb", "__na", "__nb"
         ).collect()
     }
     assert set(a) == set(s)
@@ -63,27 +65,24 @@ def test_zero_norm_matches_session_ansi_mode(spark):
     twin."""
     z = spark.createDataFrame([(3, 4, [], [], 0.0, 0.0)], SCHEMA)
     vals = []
-    for impl in ("arrow", "sql"):
-        rows = S._cosine_scored_pairs(
-            z, "id1", "id2", "__va", "__vb", "__na", "__nb", impl=impl
-        ).collect()
+    for score in (S._cosine_scored_pairs, ref.cosine_scored_pairs):
+        rows = score(z, "id1", "id2", "__va", "__vb", "__na", "__nb").collect()
         vals.append([(r["id1"], r["id2"], str(r["cosine"])) for r in rows])
     assert vals[0] == vals[1]
     old = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try:
-        for impl in ("arrow", "sql"):
+        for score in (S._cosine_scored_pairs, ref.cosine_scored_pairs):
             with pytest.raises(Exception):
-                S._cosine_scored_pairs(
-                    z, "id1", "id2", "__va", "__vb", "__na", "__nb", impl=impl
-                ).collect()
+                score(z, "id1", "id2", "__va", "__vb", "__na", "__nb").collect()
     finally:
         spark.conf.set("spark.sql.ansi.enabled", old)
 
 
 def test_topk_bruteforce_bit_identical(spark, monkeypatch):
     """End-to-end: the brute-force top-k (ranks AND raw cosine doubles)
-    is identical under either impl on a deterministic vector set."""
+    is identical with the kernel and with the reference fold swapped in
+    as the scorer, on a deterministic vector set."""
     import random
 
     rng = random.Random(7)
@@ -94,8 +93,7 @@ def test_topk_bruteforce_bit_identical(spark, monkeypatch):
     q = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    monkeypatch.setattr(S, "COSINE_PAIRS_IMPL", "arrow")
     ra = sorted(map(tuple, S.cosine_topk_bruteforce(e, q, k=10).collect()))
-    monkeypatch.setattr(S, "COSINE_PAIRS_IMPL", "sql")
+    monkeypatch.setattr(S, "_cosine_scored_pairs", ref.cosine_scored_pairs)
     rs = sorted(map(tuple, S.cosine_topk_bruteforce(e, q, k=10).collect()))
     assert ra == rs

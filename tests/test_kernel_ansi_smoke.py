@@ -4,15 +4,16 @@ The engine session runs ANSI OFF (session.py) while the plain
 driver-contract session runs ANSI ON — and two r14 kernels initially
 passed their A/B on one flavor and failed on the other (the traps memo:
 division-by-zero NULL-vs-throw, ``size(NULL)`` −1-vs-NULL). This module
-runs each kernel's arrow-vs-sql A/B under BOTH dialects on inputs that
+runs each kernel against its pure-JVM reference form
+(tests/kernel_reference.py) under BOTH dialects on inputs that
 exercise the session-sensitive edges (NULL text, NULL vectors, NULL
 elements inside vectors, empty strings/arrays), so any future kernel
 edit that reintroduces a dialect dependence fails CI in the flavor the
 other suites don't run.
 
 Exact row-set equality, no tolerance. The zero-norm DIVISION edge is
-pinned separately in test_cosine_kernel.py (it raises under ANSI on
-both paths by design).
+pinned separately in test_cosine_kernel.py (it raises under ANSI in
+both forms by design).
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ from contextlib import contextmanager
 import pytest
 
 from batch_data_pipeline_exercise_spark.operators import dedup, similarity, text
+from tests import kernel_reference as ref
 
 
 @contextmanager
@@ -70,8 +72,8 @@ VECS = [
 def test_gram_kernel_both_flavors(spark, ansi_on):
     with ansi(spark, ansi_on):
         df = spark.createDataFrame(DOCS, "doc_id bigint, text string")
-        a = text.word_ngrams_exploded(df, "doc_id", "text", 3, impl="arrow").collect()
-        s = text.word_ngrams_exploded(df, "doc_id", "text", 3, impl="sql").collect()
+        a = text.word_ngrams_exploded(df, "doc_id", "text", 3).collect()
+        s = ref.word_ngrams_exploded(df, "doc_id", "text", 3).collect()
         assert _norm_rows(a) == _norm_rows(s)
 
 
@@ -79,8 +81,8 @@ def test_gram_kernel_both_flavors(spark, ansi_on):
 def test_scorer_kernel_both_flavors(spark, ansi_on):
     with ansi(spark, ansi_on):
         df = spark.createDataFrame(DOCS, "doc_id bigint, text string")
-        a = text.with_quality_lang(df, impl="arrow").collect()
-        s = text.with_quality_lang(df, impl="sql").collect()
+        a = text.with_quality_lang(df).collect()
+        s = ref.with_quality_lang(df).collect()
         assert _norm_rows(a) == _norm_rows(s)
 
 
@@ -88,8 +90,8 @@ def test_scorer_kernel_both_flavors(spark, ansi_on):
 def test_minhash_kernel_both_flavors(spark, ansi_on):
     with ansi(spark, ansi_on):
         df = spark.createDataFrame(DOCS, "doc_id bigint, text string")
-        a = dedup.minhash_signatures_docs(df, "doc_id", k=8, impl="arrow").collect()
-        s = dedup.minhash_signatures_docs(df, "doc_id", k=8, impl="sql").collect()
+        a = dedup.minhash_signatures_docs(df, "doc_id", k=8).collect()
+        s = ref.minhash_signatures_docs(df, "doc_id", k=8).collect()
         assert _norm_rows(a) == _norm_rows(s)
 
 
@@ -98,15 +100,15 @@ def test_sketch_kernel_both_flavors(spark, ansi_on):
     with ansi(spark, ansi_on):
         df = spark.createDataFrame(VECS, "vec_id bigint, embedding array<double>")
         cols = ["id", "__n", "__bands"]
-        a = similarity.banded_sign_sketch(df, 2, 4, 42, dim=4, impl="arrow").select(*cols).collect()
-        s = similarity.banded_sign_sketch(df, 2, 4, 42, dim=4, impl="sql").select(*cols).collect()
+        a = similarity.banded_sign_sketch(df, 2, 4, 42, dim=4).select(*cols).collect()
+        s = ref.banded_sign_sketch(df, 2, 4, 42, dim=4).select(*cols).collect()
         assert _norm_rows(a) == _norm_rows(s)
 
 
 @pytest.mark.parametrize("ansi_on", [False, True])
 def test_cosine_kernel_both_flavors(spark, ansi_on):
     # non-zero norms only: the zero-norm division edge raises under ANSI
-    # on both paths and is pinned in test_cosine_kernel.py
+    # in both forms and is pinned in test_cosine_kernel.py
     rows = [
         (1, 2, [1.0, 2.0], [3.0, 4.0], 2.23606797749979, 5.0),
         (3, 4, None, [1.0, 1.0], None, 1.4142135623730951),
@@ -116,9 +118,7 @@ def test_cosine_kernel_both_flavors(spark, ansi_on):
     with ansi(spark, ansi_on):
         df = spark.createDataFrame(rows, schema)
         a = similarity._cosine_scored_pairs(
-            df, "id1", "id2", "__va", "__vb", "__na", "__nb", impl="arrow"
+            df, "id1", "id2", "__va", "__vb", "__na", "__nb"
         ).collect()
-        s = similarity._cosine_scored_pairs(
-            df, "id1", "id2", "__va", "__vb", "__na", "__nb", impl="sql"
-        ).collect()
+        s = ref.cosine_scored_pairs(df, "id1", "id2", "__va", "__vb", "__na", "__nb").collect()
         assert _norm_rows(a) == _norm_rows(s)

@@ -21,8 +21,7 @@ from __future__ import annotations
 
 import pytest
 
-from batch_data_pipeline_exercise_spark.plans import contract
-from batch_data_pipeline_exercise_spark.plans import contract2, contract3, contract4, contract5, contract6, contract_ext  # noqa: F401
+from batch_data_pipeline_exercise_spark.plans.registry import REGISTRY
 
 QUADRATIC = {"CartesianProduct", "BroadcastNestedLoopJoin"}
 
@@ -133,14 +132,14 @@ def wide_plan_strings(spark):
     spark.conf.set("spark.sql.debug.maxToStringFields", old)
 
 
-@pytest.mark.parametrize("name", sorted(contract.REGISTRY))
+@pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_plan_is_scale_safe(spark, sf_dir, name, wide_plan_strings):
-    q = contract.REGISTRY[name]
+    q = REGISTRY[name]
     plan = q.fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     _assert_scale_safe(name, q, plan)
 
 
-@pytest.mark.parametrize("name", sorted(contract.REGISTRY))
+@pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_plan_is_scale_safe_behind_pins(spark, sf_dir, name, monkeypatch, wide_plan_strings):
     """Same gate, but with localCheckpoint pins DISABLED (identity), so the
     lint sees the subtrees a pin would truncate at an ExistingRDD scan —
@@ -153,7 +152,7 @@ def test_plan_is_scale_safe_behind_pins(spark, sf_dir, name, monkeypatch, wide_p
     # the base silently changes nothing)
     cls = type(spark.range(1))
     monkeypatch.setattr(cls, "localCheckpoint", lambda self, eager=True: self)
-    q = contract.REGISTRY[name]
+    q = REGISTRY[name]
     plan = q.fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     _assert_scale_safe(name, q, plan)
 
@@ -197,7 +196,7 @@ def test_lambda_lint_catches_planted_violation(spark, wide_plan_strings):
 
 
 def test_quadratic_allowlist_is_small():
-    allowed = [n for n, q in contract.REGISTRY.items() if q.allow_quadratic]
+    allowed = [n for n, q in REGISTRY.items() if q.allow_quadratic]
     # embedding_near_dup_pairs left this list in round 4: multi-band
     # sign-LSH (bucketed equi self-join per band) replaced the exact
     # all-pairs join

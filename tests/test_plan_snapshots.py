@@ -23,15 +23,7 @@ from pathlib import Path
 
 import pytest
 
-from batch_data_pipeline_exercise_spark.plans import contract
-from batch_data_pipeline_exercise_spark.plans import (  # noqa: F401 — register
-    contract2,
-    contract3,
-    contract4,
-    contract5,
-    contract6,
-    contract_ext,
-)
+from batch_data_pipeline_exercise_spark.plans.registry import REGISTRY
 
 FIXTURE = Path(__file__).parent / "fixtures" / "plan_shapes.json"
 
@@ -66,7 +58,7 @@ EXTRA_PINNED = (
 
 
 def _headline_names() -> list[str]:
-    return sorted(n for n, q in contract.REGISTRY.items() if q.bench)
+    return sorted(n for n, q in REGISTRY.items() if q.bench)
 
 
 def _pinned_names() -> list[str]:
@@ -80,7 +72,7 @@ def test_headline_plan_shape_is_pinned(spark, sf_dir, name):
         f"{name} is bench-flagged but has no plan-shape fixture — run "
         f"tests/regen_plan_shapes.py (or add it by hand) in the same commit"
     )
-    plan = contract.REGISTRY[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    plan = REGISTRY[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     got = plan_shape(plan)
     assert got == expected[name], (
         f"{name}: physical plan shape changed.\n  pinned:  {expected[name]}\n"

@@ -1,7 +1,7 @@
 """The arrow scorer-counts kernel must produce EXACTLY the regex forms'
 values — the r14 optimization replaced the per-needle regexp_count
 folds and token/word regex counts with one vectorized counting pass,
-never the results.
+never the results. The regex forms live in tests/kernel_reference.py.
 
 The kernel computes ONLY integer counts; every ratio, quality weight,
 and the language argmax stays in the JVM with the identical
@@ -19,6 +19,7 @@ from __future__ import annotations
 import pytest
 
 from batch_data_pipeline_exercise_spark.operators import text
+from tests.kernel_reference import SCORERS
 
 DOCS = [
     (1, "The quick brown fox, jumps over the lazy dog! And a dog is a dog."),
@@ -53,19 +54,19 @@ def docs_df(spark):
     "op", [text.with_text_stats, text.with_lang_id, text.with_quality_lang]
 )
 def test_arrow_equals_sql(docs_df, op):
-    a = sorted(map(tuple, op(docs_df, "text", impl="arrow").collect()))
-    s = sorted(map(tuple, op(docs_df, "text", impl="sql").collect()))
+    a = sorted(map(tuple, op(docs_df, "text").collect()))
+    s = sorted(map(tuple, SCORERS[op](docs_df, "text").collect()))
     assert a == s
 
 
 def test_quality_score_composes(docs_df):
-    a = sorted(map(tuple, text.with_quality_score(docs_df, "text", impl="arrow").collect()))
-    s = sorted(map(tuple, text.with_quality_score(docs_df, "text", impl="sql").collect()))
+    a = sorted(map(tuple, text.with_quality_score(docs_df, "text").collect()))
+    s = sorted(map(tuple, SCORERS[text.with_quality_score](docs_df, "text").collect()))
     assert a == s
 
 
 def test_kernel_plan_is_map_only(docs_df):
-    out = text.with_text_stats(docs_df, "text", impl="arrow")
+    out = text.with_text_stats(docs_df, "text")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "MapInArrow" in plan
@@ -73,6 +74,6 @@ def test_kernel_plan_is_map_only(docs_df):
 
 def test_fused_quality_lang_single_kernel(docs_df):
     """with_quality_lang runs ONE kernel pass for stats + lang."""
-    out = text.with_quality_lang(docs_df, "text", impl="arrow")
+    out = text.with_quality_lang(docs_df, "text")
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInArrow") == 1

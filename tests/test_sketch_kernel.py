@@ -1,13 +1,15 @@
 """The arrow sign-sketch kernel must be EXACTLY the SQL projection —
 norms (float-exact), band keys, and edge semantics alike. The r14
-optimization replaced the evaluation engine, never the result.
+optimization replaced the evaluation engine, never the result. The SQL
+projection lives in tests/kernel_reference.py.
 
 Edge rows are the contract: a NULL vector keys to 0 in every band with
 a NULL norm (the SQL CASE takes the 0 branch on a NULL dot); an EMPTY
 vector keys to 0 too (zip_with pads it with nulls, nulling the fold)
 with norm 0.0 (the norm's transform yields an empty array, folded to
 the 0.0 base); a ragged width raises a descriptive error instead of the
-SQL path's silent null-padded-zip keys.
+SQL form's silent null-padded-zip keys — in the materialized sketch and
+in the pre-flight occupancy scout alike, which share the kernel.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ from __future__ import annotations
 import pytest
 
 from batch_data_pipeline_exercise_spark.operators import similarity as sim
+from tests import kernel_reference as ref
 
 DIM = 16
 
@@ -34,8 +37,8 @@ def vecs_df(spark):
 
 
 def test_arrow_sketch_equals_sql_sketch(vecs_df):
-    a = sim.banded_sign_sketch(vecs_df, 4, 4, 7, dim=DIM, impl="sql")
-    b = sim.banded_sign_sketch(vecs_df, 4, 4, 7, dim=DIM, impl="arrow")
+    a = ref.banded_sign_sketch(vecs_df, 4, 4, 7, dim=DIM)
+    b = sim.banded_sign_sketch(vecs_df, 4, 4, 7, dim=DIM)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
     rows = {r["id"]: r for r in b.collect()}
@@ -51,8 +54,8 @@ def test_arrow_sketch_float_input_type(spark):
     df = spark.createDataFrame(
         [(1, [0.125] * DIM), (2, [-1.5] * DIM)], "vec_id bigint, embedding array<float>"
     )
-    a = sim.banded_sign_sketch(df, 2, 3, 11, dim=DIM, impl="sql")
-    b = sim.banded_sign_sketch(df, 2, 3, 11, dim=DIM, impl="arrow")
+    a = ref.banded_sign_sketch(df, 2, 3, 11, dim=DIM)
+    b = sim.banded_sign_sketch(df, 2, 3, 11, dim=DIM)
     assert a.exceptAll(b).count() == 0
     assert b.exceptAll(a).count() == 0
 
@@ -62,9 +65,8 @@ def test_arrow_sketch_ragged_width_raises(spark):
         [(1, [0.5] * DIM), (2, [0.5] * (DIM + 1))], "vec_id bigint, embedding array<double>"
     )
     with pytest.raises(Exception, match="width"):
-        sim.banded_sign_sketch(df, 2, 2, 7, dim=DIM, impl="arrow").collect()
-
-
-def test_sketch_impl_validated(vecs_df):
-    with pytest.raises(ValueError, match="impl"):
-        sim.banded_sign_sketch(vecs_df, 2, 2, 7, dim=DIM, impl="bogus")
+        sim.banded_sign_sketch(df, 2, 2, 7, dim=DIM).collect()
+    # the scout builds its band keys with the same kernel, so it refuses
+    # the ragged row too (its SQL form keyed null-padded vectors)
+    with pytest.raises(Exception, match="width"):
+        sim.sign_lsh_occupancy_stats(df, 2, 2, 7, dim=DIM).collect()
