@@ -59,6 +59,7 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 25,
     accelerate_after: int = 3,
+    max_edges: int | None = None,
 ) -> DataFrame:
     """(id, comp) with ``comp`` = the smallest vertex id reachable from
     ``id`` — deterministic, engine-independent labels.
@@ -68,13 +69,20 @@ def connected_components(
     incident to an edge are labeled. Raises if ``max_iter`` rounds don't
     converge — with path halving active past ``accelerate_after`` even a
     path graph of ~2^(max_iter - accelerate_after) vertices converges,
-    so the default bound is effectively unreachable."""
+    so the default bound is effectively unreachable.
+
+    ``max_edges`` (optional) is a caller-known UPPER bound on the
+    symmetrized edge count — e.g. twice a pair count the caller already
+    paid for. It replaces the upfront count job; an upper bound is
+    sound because the count only picks the strategy below, and both
+    strategies return the same labels."""
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     sym = sym.localCheckpoint(eager=False)  # reused every round — pin it
     # ONE upfront count sizes the whole loop (guide §1.2/§3.1): it runs
     # over the pin the first round would have had to materialize anyway,
-    # so the only added cost is a row count of in-memory blocks. Small
+    # so the only added cost is a row count of in-memory blocks (none
+    # when the caller passes ``max_edges``). Small
     # graphs (the dedup norm) then take the BROADCAST shape — the edge
     # pin coalesced to one partition and every per-round label-side
     # relation shipped as a broadcast hash join — which collapses each
@@ -82,7 +90,7 @@ def connected_components(
     # single-task stages. Results are identical on both shapes (same
     # joins, same monotone min aggregation; only strategy/placement
     # change); big graphs keep the shuffle shape untouched.
-    n_edges = sym.count()
+    n_edges = sym.count() if max_edges is None else max_edges
     small = n_edges <= CC_BROADCAST_MAX_EDGES
     if small:
         sym = sym.coalesce(1)

@@ -7,8 +7,10 @@ persistent layers, and re-running a day is a no-op. This module applies
 exactly that discipline to corpus preparation: each call to
 ``run(docs, ds)`` processes ONE day's document increment through
 
-    score/filter -> exact dedup -> text near-dup -> embedding near-dup
-    -> shard/pack -> persist,
+    1 score/filter -> 2 exact dedup
+    -> (3 text near-dup ∥ 4 embedding near-dup) -> 5 shard/pack
+    -> 6 persist: config -> DOCS
+         -> (FINGERPRINTS ∥ LSH_INDEX ∥ SIGN_INDEX ∥ stat counts) -> LOG mark,
 
 touching history ONLY through persisted, probe-joinable indexes:
 
@@ -29,6 +31,19 @@ observation metric in the returned stats is the auditable evidence —
 it counts rows entering the signature stage IN the job that runs it
 (Spark Observation API, no second scan), so a test can assert day 2
 shingled only day 2's docs.
+
+Independent branches run concurrently (``pipeline.fan_out``, the same
+mechanism as ``Pipeline.run_orders``): stages 3 and 4 both start from
+the exact-dedup survivors (stage 4's pairs touching a text-dropped doc
+are removed afterwards, which gives exactly the sequential result), and
+the index appends run side by side once DOCS has landed. The branches
+inherit the caller's job group and tags. A failing branch does not
+cancel its siblings: the run waits for all of them and raises the first
+failure in branch order (the text stage before the embedding stage), so
+no write is in flight when ``run`` raises. Stages 3 and 4 write nothing;
+a failure during the persist fan-out leaves DOCS and some indexes on
+disk without the LOG mark, which the crash-replay healing in ``run``
+completes.
 
 Idempotency mirrors ``Pipeline``: every write is ``append_once`` on the
 layer's natural key, and a ``_corpus_log`` mark short-circuits a replay
@@ -52,6 +67,7 @@ from batch_data_pipeline_exercise_spark.operators import dedup, graph, similarit
 from batch_data_pipeline_exercise_spark.operators.similarity import LshCandidateBudgetError
 from batch_data_pipeline_exercise_spark.operators.quality import observe_load_metrics
 from batch_data_pipeline_exercise_spark.operators.sampling import assign_packing_bins
+from batch_data_pipeline_exercise_spark.plans.pipeline import fan_out
 from batch_data_pipeline_exercise_spark.sources.warehouse import Warehouse
 
 
@@ -270,9 +286,9 @@ class CorpusPipeline:
         holds rows — not only the indexes (whose rows embed band keys)
         but DOCS/FINGERPRINTS too, whose rows embed the near-dup
         SURVIVOR SELECTION made under the config (r12 advice: ``_finish``
-        appends DOCS and FINGERPRINTS before the first index append, so
-        a crash in that window followed by a resized retry would leave
-        DOCS rows chosen under the old config that nothing ever
+        appends DOCS before any index, and FINGERPRINTS alongside them,
+        so a crash in that window followed by a resized retry would
+        leave DOCS rows chosen under the old config that nothing ever
         reconciles). A config row with NO layer rows at all (a crash
         between the config write and the DOCS append) constrains
         nothing — a resized retry proceeds and ``_record_sketch_config``
@@ -365,13 +381,17 @@ class CorpusPipeline:
 
     # -- near-dup retention: cluster verified pairs, drop non-canonical new --
 
-    def _dup_drops(self, pairs: DataFrame, new_ids: DataFrame) -> DataFrame:
+    def _dup_drops(
+        self, pairs: DataFrame, new_ids: DataFrame, max_edges: int | None = None
+    ) -> DataFrame:
         """(doc_id) rows to drop from the increment, given verified dup
         pairs (id1, id2) and the increment's id set. Components with a
         prior (retained) member drop all their new docs; all-new
-        components keep their min id."""
+        components keep their min id. ``max_edges``: see
+        ``graph.connected_components``."""
         cc = graph.connected_components(
-            pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
+            pairs.select(F.col("id1").alias("src"), F.col("id2").alias("dst")),
+            max_edges=max_edges,
         )
         flagged = cc.join(
             new_ids.select(F.col("doc_id").alias("id"), F.lit(True).alias("__new")),
@@ -434,14 +454,25 @@ class CorpusPipeline:
         before launching them (default ``"auto"`` — see ``_budget``); an
         over-budget increment raises ``CorpusContractError`` carrying
         the operator's exact collision count and sizing suggestion, so a
-        nightly run refuses in seconds instead of dying mid-spill."""
+        nightly run refuses in seconds instead of dying mid-spill.
+
+        The text and embedding near-dup stages run concurrently on the
+        exact-dedup survivors, and the embedding stage's pairs that touch
+        a text-dropped doc are removed afterwards: the kept docs, pairs
+        and indexes are exactly those of running the stages one after the
+        other. Two visible consequences: the embedding candidate budget
+        prices the exact-dedup survivors (a superset of the text
+        survivors by the text-drop set), so it can refuse slightly
+        earlier and never later; and a malformed vector on a
+        text-dropped doc reaches the sketch kernel and raises its
+        ``ValueError``, as for any other doc."""
         if self._done(ds):
             return {"ds": ds, "already_done": True}
         self._check_sketch_config()
         # crash-replay self-healing: _finish persists config -> DOCS ->
-        # FINGERPRINTS -> LSH -> SIGN -> LOG-mark, so a crash mid-way
-        # leaves this ds's own rows in SOME prior layers while _done is
-        # still false. Probing them on retry would drop the day's docs
+        # {FINGERPRINTS, LSH, SIGN concurrently} -> LOG-mark, so a crash
+        # mid-way leaves this ds's own rows in DOCS and ANY subset of the
+        # indexes while _done is still false. Probing them on retry would drop the day's docs
         # as dups of THEMSELVES (the exact-fingerprint anti-join alone
         # kills the whole increment), appending nothing — the indexes
         # would then be missing this ds's band keys forever, the same
@@ -501,62 +532,71 @@ class CorpusPipeline:
         )
         kept = kept.localCheckpoint()
 
-        # 3. text near-dup: shingle ONLY the increment, probe the stored
-        # band-key index; verify candidates by exact Jaccard over the
-        # colliding docs' texts (new side from the increment, prior side
-        # fetched BY KEY from corpus_docs)
-        prior_lsh = self.wh.read(self.LSH_INDEX) if self.wh.exists(self.LSH_INDEX) else None
-        if prior_lsh is not None and partial_ids is not None:
-            prior_lsh = prior_lsh.join(
-                partial_ids.select(F.col("doc_id").alias("id")), "id", "left_anti"
-            )
         n_increment = int(obs_sh.get["docs_shingled"])
-        try:
-            cand, lsh_union = dedup.incremental_minhash_pairs(
-                prior_lsh, kept, "doc_id",
-                k=self.text_k, bands=self.text_bands,
-                max_candidates=self._budget(
-                    self.max_text_candidates, n_increment, self.text_bands
-                ),
-                threshold=self.jaccard_threshold,
-            )
-        except LshCandidateBudgetError as e:
-            raise CorpusContractError(
-                f"text near-dup stage for ds={ds} refused by the candidate budget "
-                f"(max_text_candidates={self.max_text_candidates!r}): {e}"
-            ) from e
-        cand = cand.localCheckpoint()
-        pair_ids = (
-            cand.select(F.col("id1").alias("doc_id"))
-            .unionByName(cand.select(F.col("id2").alias("doc_id")))
-            .distinct()
-        )
-        sides = kept.select("doc_id", "text")
-        if self.wh.exists(self.DOCS):
-            # partition-pruned: a crash-replay must not fetch the partial
-            # ds's own rows as "prior corpus" texts
-            sides = sides.unionByName(
-                self.wh.read(self.DOCS)
-                .filter(F.col("ds") != ds)
-                .select("doc_id", "text")
-            )
-        colliding = sides.join(pair_ids, "doc_id", "left_semi")
-        # fused array verify (r14): per-doc in-row shingle sets +
-        # array_intersect instead of the exploded exact_jaccard — same
-        # integer counts, bit-identical jaccard, one array per doc
-        # crossing the pair joins instead of one row per (doc, shingle)
-        verified = dedup.verify_jaccard_arrays(
-            cand, colliding, "doc_id", "text", n=3, threshold=self.jaccard_threshold
-        )
-        kept = kept.join(
-            self._dup_drops(verified, kept.select("doc_id")), "doc_id", "left_anti"
-        ).localCheckpoint()
 
-        # 4. embedding near-dup (optional): sketch ONLY the survivors'
-        # vectors, probe the stored sign-sketch index, same retention
-        emb_stats: dict = {}
-        sign_rows = None
-        if embeddings is not None:
+        # 3 ∥ 4: both near-dup stages start from the pinned exact-dedup
+        # survivors and write nothing, so they run concurrently. Stage 4
+        # then sees the text-dropped docs too; the restriction below
+        # removes every pair touching one, which is exact: LSH candidacy
+        # and cosine verification are per-pair functions of the two
+        # vectors, so the pairs among (text survivors ∪ prior) are the
+        # pairs among (exact-dedup survivors ∪ prior) minus those.
+        def text_stage() -> tuple[DataFrame, DataFrame]:
+            # 3. text near-dup: shingle ONLY the increment, probe the
+            # stored band-key index; verify candidates by exact Jaccard
+            # over the colliding docs' texts (new side from the
+            # increment, prior side fetched BY KEY from corpus_docs)
+            prior_lsh = self.wh.read(self.LSH_INDEX) if self.wh.exists(self.LSH_INDEX) else None
+            if prior_lsh is not None and partial_ids is not None:
+                prior_lsh = prior_lsh.join(
+                    partial_ids.select(F.col("doc_id").alias("id")), "id", "left_anti"
+                )
+            try:
+                cand, lsh_union = dedup.incremental_minhash_pairs(
+                    prior_lsh, kept, "doc_id",
+                    k=self.text_k, bands=self.text_bands,
+                    max_candidates=self._budget(
+                        self.max_text_candidates, n_increment, self.text_bands
+                    ),
+                    threshold=self.jaccard_threshold,
+                )
+            except LshCandidateBudgetError as e:
+                raise CorpusContractError(
+                    f"text near-dup stage for ds={ds} refused by the candidate budget "
+                    f"(max_text_candidates={self.max_text_candidates!r}): {e}"
+                ) from e
+            cand = cand.localCheckpoint()
+            pair_ids = (
+                cand.select(F.col("id1").alias("doc_id"))
+                .unionByName(cand.select(F.col("id2").alias("doc_id")))
+                .distinct()
+            )
+            sides = kept.select("doc_id", "text")
+            if self.wh.exists(self.DOCS):
+                # partition-pruned: a crash-replay must not fetch the
+                # partial ds's own rows as "prior corpus" texts
+                sides = sides.unionByName(
+                    self.wh.read(self.DOCS)
+                    .filter(F.col("ds") != ds)
+                    .select("doc_id", "text")
+                )
+            colliding = sides.join(pair_ids, "doc_id", "left_semi")
+            # fused array verify (r14): per-doc in-row shingle sets +
+            # array_intersect instead of the exploded exact_jaccard — same
+            # integer counts, bit-identical jaccard, one array per doc
+            # crossing the pair joins instead of one row per (doc, shingle)
+            verified = dedup.verify_jaccard_arrays(
+                cand, colliding, "doc_id", "text", n=3, threshold=self.jaccard_threshold
+            )
+            drops = self._dup_drops(verified, kept.select("doc_id")).localCheckpoint()
+            return drops, lsh_union
+
+        def embedding_stage() -> tuple[DataFrame | None, DataFrame | None, dict]:
+            # 4. embedding near-dup (optional): sketch ONLY the
+            # increment's vectors, probe the stored sign-sketch index
+            stats: dict = {}
+            if embeddings is None:
+                return None, None, stats
             prior_sign = (
                 self.wh.read(self.SIGN_INDEX) if self.wh.exists(self.SIGN_INDEX) else None
             )
@@ -573,21 +613,18 @@ class CorpusPipeline:
                 # recall hole must be visible at the moment it is
                 # created, not only retrospectively in old runs'
                 # docs_kept_without_embedding stats.
-                emb_stats["corpus_docs_unsketched"] = (
+                stats["corpus_docs_unsketched"] = (
                     self.wh.read(self.DOCS).filter(F.col("ds") != ds).count()
                 )
-            emb_new = embeddings.join(kept.select("doc_id"), "doc_id", "left_semi")
-            if emb_new.limit(1).count() == 0:
+            emb_in = embeddings.join(kept.select("doc_id"), "doc_id", "left_semi")
+            if emb_in.limit(1).count() == 0:
                 # nothing to sketch (banded_sign_sketch derives dim from
-                # the first row); skip the stage, leave the index as-is
-                return self._finish(
-                    kept, ds, None, lsh_union, obs_in, obs_sh, emb_stats,
-                    emb_ids=embeddings.select("doc_id"), partial_ids=partial_ids,
-                )
+                # the first row)
+                return None, None, stats
             try:
-                epairs, sign_union = similarity.incremental_embedding_pairs(
+                pairs, sign_union = similarity.incremental_embedding_pairs(
                     prior_sign,
-                    emb_new,
+                    emb_in,
                     threshold=self.cosine_threshold,
                     bands=self.emb_bands,
                     rows_per_band=self.emb_rows,
@@ -607,10 +644,38 @@ class CorpusPipeline:
                     f"budget (max_embedding_candidates="
                     f"{self.max_embedding_candidates!r}): {e}"
                 ) from e
-            epairs = epairs.localCheckpoint()
+            return pairs.localCheckpoint(), sign_union, stats
+
+        # text first: when both stages fail, the text-stage error is raised
+        (text_drops, lsh_union), (epairs, sign_union, emb_stats) = fan_out(
+            self.spark, text_stage, embedding_stage
+        )
+        kept = kept.join(text_drops, "doc_id", "left_anti").localCheckpoint()
+
+        sign_rows = None
+        if embeddings is not None:
+            emb_new = embeddings.join(kept.select("doc_id"), "doc_id", "left_semi")
+            if epairs is None or emb_new.limit(1).count() == 0:
+                # no text survivor has a vector: skip the stage, leave
+                # the index as-is
+                return self._finish(
+                    kept, ds, None, lsh_union, obs_in, obs_sh, emb_stats,
+                    emb_ids=embeddings.select("doc_id"), partial_ids=partial_ids,
+                )
+            # the restriction: drop every pair with an end in the
+            # text-drop set (see 3 ∥ 4 above)
+            for end in ("id1", "id2"):
+                epairs = epairs.join(
+                    F.broadcast(text_drops.select(F.col("doc_id").alias(end))), end, "left_anti"
+                )
+            # lazy pin: the count below materializes it. Counted before
+            # clustering: the stat needs it anyway, and twice it bounds
+            # the symmetrized edge count
+            epairs = epairs.localCheckpoint(eager=False)
+            n_pairs = epairs.count()
             kept = kept.join(
                 self._dup_drops(
-                    epairs.select("id1", "id2"), kept.select("doc_id")
+                    epairs.select("id1", "id2"), kept.select("doc_id"), max_edges=2 * n_pairs
                 ),
                 "doc_id",
                 "left_anti",
@@ -620,7 +685,7 @@ class CorpusPipeline:
             sign_rows = sign_union.join(
                 kept.select(F.col("doc_id").alias("id")), "id", "left_semi"
             )
-            emb_stats["embedding_pairs"] = epairs.count()
+            emb_stats["embedding_pairs"] = n_pairs
 
         return self._finish(
             kept, ds, sign_rows, lsh_union, obs_in, obs_sh, emb_stats,
@@ -668,20 +733,49 @@ class CorpusPipeline:
         # 6. persist — append_once everywhere, so a crashed/replayed run
         # can never duplicate a layer. Config first: every index row that
         # ever exists is covered by a recorded config, while a run refused
-        # upstream (budget / coverage guard) bakes nothing.
+        # upstream (budget / coverage guard) bakes nothing. DOCS next:
+        # crash healing finds a partial ds through its DOCS rows, so DOCS
+        # lands before any index does. The three index appends and the
+        # stat counts then run concurrently; the LOG mark waits for all
+        # of them.
         self._record_sketch_config()
         self.wh.append_once(kept, self.DOCS, keys=["doc_id"], partition_by=["ds"])
-        self.wh.append_once(
-            kept.select("fingerprint_norm", "doc_id"),
-            self.FINGERPRINTS,
-            keys=["fingerprint_norm"],
+
+        def fingerprints() -> None:
+            self.wh.append_once(
+                kept.select("fingerprint_norm", "doc_id"),
+                self.FINGERPRINTS,
+                keys=["fingerprint_norm"],
+            )
+
+        def lsh_index() -> None:
+            new_lsh = lsh_union.join(
+                kept.select(F.col("doc_id").alias("id")), "id", "left_semi"
+            )
+            self.wh.append_once(new_lsh, self.LSH_INDEX, keys=["id", "band"])
+
+        def sign_index() -> None:
+            if sign_rows is not None:
+                self.wh.append_once(sign_rows, self.SIGN_INDEX, keys=["id"])
+
+        def counts() -> tuple[int, int, int]:
+            n_kept = kept.count()
+            # the embedding-coverage hole, made visible: retained docs
+            # with no embedding row this run are in the corpus but NOT in
+            # the sign index — future embedding probes cannot match them.
+            # With no embeddings at all, that is every kept doc (legal
+            # only while the corpus has never started embedding dedup —
+            # see run()'s guard).
+            unsketched = (
+                n_kept
+                if emb_ids is None
+                else kept.select("doc_id").join(emb_ids, "doc_id", "left_anti").count()
+            )
+            return n_kept, unsketched, self.wh.read(self.DOCS).count()
+
+        *_, (n_kept, unsketched, corpus_total) = fan_out(
+            self.spark, fingerprints, lsh_index, sign_index, counts
         )
-        new_lsh = lsh_union.join(
-            kept.select(F.col("doc_id").alias("id")), "id", "left_semi"
-        )
-        self.wh.append_once(new_lsh, self.LSH_INDEX, keys=["id", "band"])
-        if sign_rows is not None:
-            self.wh.append_once(sign_rows, self.SIGN_INDEX, keys=["id"])
         self._mark(ds)
         if partial_ids is not None:
             # the healing masks are consumed; release the pinned
@@ -689,17 +783,6 @@ class CorpusPipeline:
             # session's lifetime (r13 advice)
             partial_ids.unpersist()
 
-        n_kept = kept.count()
-        # the embedding-coverage hole, made visible: retained docs with no
-        # embedding row this run are in the corpus but NOT in the sign
-        # index — future embedding probes cannot match them. With no
-        # embeddings at all, that is every kept doc (legal only while the
-        # corpus has never started embedding dedup — see run()'s guard).
-        unsketched = (
-            n_kept
-            if emb_ids is None
-            else kept.select("doc_id").join(emb_ids, "doc_id", "left_anti").count()
-        )
         stats = {
             "ds": ds,
             "already_done": False,
@@ -707,7 +790,7 @@ class CorpusPipeline:
             "docs_shingled": int(obs_sh.get["docs_shingled"]),
             "docs_kept": n_kept,
             "docs_kept_without_embedding": unsketched,
-            "corpus_total": self.wh.read(self.DOCS).count(),
+            "corpus_total": corpus_total,
             **emb_stats,
         }
         # the day is fully persisted and the stats are plain values — the

@@ -8,7 +8,7 @@ lazy DAG provides the ordering inside each write; between writes the
 runner keeps the reference's task graph, including its fan-out: after
 staging, ``process_orders.py:115`` runs ``[dim, fact]`` in parallel, and
 ``run_orders`` likewise runs three independent branches concurrently
-(``_fan_out``) once ``stg_orders`` is written:
+(``fan_out``) once ``stg_orders`` is written:
 
 - the ``events_orders`` append and the ``dim_orders`` rebuild from it;
 - the ``_fact_dates_rejects`` dead-letter probe and its append;
@@ -42,6 +42,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -54,6 +55,19 @@ from batch_data_pipeline_exercise_spark.operators.scd2 import scd2_from_events, 
 from batch_data_pipeline_exercise_spark.plans.dates import build_dim_dates
 from batch_data_pipeline_exercise_spark.sources.csv_feed import read_csv_feed
 from batch_data_pipeline_exercise_spark.sources.warehouse import Warehouse
+
+
+def fan_out(spark: SparkSession, *branches: Callable[[], Any]) -> list[Any]:
+    """Run independent branches concurrently, each on a thread that
+    inherits this thread's job group, job tags and local properties
+    (captured when the branch is wrapped), so their Spark jobs are
+    attributed like the caller's own. Waits for every branch, then
+    re-raises the first failure in branch order: no write is still in
+    flight when this returns or raises. Returns the branches' results in
+    branch order."""
+    with ThreadPoolExecutor(max_workers=len(branches)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(b)) for b in branches]
+    return [f.result() for f in futures]
 
 
 class Pipeline:
@@ -109,18 +123,6 @@ class Pipeline:
         self._runs_since_recycle = 0
         self.session_recycles += 1
         return self.spark
-
-    def _fan_out(self, *branches: Callable[[], None]) -> None:
-        """Run independent branches concurrently, each on a thread that
-        inherits this thread's job group, job tags and local properties
-        (captured when the branch is wrapped), so their Spark jobs are
-        attributed like the caller's own. Waits for every branch, then
-        re-raises the first failure in branch order: no write is still in
-        flight when this returns or raises."""
-        with ThreadPoolExecutor(max_workers=len(branches)) as pool:
-            futures = [pool.submit(inheritable_thread_target(self.spark)(b)) for b in branches]
-        for f in futures:
-            f.result()
 
     def _maybe_recycle(self) -> None:
         """Called at the end of each run_* (a layer boundary: everything
@@ -241,7 +243,7 @@ class Pipeline:
         # the reference's [dim, fact] fan-out (process_orders.py:115): the
         # three branches write disjoint tables and read only stg_orders,
         # dim_dates and their own table
-        self._fan_out(dim_orders, dead_letter, fact_orders_created)
+        fan_out(self.spark, dim_orders, dead_letter, fact_orders_created)
         self._maybe_recycle()
 
     # -- inventory feed (reference README.md:55-61) -------------------------

@@ -496,10 +496,11 @@ def test_corpus_cli_sizing_refusal_uses_error_contract(spark, corpus_wh, tmp_pat
     assert err["ok"] is False and "sketch width" in err["error"]
 
 
-#: _finish's persist order is config -> DOCS -> FINGERPRINTS -> LSH ->
-#: SIGN -> LOG-mark; a crash after layer X leaves everything through X
-#: on disk and everything after missing. Each window is simulated by
-#: completing day 1 and erasing the post-X layers.
+#: _finish persists config -> DOCS -> {FINGERPRINTS, LSH, SIGN written
+#: concurrently} -> LOG-mark, so a crash after DOCS leaves DOCS plus ANY
+#: subset of the three indexes on disk, and never the LOG mark. Each
+#: window names the layers missing at the crash; it is simulated by
+#: completing day 1 and erasing them.
 CRASH_WINDOWS = {
     "after_docs": (
         CorpusPipeline.FINGERPRINTS, CorpusPipeline.LSH_INDEX,
@@ -509,6 +510,13 @@ CRASH_WINDOWS = {
         CorpusPipeline.LSH_INDEX, CorpusPipeline.SIGN_INDEX, CorpusPipeline.LOG,
     ),
     "after_lsh": (CorpusPipeline.SIGN_INDEX, CorpusPipeline.LOG),
+    "after_docs_lsh_only": (
+        CorpusPipeline.FINGERPRINTS, CorpusPipeline.SIGN_INDEX, CorpusPipeline.LOG,
+    ),
+    "after_docs_sign_only": (
+        CorpusPipeline.FINGERPRINTS, CorpusPipeline.LSH_INDEX, CorpusPipeline.LOG,
+    ),
+    "after_indexes": (CorpusPipeline.LOG,),
 }
 
 
@@ -529,8 +537,8 @@ def _simulate_crash(spark, wh_root, window: str):
 
 
 def test_partial_ds_resized_retry_is_refused(spark, corpus_wh):
-    """r12 advice: _finish appends DOCS/FINGERPRINTS before the first
-    index append, so a crash in that window leaves survivor rows chosen
+    """r12 advice: _finish appends DOCS before any index append, so a
+    crash in that window leaves survivor rows chosen
     under the recorded config. A RESIZED retry must be refused — the
     old rule (config binding only while an index exists) would have
     rebaked the config over DOCS rows nothing ever reconciles."""

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from batch_data_pipeline_exercise_spark.operators import graph
@@ -73,3 +75,35 @@ def test_pagerank_scaled_deterministic_and_ranks_hubs(spark):
     assert a[1] == a[2] == a[5]  # symmetric leaves tie exactly
     assert a[8] == a[9]  # detached pair symmetric
     assert all(v > 0 for v in a.values())
+
+
+def _jobs_and_labels(spark, edges, **kwargs):
+    sc = spark.sparkContext
+    group = f"cc-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = comp_map(graph.connected_components(edges, **kwargs))
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+@pytest.mark.parametrize("side", ["broadcast", "shuffle"])
+def test_max_edges_bound_skips_the_count_with_identical_labels(spark, monkeypatch, side):
+    # an upper bound on the symmetrized edge count replaces the upfront
+    # count job; it only picks the strategy, so labels cannot change
+    pairs = [(2, 3), (3, 4), (7, 8), (9, 1), (5, 9)]
+    edges = spark.createDataFrame(pairs, "src int, dst int")
+    bound = 2 * len(pairs)
+    if side == "shuffle":
+        # force the shuffle strategy for both calls with a gate below
+        # the graph's real size
+        monkeypatch.setattr(graph, "CC_BROADCAST_MAX_EDGES", bound - 1)
+    counted_jobs, counted = _jobs_and_labels(spark, edges)
+    bounded_jobs, bounded = _jobs_and_labels(spark, edges, max_edges=bound)
+    assert bounded == counted == {1: 1, 5: 1, 9: 1, 2: 2, 3: 2, 4: 2, 7: 7, 8: 7}
+    # the count is two jobs under adaptive execution: the distinct's
+    # shuffle map stage, then the count itself
+    assert bounded_jobs == counted_jobs - 2
+
