@@ -20,6 +20,19 @@ from batch_data_pipeline_exercise_spark import compat
 # Number of local cores; overridable the same way bench.py is driven.
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
+#: Entries in Spark's generated-class cache (``spark.sql.codegen.cache.
+#: maxEntries``, default 100). The nightly batches re-run the same plans
+#: each day with only ``ds``/``ts`` changed, so the cache must hold a
+#: whole day's classes or LRU eviction cycles and Janino recompiles every
+#: class every day (and the JIT re-warms each fresh class). Measured
+#: working sets (an entry per class and class loader, so driver and
+#: executor threads each hold one): about 250 entries over dwh days 0-1
+#: and about 400 over corpus days 0-1; at 100, every dwh day compiled
+#: about 205 classes and every corpus day about 330. 1000 also holds both
+#: pipelines in one session. A static conf: Spark reads it once per JVM,
+#: so it must be set on the builder.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = "batch-data-pipeline-exercise-spark",
@@ -38,6 +51,8 @@ def get_spark(
     - ``autoBroadcastJoinThreshold`` stays at default (10 MB); small dims
       (dim_dates is 29k rows) broadcast automatically, and we add explicit
       ``F.broadcast`` hints on known-small sides anyway.
+    - the generated-class cache holds a whole day's classes
+      (``CODEGEN_CACHE_ENTRIES``), so a daily re-run reuses them.
     """
     builder = SparkSession.builder.appName(app_name)
     if master:
@@ -65,6 +80,7 @@ def get_spark(
         # would otherwise land on one core (row-group permitting)
         "spark.sql.files.minPartitionNum": str(shuffle_partitions or 32),
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
     }
     # Images without an installed google.protobuf (a transformWithState
     # dependency pyspark doesn't declare): make the vendored fallback
@@ -76,6 +92,14 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles so far in this session's JVM: Spark updates its
+    compilation-time timer once per generated class it compiles, so a
+    delta of this count is the number of cache misses in between."""
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return codegen.METRIC_COMPILATION_TIME().getCount()
 
 
 #: keys ``rebuild_session`` passes to ``get_spark`` explicitly — replaying

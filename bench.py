@@ -2,7 +2,8 @@
 """Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR.
 
 Prints ONE COMPACT JSON LINE PER QUERY as it settles —
-``{"q": name, "wall": s, "cpu": s, "shuffle_mb": m, "input_mb": m}`` —
+``{"q": name, "wall": s, "codegen_compiles": n, "cpu": s, "shuffle_mb": m,
+"input_mb": m}`` —
 then the compact headline as the LAST line of stdout:
 ``{"metric": ..., "value": N, "unit": "sec", "queries": {name: sec}, "sf": ...}``.
 The driver tail-captures stdout with a fixed window that truncates
@@ -18,7 +19,9 @@ absorbs JVM/codegen startup so numbers reflect steady-state throughput.
 Besides min-of-3 wall seconds, each per-query line carries executor
 counters read from the Spark UI REST API (mean over the 3 runs):
 ``cpu`` (executor CPU seconds), ``shuffle_mb`` (shuffle write),
-``input_mb`` (scan bytes). Wall time on a shared box swings
+``input_mb`` (scan bytes), and ``codegen_compiles``: the generated
+classes Janino compiled over the 3 runs (generated-class cache misses).
+Wall time on a shared box swings
 with host load (observed: identical plans, 22-37 s totals across
 runs); the counters are deterministic per plan, so round-over-round
 perf comparisons should read them first and treat wall as the tiebreak.
@@ -39,7 +42,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from pyspark.sql import functions as F
 
 from batch_data_pipeline_exercise_spark.plans.registry import REGISTRY
-from batch_data_pipeline_exercise_spark.session import get_spark
+from batch_data_pipeline_exercise_spark.session import codegen_compiles, get_spark
 
 
 def _stage_totals(ui_url: str) -> dict[str, float] | None:
@@ -308,13 +311,17 @@ def main() -> None:
     mid_at = len(headline) // 2  # mid calibration leg after this many queries
     for qi, q in enumerate(headline):
         best = float("inf")
+        compiles0 = codegen_compiles(spark)
         for _ in range(3):
             t0 = time.perf_counter()
             q.fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
             best = min(best, time.perf_counter() - t0)
         timings[q.name] = round(best, 3)
         _clear_session_state(spark)
-        line: dict[str, object] = {"q": q.name, "wall": round(best, 3)}
+        line: dict[str, object] = {
+            "q": q.name, "wall": round(best, 3),
+            "codegen_compiles": codegen_compiles(spark) - compiles0,
+        }
         if prev is not None:
             cur = _settled_totals(ui_url)
             if cur is None:
