@@ -224,28 +224,6 @@ def main(argv: list[str] | None = None) -> int:
     p_aud.add_argument("--limit", type=int, default=10000, help="max group rows printed")
     p_aud.add_argument("--warehouse", required=True)
 
-    p_kmv = sub.add_parser(
-        "stream-kmv",
-        help="fold event JSONL drops (events_*.jsonl) into the per-type "
-        "KMV user sketch table via an availableNow stream — bounded "
-        "state, exact stream==batch parity",
-    )
-    p_kmv.add_argument("--raw", required=True, help="directory of events_*.jsonl drops")
-    p_kmv.add_argument("--checkpoint", required=True)
-    p_kmv.add_argument("--k", type=int, default=64)
-    p_kmv.add_argument("--warehouse", required=True)
-
-    p_nov = sub.add_parser(
-        "stream-novelty",
-        help="score document JSONL drops (docs_*.jsonl) for n-gram novelty "
-        "against the persisted first-occurrence index via an availableNow "
-        "stream — history is never re-tokenized",
-    )
-    p_nov.add_argument("--raw", required=True, help="directory of docs_*.jsonl drops")
-    p_nov.add_argument("--checkpoint", required=True)
-    p_nov.add_argument("--n", type=int, default=5, help="n-gram size")
-    p_nov.add_argument("--warehouse", required=True)
-
     args = ap.parse_args(argv)
 
     if args.cmd == "run" and not _valid_ts(args.ts):
@@ -437,73 +415,6 @@ def main(argv: list[str] | None = None) -> int:
         else:
             print(json.dumps(report))
         return code
-
-    if args.cmd in ("stream-kmv", "stream-novelty"):
-        import glob as _glob
-        import os as _os
-
-        pattern = "events_*.jsonl" if args.cmd == "stream-kmv" else "docs_*.jsonl"
-        if not _os.path.isdir(args.raw):
-            return _err(f"--raw {args.raw!r} is not a directory")
-        if not _glob.glob(_os.path.join(args.raw, pattern)):
-            return _err(f"no {pattern} drops found in --raw {args.raw!r}")
-
-    if args.cmd == "stream-kmv":
-        from batch_data_pipeline_exercise_spark.streaming import kmv_stream
-
-        before = (
-            pipe.wh.read("kmv_user_sketch").count() if pipe.wh.exists("kmv_user_sketch") else 0
-        )
-        try:
-            q = kmv_stream.streaming_kmv_reach(
-                spark, args.raw, pipe.wh, args.checkpoint, k=args.k
-            )
-            q.awaitTermination()
-        except Exception as e:  # k-mismatch guard surfaces as StreamingQueryException
-            return _err(f"stream-kmv failed: {e}")
-        stored = pipe.wh.read("kmv_user_sketch")
-        est = kmv_stream.kmv_estimates(stored.select("event_type", "h"), "event_type", k=args.k)
-        rows = {r["event_type"]: round(r["distinct_est"], 1) for r in est.collect()}
-        print(
-            json.dumps(
-                {
-                    "ok": True,
-                    "sketch_table": "kmv_user_sketch",
-                    "sketch_rows_added": stored.count() - before,
-                    "distinct_est": rows,
-                }
-            )
-        )
-        return 0
-
-    if args.cmd == "stream-novelty":
-        from batch_data_pipeline_exercise_spark.streaming import novelty_stream
-
-        before_docs = pipe.wh.read("doc_novelty").count() if pipe.wh.exists("doc_novelty") else 0
-        before_grams = (
-            pipe.wh.read("gram_first_index").count() if pipe.wh.exists("gram_first_index") else 0
-        )
-        try:
-            q = novelty_stream.streaming_novelty(
-                spark, args.raw, pipe.wh, args.checkpoint, n=args.n
-            )
-            q.awaitTermination()
-        except Exception as e:  # n-mismatch guard surfaces as StreamingQueryException
-            return _err(f"stream-novelty failed: {e}")
-        scored = pipe.wh.read("doc_novelty").count()
-        grams = pipe.wh.read("gram_first_index").count()
-        print(
-            json.dumps(
-                {
-                    "ok": True,
-                    "docs_scored_this_run": scored - before_docs,
-                    "docs_scored_total": scored,
-                    "index_grams_added": grams - before_grams,
-                    "index_grams_total": grams,
-                }
-            )
-        )
-        return 0
 
     if args.cmd == "corpus":
         import os

@@ -2,11 +2,11 @@
 
 The Spark-side plumbing is real — schemas, Arrow-batched ``mapInPandas``
 transforms, partitioning discipline. The codec step is dual: a real PIL
-decoder behind an optional-import gate (``codec="pil"``/``"auto"``;
-same pattern as streaming/tws.py's protobuf gate) and a deterministic
-fake (``codec="stub"``, the default) so oracle-checked results never
-depend on which codec libraries a cluster image ships. The UDF
-signature, batch shape, and output schema are identical either way.
+decoder behind an optional-import gate (``codec="pil"``/``"auto"``)
+and a deterministic fake (``codec="stub"``, the default) so
+oracle-checked results never depend on which codec libraries a cluster
+image ships. The UDF signature, batch shape, and output schema are
+identical either way.
 
 Scale notes: media blobs make rows wide — transforms here preserve
 partitioning (no shuffle), and callers should keep blob tables
@@ -24,9 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Optional real codec — same gate pattern as the protobuf-dependent
-# transformWithState exemplar (streaming/tws.py): import when present,
-# keep the deterministic stub as the oracle-checked default otherwise.
+# Optional real codec: import when present, keep the deterministic stub
+# as the oracle-checked default otherwise.
 try:
     from PIL import Image as _PILImage
 

@@ -27,10 +27,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # --- KMV (k-minimum-values) primitives -------------------------------------
-# Shared by the batch query (plans/contract5.py event_type_user_overlap_kmv)
-# and the streaming maintenance fold (streaming/kmv_stream.py): ONE hash and
-# ONE hash-space constant, so independently-maintained sketches stay
-# bit-compatible by construction.
+# Used by the batch query (plans/contract5.py event_type_user_overlap_kmv):
+# ONE hash and ONE hash-space constant, so independently-built sketches
+# stay bit-compatible by construction.
 
 KMV_H = 1152921504606846976.0  # 2^60 — the hash-space size as exact double
 

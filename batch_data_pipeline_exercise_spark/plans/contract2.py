@@ -1318,6 +1318,33 @@ def large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def clicks_before_purchases(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
+    """Attribution join: every (click, purchase) of the same user where
+    the click lands in ``[purchase_ts - 1 hour, purchase_ts]``.
+
+    Both inputs carry ``event_id``, ``user_id`` and ``ts``. Output:
+    (user_id, click_ts, purchase_ts, click_event_id, purchase_event_id).
+    """
+    c = clicks.select(
+        F.col("user_id"),
+        F.col("ts").alias("click_ts"),
+        F.col("event_id").alias("click_event_id"),
+    )
+    p = purchases.select(
+        F.col("user_id").alias("p_user_id"),
+        F.col("ts").alias("purchase_ts"),
+        F.col("event_id").alias("purchase_event_id"),
+    )
+    cond = (
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("click_ts") <= F.col("purchase_ts"))
+        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 hour"))
+    )
+    return c.join(p, cond).select(
+        "user_id", "click_ts", "purchase_ts", "click_event_id", "purchase_event_id"
+    )
+
+
 @register(
     "click_purchase_attribution",
     oracle="""
@@ -1332,21 +1359,17 @@ def large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AND c.ts >= p.ts - INTERVAL 1 HOUR
     WHERE c.event_type = 'click' AND p.event_type = 'purchase'
     """,
-    doc="Batch-shaped proof of the stream-stream interval join "
-    "(streaming/joins.py clicks_before_purchases): EVERY click in the "
+    doc="Interval join (clicks_before_purchases): EVERY click in the "
     "hour before a same-user purchase — the attribution-join relaxation "
-    "of as-of. The exact operator runs here on batch frames (watermarks "
-    "are streaming no-ops), so this oracle row pins the event-time range "
-    "predicate the streaming path uses for state eviction.",
+    "of as-of, which keeps only the last click. The event-time range "
+    "predicate bounds each purchase's match set to one hour of the "
+    "user's clicks.",
 )
 def click_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from batch_data_pipeline_exercise_spark.streaming.joins import clicks_before_purchases
-
     e = load(spark, sf_dir, "events")
     out = clicks_before_purchases(
         e.filter(F.col("event_type") == "click"),
         e.filter(F.col("event_type") == "purchase"),
-        window="1 hour",
     )
     return out.select(
         "user_id",

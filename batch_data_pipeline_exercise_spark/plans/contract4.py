@@ -589,7 +589,7 @@ def modal_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Streaming operations support: lateness profiling
+# Event-time lateness profiling
 # ---------------------------------------------------------------------------
 
 
@@ -917,8 +917,8 @@ def user_reach_rolling_7d_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     "exact, order-free bigint — a double credit (cents/n) would sum "
     "in shuffle order and drift in the last ulp whenever a click "
     "touches several purchases. One final division renders currency. "
-    "The event-time-bounded join is the streaming interval-join shape "
-    "run on batch — bounded state, never a full cross product.",
+    "The event-time-bounded join pairs each purchase with at most an "
+    "hour of its user's clicks — never a full cross product.",
 )
 def multi_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
@@ -1164,8 +1164,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     "overlapping windows. The oracle derives the same windows as 3 "
     "phase-shifted tumbling grids (the standard hop = shifted-tumble "
     "identity). Window starts are integer epoch-seconds, so grouping "
-    "keys are exact. The streaming twin is the same expression under "
-    "readStream + watermark.",
+    "keys are exact.",
 )
 def event_hopping_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")

@@ -322,8 +322,7 @@ def event_type_user_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = _KMV_K
     # NULL ids hash to NULL, which sorts FIRST in Spark's window but LAST
     # in DuckDB's ORDER BY — a NULL would permanently occupy a k-min slot
-    # here while the oracle (and streaming fold_kmv, kmv_stream.py) drop
-    # it. Filter at the boundary, mirroring fold_kmv's guard.
+    # here while the oracle drops it. Filter at the boundary.
     h = (
         e.filter(F.col("user_id").isNotNull())
         .select("event_type", sketches.kmv_hash("user_id").alias("h"))

@@ -15,8 +15,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-from batch_data_pipeline_exercise_spark import compat
-
 # Number of local cores; overridable the same way bench.py is driven.
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "*")
 
@@ -71,9 +69,6 @@ def get_spark(
         # producing NULLs at staging; we match that ingestion semantics.
         "spark.sql.ansi.enabled": "false",
         "spark.sql.parquet.compression.codec": "snappy",
-        # Python Data Source connectors (sources/pyds.py) implement
-        # pushFilters; the capability is conf-gated and off by default.
-        "spark.sql.python.filterPushdown.enabled": "true",
         # 128 MB split target — the right granularity for TB-scale scans.
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
         # ...but never fewer scan splits than cores: small benchmark files
@@ -82,11 +77,6 @@ def get_spark(
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
     }
-    # Images without an installed google.protobuf (a transformWithState
-    # dependency pyspark doesn't declare): make the vendored fallback
-    # importable on the driver and, scoped via spark.executorEnv (NOT a
-    # process-wide PYTHONPATH mutation), inside every Python worker.
-    conf.update(compat.worker_env_conf())
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

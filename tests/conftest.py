@@ -6,11 +6,6 @@ import pytest
 
 from batch_data_pipeline_exercise_spark.session import get_spark
 
-# google.protobuf fallback (transformWithState's JVM↔Python state
-# protocol needs it): get_spark() applies compat.worker_env_conf(),
-# which covers the driver AND scopes the worker-side shim to
-# spark.executorEnv.PYTHONPATH — no process-global mutation here.
-
 
 @pytest.fixture(scope="session")
 def spark():

@@ -129,77 +129,6 @@ def test_backfill_refuses_out_of_order_days(capsys, spark, tmp_path):
     assert out["days_run"] == []
 
 
-def test_stream_novelty_subcommand_end_to_end(capsys, spark, tmp_path):
-    raw = tmp_path / "raw"
-    raw.mkdir()
-    with open(raw / "docs_01.jsonl", "w") as f:
-        f.write(json.dumps({"doc_id": 1, "text": "alpha beta gamma delta epsilon zeta"}) + "\n")
-        f.write(json.dumps({"doc_id": 2, "text": "alpha beta gamma delta epsilon zeta"}) + "\n")
-    code = main([
-        "stream-novelty",
-        "--raw", str(raw),
-        "--checkpoint", str(tmp_path / "ckpt"),
-        "--warehouse", str(tmp_path / "wh"),
-    ])
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert code == 0
-    assert out["ok"] and out["docs_scored_this_run"] == 2 and out["index_grams_total"] == 2
-
-
-def test_stream_kmv_subcommand_end_to_end(capsys, spark, tmp_path):
-    raw = tmp_path / "raw"
-    raw.mkdir()
-    with open(raw / "events_01.jsonl", "w") as f:
-        for i in range(20):
-            f.write(json.dumps({"event_id": i, "user_id": 100 + i % 7, "event_type": "click"}) + "\n")
-    code = main([
-        "stream-kmv",
-        "--raw", str(raw),
-        "--checkpoint", str(tmp_path / "ckpt"),
-        "--warehouse", str(tmp_path / "wh"),
-    ])
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert code == 0
-    # 7 distinct users, k=64 → exact regime
-    assert out["ok"] and out["distinct_est"] == {"click": 7.0}
-
-
-def test_stream_subcommands_guard_empty_raw_dir(capsys, spark, tmp_path):
-    raw = tmp_path / "empty"
-    raw.mkdir()
-    code, err = run_cli(capsys, [
-        "stream-novelty", "--raw", str(raw),
-        "--checkpoint", str(tmp_path / "c1"), "--warehouse", str(tmp_path / "w1"),
-    ])
-    assert code == 2 and "no docs_*.jsonl drops" in err["error"]
-    code, err = run_cli(capsys, [
-        "stream-kmv", "--raw", str(raw),
-        "--checkpoint", str(tmp_path / "c2"), "--warehouse", str(tmp_path / "w2"),
-    ])
-    assert code == 2 and "no events_*.jsonl drops" in err["error"]
-
-
-def test_stream_kmv_k_mismatch_refused(capsys, spark, tmp_path):
-    raw = tmp_path / "raw"
-    raw.mkdir()
-    with open(raw / "events_01.jsonl", "w") as f:
-        for i in range(10):
-            f.write(json.dumps({"event_id": i, "user_id": i, "event_type": "view"}) + "\n")
-    code = main([
-        "stream-kmv", "--raw", str(raw), "--k", "64",
-        "--checkpoint", str(tmp_path / "c1"), "--warehouse", str(tmp_path / "wh"),
-    ])
-    assert code == 0
-    capsys.readouterr()
-    with open(raw / "events_02.jsonl", "w") as f:
-        f.write(json.dumps({"event_id": 99, "user_id": 99, "event_type": "view"}) + "\n")
-    code, err = run_cli(capsys, [
-        "stream-kmv", "--raw", str(raw), "--k", "128",
-        "--checkpoint", str(tmp_path / "c1"), "--warehouse", str(tmp_path / "wh"),
-    ])
-    assert code == 2 and "built with k=64" in err["error"]
-
-
 def test_run_refuses_out_of_order_snapshot(capsys, spark, tmp_path):
     """run must apply the same high-watermark rule as backfill: an old
     snapshot replayed over newer SCD2 state corrupts dimension history."""

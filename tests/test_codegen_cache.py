@@ -56,6 +56,15 @@ def test_session_carries_the_cache_size(spark):
     assert session_conf_snapshot(spark)[KEY] == str(CODEGEN_CACHE_ENTRIES)
 
 
+def test_session_sets_no_worker_env_or_python_source_pushdown(spark):
+    # Python workers inherit the driver's environment unchanged (no
+    # spark.executorEnv.PYTHONPATH), and no Python Data Source needs
+    # filter pushdown switched on
+    conf = session_conf_snapshot(spark)
+    assert [k for k in conf if k.startswith("spark.executorEnv.")] == []
+    assert "spark.sql.python.filterPushdown.enabled" not in conf
+
+
 def test_identical_replay_compiles_almost_nothing(spark, tmp_path):
     c0 = codegen_compiles(spark)
     _feed_day(spark, str(tmp_path / "first"))

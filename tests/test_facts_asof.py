@@ -1,4 +1,5 @@
-"""Idempotent fact append (M3) + as-of join operator tests."""
+"""Idempotent fact append (M3), as-of join operator and click/purchase
+interval join tests."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ from batch_data_pipeline_exercise_spark.operators.facts import (
     earliest_per_key,
     idempotent_append_rows,
 )
+from batch_data_pipeline_exercise_spark.plans.contract2 import clicks_before_purchases
 
 
 def test_earliest_per_key(spark):
@@ -198,3 +200,29 @@ def test_asof_null_key_never_matches(spark):
     )
     out = as_of_join(left, right, "k", "lt", "rt").collect()
     assert len(out) == 1 and out[0]["v"] is None
+
+
+def test_clicks_before_purchases_interval_bounds(spark):
+    """Every same-user click in [purchase - 1h, purchase]: the -1h
+    boundary is inclusive; later clicks, clicks over an hour earlier and
+    users without a purchase never match."""
+    clicks = [
+        (1, 10, "2021-03-02 10:00:00"),
+        (2, 10, "2021-03-02 10:40:00"),
+        (3, 10, "2021-03-02 12:00:00"),  # later than any purchase → no match
+        (4, 11, "2021-03-02 09:00:00"),  # >1h before 11's purchase → outside window
+        (5, 12, "2021-03-02 10:30:00"),  # user with no purchase
+    ]
+    purchases = [
+        (100, 10, "2021-03-02 11:00:00"),  # matches clicks 1 (exactly -1h) and 2
+        (101, 11, "2021-03-02 10:30:00"),  # click 4 is 1.5h earlier → no match
+    ]
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "event_id long, user_id long, ts string").withColumn(
+            "ts", F.to_timestamp("ts")
+        )
+
+    rows = clicks_before_purchases(frame(clicks), frame(purchases)).collect()
+    got = {(r["user_id"], r["purchase_event_id"], r["click_event_id"]) for r in rows}
+    assert got == {(10, 100, 1), (10, 100, 2)}

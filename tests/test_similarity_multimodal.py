@@ -426,10 +426,9 @@ def test_incremental_n_new_rows_hint_is_result_identical(spark, vecs):
 
 def test_pil_skip_retirement_tripwire():
     """The one suite skip (test_image_codec_real_pil_decode) exists ONLY
-    because Pillow is uninstallable in this no-network image. Same
-    pattern as the _pbshim retirement tripwire: this test goes RED the
-    moment an image bump ships an importable PIL while the sibling test
-    is still skip-gated — the skip cannot silently outlive its reason.
+    because Pillow is not installed in the test image. This test goes
+    RED the moment an image bump ships an importable PIL while the
+    sibling test is still skip-gated — the skip cannot silently outlive its reason.
     When it fires: nothing to remove in the gate itself (skipif flips
     automatically via multimodal.HAS_PIL); delete THIS tripwire and the
     'documented infeasible' notes that cite the missing-PIL skip
