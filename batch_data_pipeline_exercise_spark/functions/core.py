@@ -64,11 +64,6 @@ def current_at(ts: datetime | str | Column, start: str = "start_time", end: str 
     return (t >= F.col(start)) & (t < F.col(end))
 
 
-def with_processed_date(df: DataFrame, ts_col: str = "processed_time") -> DataFrame:
-    """Partition column for date-partitioned warehouse writes."""
-    return df.withColumn("processed_date", F.to_date(F.col(ts_col)))
-
-
 def plan_partition_count(df: DataFrame) -> int:
     """Partition count of ``df``'s physical plan, read off the cached
     QueryExecution instead of ``df.rdd`` — the PySpark ``.rdd`` property

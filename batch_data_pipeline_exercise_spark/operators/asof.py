@@ -15,10 +15,8 @@ sort — linear, skew-handled by AQE, no per-key blowup, no join-back.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def as_of_join(
@@ -72,7 +70,7 @@ def as_of_join(
     # a NULL right_ts satisfies neither <= nor >= any left_ts, so the
     # row can never match — and left unfiltered it would sort FIRST in
     # the ascending (backward) scan and be carried into left rows by
-    # last(ignorenulls). The cogroup variant drops these rows too.
+    # last(ignorenulls).
     # NULL join KEYS likewise: Window.partitionBy groups NULLs into one
     # partition, but the equi-join semantics this operator mirrors (and
     # every SQL oracle) never match NULL = NULL — drop NULL-key rights
@@ -127,123 +125,3 @@ def as_of_join(
     )
     return out
 
-
-def as_of_join_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    right_prefix: str = "",
-    strict: bool = False,
-) -> DataFrame:
-    """Cogrouped-map alternative: ``left.groupBy(key).cogroup(
-    right.groupBy(key)).applyInPandas(...)`` — Spark's native two-sided
-    per-key pandas operator, which is the DOCUMENTED home for
-    ``pd.merge_asof`` (no union/tag dance: each side arrives as its own
-    frame). Same semantics as ``as_of_join_pandas``; kept as the
-    cogroup-API exemplar and cross-check for the scalable union+window
-    implementation. Scale bound: one shuffle per side on the key, then
-    per-key pandas — each single key's rows must fit in memory; the
-    union+window form remains the default.
-    """
-    lcols, rvals = left.columns, [c for c in right.columns if c != on]
-    out_fields = [left.schema[c] for c in lcols] + [
-        T.StructField(f"{right_prefix}{c}", right.schema[c].dataType) for c in rvals
-    ]
-    out_names = [f.name for f in out_fields]
-    # right columns are renamed to their PREFIXED output names before the
-    # merge — pd.merge_asof would otherwise suffix a name shared with the
-    # left to v_x/v_y and the output selection would fail
-    pref = {c: f"{right_prefix}{c}" for c in rvals}
-    clash = set(lcols) & set(pref.values())
-    if clash:
-        raise ValueError(
-            f"as_of_join_cogroup: output name collision {sorted(clash)} — set right_prefix"
-        )
-    schema = T.StructType(out_fields)
-    pref_ts = pref[right_ts]
-
-    def per_key(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if lpdf.empty:
-            return pd.DataFrame(columns=out_names)
-        # merge_asof rejects NULL keys outright: NULL-ts rows on either
-        # side are unmatched by contract (left keeps NULL right values,
-        # right is ignored) — the union+window form makes the same call
-        # for left rows; filter-then-concat keeps every left row
-        lp = lpdf[lcols]
-        l_ok, l_null = lp[lp[left_ts].notna()], lp[lp[left_ts].isna()]
-        rp = rpdf[[on, *rvals]].rename(columns=pref)[list(pref.values())]
-        rp = rp[rp[pref_ts].notna()]
-        merged = pd.merge_asof(
-            l_ok.sort_values(left_ts),
-            rp.sort_values(pref_ts),
-            left_on=left_ts,
-            right_on=pref_ts,
-            allow_exact_matches=not strict,
-        )
-        if not l_null.empty:
-            merged = pd.concat([merged, l_null.reindex(columns=out_names)])
-        return merged[out_names]
-
-    return left.groupBy(on).cogroup(right.groupBy(on)).applyInPandas(per_key, schema=schema)
-
-
-def as_of_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    right_prefix: str = "",
-    strict: bool = False,
-) -> DataFrame:
-    """Grouped-map alternative: ``pd.merge_asof`` per key via
-    ``applyInPandas`` (the pattern the Spark docs suggest for as-of).
-
-    Same semantics as ``as_of_join`` for unique right timestamps (ties
-    resolve by merge_asof's last-wins rule rather than an explicit
-    tie-break column). Kept as (a) a cross-check oracle for the
-    union+window implementation and (b) the template for per-group pandas
-    logic that SQL can't express. Scale: one shuffle on the key, then
-    per-group pandas — fine when single keys fit in memory; the
-    union+window form has no such per-key bound and stays the default.
-    """
-    lcols, rvals = left.columns, [c for c in right.columns if c != on]
-    clash = set(lcols) & {f"{right_prefix}{c}" for c in rvals}
-    if clash:
-        # same guard as as_of_join_cogroup: duplicate output field names
-        # would otherwise surface later as AMBIGUOUS_REFERENCE downstream
-        raise ValueError(
-            f"as_of_join_pandas: output name collision {sorted(clash)} — set right_prefix"
-        )
-    out_fields = [left.schema[c] for c in lcols] + [
-        T.StructField(f"{right_prefix}{c}", right.schema[c].dataType) for c in rvals
-    ]
-    schema = T.StructType(out_fields)
-    tagged = left.select(F.lit(0).alias("__side"), *[F.col(c) for c in lcols]).unionByName(
-        right.select(
-            F.lit(1).alias("__side"),
-            *[F.col(on)] ,
-            *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in lcols if c != on],
-            *[F.col(c) for c in rvals],
-        ),
-        allowMissingColumns=True,
-    )
-
-    def per_key(pdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = pdf[pdf["__side"] == 0][lcols].sort_values(left_ts)
-        rpdf = pdf[pdf["__side"] == 1][[on, *rvals]].sort_values(right_ts)
-        if lpdf.empty:
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        merged = pd.merge_asof(
-            lpdf,
-            rpdf.drop(columns=[on]),
-            left_on=left_ts,
-            right_on=right_ts,
-            allow_exact_matches=not strict,
-        )
-        merged.columns = [f.name for f in out_fields]
-        return merged
-
-    return tagged.groupBy(on).applyInPandas(per_key, schema=schema)

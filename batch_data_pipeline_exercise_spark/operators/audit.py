@@ -1,4 +1,4 @@
-"""Table auditing: order-free content checksums and file-level provenance.
+"""Table auditing: order-free content checksums.
 
 Verifying that two copies of a 100 TB table agree cannot sort either
 side. The fingerprint here is DISTRIBUTIVE and ORDER-FREE: per row, a
@@ -61,19 +61,3 @@ def content_checksum(
     if group_cols:
         return base.groupBy(*group_cols).agg(*aggs)
     return base.agg(*aggs)
-
-
-def file_audit(df: DataFrame, cols: list[Column | str]) -> DataFrame:
-    """Per-part-file provenance audit: (file, n_rows, checksum) keyed by
-    the scan's ``input_file_name`` basename. The ingestion-side ledger:
-    re-reading a file must reproduce its (count, checksum) row, a
-    corrupt or re-written part-file shows up as one changed row. Only
-    meaningful directly over a file scan (input_file_name is empty
-    after a shuffle)."""
-    base = df.select(
-        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("file"),
-        row_fingerprint(cols).alias("__fp"),
-    )
-    return base.groupBy("file").agg(
-        F.count(F.lit(1)).alias("n_rows"), F.bit_xor("__fp").alias("checksum")
-    )

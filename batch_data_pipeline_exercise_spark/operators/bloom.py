@@ -94,13 +94,6 @@ def bloom_build(
     return BloomFilter(words=words, m_bits=m_bits, k=k)
 
 
-# Back-compat name: earlier callers built the raw word table directly.
-def bloom_words(
-    df: DataFrame, col: str, m_bits: int = DEFAULT_M_BITS, k: int = DEFAULT_K
-) -> BloomFilter:
-    return bloom_build(df, col, m_bits, k)
-
-
 def bloom_prune(df: DataFrame, col: str, bf: BloomFilter) -> DataFrame:
     """Rows of ``df`` whose ``col`` MIGHT be in the set ``bf`` encodes.
 

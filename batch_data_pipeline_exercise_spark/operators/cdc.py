@@ -9,9 +9,9 @@ an SCD2 merge, an incremental downstream refresh, or a reverse-ETL sink,
 without shipping the full snapshot again.
 
 One full-outer join on the key (co-partitioned, bucketable — the same
-scale shape as ``merge_into``), presence classified by explicit markers
-(NULL-key rows behave like any other row), change detected null-safely
-per compared column.
+scale shape as ``scd2_snapshot_merge``), presence classified by
+explicit markers (NULL-key rows behave like any other row), change
+detected null-safely per compared column.
 """
 
 from __future__ import annotations

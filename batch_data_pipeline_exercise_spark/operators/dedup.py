@@ -349,48 +349,6 @@ def lsh_occupancy_stats(band_keys: DataFrame, bands: int) -> DataFrame:
     )
 
 
-def exact_jaccard(pairs: DataFrame, shingles: DataFrame) -> DataFrame:
-    """True Jaccard for given pairs via two equi joins on (id, shingle) —
-    computed ONLY for candidates, not all pairs. ``shingles`` must be
-    distinct per doc (set semantics).
-
-    The shingle table is semi-filtered to candidate docs up front:
-    candidates are a vanishing fraction of a real corpus, so the heavy
-    (shingle == shingle) intersection join and the per-doc counts touch
-    only candidate docs' shingles, never the full table. The filtered
-    table is then PINNED (eager localCheckpoint): three join branches
-    consume it (per-doc counts, intersection a-side, b-side), and
-    without the pin each branch re-executes the semi-join + explode +
-    distinct subtree — measured ~3× the verification cost inside
-    minhash_near_dups at sf0.1. Post-filter it is candidate-docs-only
-    tiny, so the pin is free at any corpus size."""
-    ids = (
-        pairs.select(F.col("id1").alias("id"))
-        .unionByName(pairs.select(F.col("id2").alias("id")))
-        .distinct()
-    )
-    shingles = shingles.join(ids, "id", "leftsemi").localCheckpoint()
-    counts = shingles.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = shingles.alias("a"), shingles.alias("b")
-    inter = (
-        pairs.join(a, pairs.id1 == F.col("a.id"))
-        .join(b, (pairs.id2 == F.col("b.id")) & (F.col("a.shingle") == F.col("b.shingle")))
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    return (
-        pairs.join(inter, ["id1", "id2"], "left")
-        .na.fill({"n_inter": 0})
-        .join(counts.withColumnRenamed("id", "id1").withColumnRenamed("n_sh", "n1"), "id1")
-        .join(counts.withColumnRenamed("id", "id2").withColumnRenamed("n_sh", "n2"), "id2")
-        .select(
-            "id1",
-            "id2",
-            (F.col("n_inter") / (F.col("n1") + F.col("n2") - F.col("n_inter"))).alias("jaccard"),
-        )
-    )
-
-
 def minhash_near_dups(
     df: DataFrame,
     id_col: str,
@@ -419,11 +377,12 @@ def minhash_near_dups(
     suggestion instead of a cluster-scale surprise). A passing scout
     changes nothing downstream.
 
-    Verification is the FUSED ARRAY form, not the exploded
-    ``exact_jaccard``: each candidate doc's distinct shingle SET is
-    built as one in-row array (for candidate docs only — a semi-join on
-    the pair ids prunes the corpus first), and each pair joins to its
-    two docs' arrays and computes |A∩B| with one ``array_intersect``.
+    Verification is the FUSED ARRAY form (``verify_jaccard_arrays``),
+    not an exploded (doc, shingle) relation: each candidate doc's
+    distinct shingle SET is built as one in-row array (for candidate
+    docs only — a semi-join on the pair ids prunes the corpus first),
+    and each pair joins to its two docs' arrays and computes |A∩B| with
+    one ``array_intersect``.
     That replaces the exploded machinery (explode + pin + per-doc
     counts groupBy + two-join shingle-equality intersection + groupBy +
     three reassembly joins) with two equi joins and one in-row set
@@ -434,8 +393,7 @@ def minhash_near_dups(
     inner joins drop exactly the rows the old inner joins dropped).
     At cluster scale it also shuffles strictly fewer bytes: one array
     per doc instead of one row per (doc, shingle) with the shingle
-    string repeated. ``exact_jaccard`` remains the entry point for
-    callers that already hold an exploded shingle relation.
+    string repeated.
 
     The candidate pair list is eagerly pinned (``localCheckpoint``)
     before verification: three consumers (the id semi-join and the two
@@ -481,8 +439,8 @@ def verify_jaccard_arrays(
 ) -> DataFrame:
     """Fused array-intersect Jaccard verify: (id1, id2, jaccard) for the
     given candidate pairs, joined against per-doc in-row shingle SETS —
-    the 2×-cheaper replacement for the exploded ``exact_jaccard``
-    machinery (r14 work log entry 6: |A∩B| = ``size(array_intersect)``,
+    the 2×-cheaper replacement for an exploded (doc, shingle) join
+    intersection (r14 work log entry 6: |A∩B| = ``size(array_intersect)``,
     set sizes = ``size``; same integer counts, so the one double
     division is bit-identical).
 
@@ -541,10 +499,10 @@ def ngram_jaccard_pairs(
     falls out of the candidate join itself (aggregate its rows per pair
     instead of distinct-then-reintersect), and only the frequent-side
     shingles — by construction a per-doc handful — need a per-pair
-    join. Replacing the old full-set ``exact_jaccard`` re-intersection
-    with this split measured 105 → ~30 executor-CPU s at sf0.1 with
-    byte-identical output (at that SF no shingle exceeds df 64, so the
-    frequent term is empty and the re-intersection was pure re-work)."""
+    join. Replacing a full-set exploded re-intersection with this split
+    measured 105 → ~30 executor-CPU s at sf0.1 with byte-identical output
+    (at that SF no shingle exceeds df 64, so the frequent term is empty
+    and the re-intersection was pure re-work)."""
     sh = word_shingles(df, id_col, text_col, n).localCheckpoint()
     gen, freq_sh = sh, None
     if max_df is not None:
@@ -600,37 +558,6 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 
 
-def char_shingles(
-    df: DataFrame, id_col: str, text_col: str = "text", n: int = 5, distinct: bool = True
-) -> DataFrame:
-    """Character n-gram shingles — the CJK-safe variant.
-
-    Word shingles assume whitespace tokenization, which CJK text (present
-    in the reference's sample data) doesn't have; character n-grams are
-    the standard fallback. Same output contract as ``word_shingles``, so
-    every downstream stage (minhash, LSH, Jaccard) composes unchanged.
-    """
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), "\\s+", " ")
-    # bind the normalized string once per row — referenced directly from
-    # the lambda, the whitespace regex would re-run per CHARACTER
-    # position (same O(len²) pathology as the word-shingle kernel)
-    shingles = text_ops.bind_once(
-        norm,
-        lambda nm: F.filter(
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(F.length(nm) - n + 1, F.lit(1))),
-                lambda i: F.substring(nm, i, n),
-            ),
-            lambda s: F.length(s) > 0,
-        ),
-    )
-    # within-row dedup instead of a post-explode global distinct — same
-    # rows for one-row-per-id inputs, no exchange (see word_shingles)
-    if distinct:
-        shingles = F.array_distinct(shingles)
-    return df.select(F.col(id_col).alias("id"), F.explode(shingles).alias("shingle"))
-
-
 def _hex_digit_val(hexstr: Column, pos: int) -> Column:
     """Value 0-15 of the pos-th (1-based) hex char — portable string op."""
     return (F.instr(F.lit("0123456789abcdef"), F.substring(hexstr, pos, 1)) - 1).cast("int")
@@ -675,43 +602,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     return per_doc.select("id", hi.cast("bigint").alias("simhash_hi"), lo.cast("bigint").alias("simhash_lo"))
 
 
-def simhash_near_dups(df: DataFrame, id_col: str, text_col: str = "text", max_hamming: int = 3) -> DataFrame:
-    """Near-dups by SimHash: band the 64 bits into four 16-bit chunks
-    (pigeonhole: hamming ≤ 3 ⇒ ≥1 identical chunk), bucket-join on chunk
-    equality, verify with bit_count(xor) over both halves.
-
-    The simhash table is pinned before the self-join for the same
-    reason as ``lsh_candidate_pairs``: the broadcast side defeats
-    exchange reuse, and un-pinned the 64-bit-vote aggregation over every
-    token runs twice."""
-    s = simhash(df, id_col, text_col).localCheckpoint()
-    chunks = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftright(F.col("simhash_hi" if c >= 2 else "simhash_lo"), (c % 2) * 16)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias("ckey"),
-            )
-            for c in range(4)
-        ]
-    )
-    banded = s.select("id", "simhash_hi", "simhash_lo", F.explode(chunks).alias("c")).select(
-        "id", "simhash_hi", "simhash_lo", F.col("c.chunk").alias("chunk"), F.col("c.ckey").alias("ckey")
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    ham = F.bit_count(F.col("a.simhash_hi").bitwiseXOR(F.col("b.simhash_hi"))) + F.bit_count(
-        F.col("a.simhash_lo").bitwiseXOR(F.col("b.simhash_lo"))
-    )
-    return (
-        a.join(b, ["chunk", "ckey"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"), ham.alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Incremental dedup (batch-over-batch)
 # ---------------------------------------------------------------------------
@@ -754,7 +644,7 @@ def incremental_minhash_pairs(
 
     ``prior_band_keys`` None (first batch) degrades to the full
     self-join. Exact-Jaccard verification stays the caller's second
-    step (``exact_jaccard``) — it needs the colliding docs' text, which
+    step (``verify_jaccard_arrays``) — it needs the colliding docs' text, which
     a real pipeline fetches by key from the corpus store.
 
     ``max_candidates`` (opt-in) prices the increment's candidate join

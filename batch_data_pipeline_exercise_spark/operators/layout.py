@@ -1,4 +1,4 @@
-"""Data-layout operators: space-filling-curve (Z-order) clustering for
+"""Data-layout keys: the space-filling-curve (Z-order) key for
 multi-dimensional data skipping.
 
 Parquet min/max statistics prune files only when rows with nearby values
@@ -6,7 +6,7 @@ live in the same files. A sort lays data out well for ONE column;
 Z-ordering interleaves the bits of several columns so that a range
 filter on ANY of them touches a small fraction of files — the layout
 trick behind Delta/Iceberg OPTIMIZE ZORDER, built here from plain
-column expressions + repartitionByRange (no engine extension needed).
+column expressions (no engine extension needed).
 
 The Morton key is pure integer bit arithmetic — deterministic,
 cross-engine reproducible (the SQL oracle computes the same key), and
@@ -15,7 +15,7 @@ cheap (no UDF, stays inside codegen).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -48,23 +48,3 @@ def morton_key_sql(col_exprs: list[str], bits: int = 16) -> str:
         for i in range(bits):
             terms.append(f"(CAST({e} AS BIGINT) & {1 << i}) * {1 << (i * (n - 1) + j)}")
     return "(" + " + ".join(terms) + ")"
-
-
-def zorder_by(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = 16,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Cluster rows by their Z-order key so a write produces files whose
-    per-column min/max ranges are tight on EVERY clustered column.
-
-    repartitionByRange on the key puts adjacent curve positions in the
-    same partition (range boundaries come from a sampled sketch — layout
-    only, never correctness); sortWithinPartitions tightens row-group
-    stats inside each file. The key column is dropped before returning —
-    the layout is the product, not the value."""
-    key = morton_key([F.col(c) for c in cols], bits).alias("__zkey")
-    clustered = df.withColumn("__zkey", key)
-    p = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return clustered.repartitionByRange(p, "__zkey").sortWithinPartitions("__zkey").drop("__zkey")

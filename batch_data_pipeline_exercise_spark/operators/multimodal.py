@@ -135,18 +135,6 @@ def extract_image_features(
     return df.select(id_col, content_col).mapInPandas(batches, schema=IMAGE_FEATURES_SCHEMA)
 
 
-def resize_images(df: DataFrame, max_side: int, content_col: str = "content") -> DataFrame:
-    """Resize stub: passes content through and records intended target
-    dims (real impl would re-encode). Keeps the contract visible/testable."""
-    feats = extract_image_features(df)
-    scale = F.least(F.lit(1.0), F.lit(max_side) / F.greatest("width", "height"))
-    return feats.select(
-        "media_id",
-        F.round(F.col("width") * scale).cast("int").alias("target_width"),
-        F.round(F.col("height") * scale).cast("int").alias("target_height"),
-    )
-
-
 def sample_video_frames(df: DataFrame, every_ms: int, id_col: str = "media_id") -> DataFrame:
     """Frame-sampling plumbing: one output row per sampled timestamp,
     generated JVM-side with sequence/explode; frame decode itself is the

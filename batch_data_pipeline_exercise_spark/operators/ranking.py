@@ -152,18 +152,6 @@ def dense_rank_map(
     return with_global_row_number(df.select(col).distinct(), [col], out_col, num_partitions)
 
 
-def with_global_dense_rank(
-    df: DataFrame, col: str, out_col: str = "rank", num_partitions: int | None = None
-) -> DataFrame:
-    """``DENSE_RANK() OVER (ORDER BY col)`` via a broadcast join against
-    ``dense_rank_map`` — one narrow distinct + a map-side stamp, no
-    global sort of the full table. The join is null-safe, so NULL values
-    rank like Spark's DENSE_RANK (nulls first) instead of being silently
-    dropped by a plain equi join."""
-    m = dense_rank_map(df, col, out_col, num_partitions).withColumnRenamed(col, "__drk")
-    return df.join(F.broadcast(m), F.col(col).eqNullSafe(F.col("__drk"))).drop("__drk")
-
-
 def with_global_prefix_sum(
     df: DataFrame,
     order_cols: list[str],

@@ -37,7 +37,6 @@ def scd2_from_events(
     key: str,
     attr_cols: list[str],
     time_col: str,
-    sentinel: str = SCD2_SENTINEL,
     extra_cols: list[str] | None = None,
     collapse_consecutive: bool = True,
 ) -> DataFrame:
@@ -70,7 +69,7 @@ def scd2_from_events(
         )
     df = df.withColumn("start_time", F.col(time_col)).withColumn(
         "end_time",
-        F.coalesce(F.lead(time_col).over(w), F.lit(sentinel).cast("timestamp")),
+        F.coalesce(F.lead(time_col).over(w), F.lit(SCD2_SENTINEL).cast("timestamp")),
     )
     if time_col not in (extra_cols or []):
         df = df.drop(time_col)
@@ -83,7 +82,6 @@ def scd2_merge_events(
     key: str,
     attr_cols: list[str],
     time_col: str,
-    sentinel: str = SCD2_SENTINEL,
     extra_cols: list[str] | None = None,
     collapse_consecutive: bool = True,
 ) -> DataFrame:
@@ -122,7 +120,7 @@ def scd2_merge_events(
     """
     if prior_dim is None:
         return scd2_from_events(
-            new_events, key, attr_cols, time_col, sentinel, extra_cols, collapse_consecutive
+            new_events, key, attr_cols, time_col, extra_cols, collapse_consecutive
         )
     base_cols = list(dict.fromkeys([key, *attr_cols, *(extra_cols or [])]))
     event_cols = list(dict.fromkeys([*base_cols, time_col]))
@@ -139,7 +137,6 @@ def scd2_merge_events(
         key,
         attr_cols,
         time_col,
-        sentinel,
         extra_cols,
         collapse_consecutive,
     )
@@ -152,7 +149,6 @@ def scd2_snapshot_merge(
     key: str,
     attr_cols: list[str],
     ts: datetime | str,
-    sentinel: str = SCD2_SENTINEL,
 ) -> DataFrame:
     """Merge a full daily snapshot into an SCD2 dimension (M1).
 
@@ -170,7 +166,7 @@ def scd2_snapshot_merge(
     present, which is propagated). ``dim`` may be ``None`` on the first run.
     """
     t = ts_lit(ts)
-    sent = F.lit(sentinel).cast("timestamp")
+    sent = F.lit(SCD2_SENTINEL).cast("timestamp")
     snap_cols = snapshot.columns
 
     new_rows_from = lambda df: df.select(  # noqa: E731
@@ -185,12 +181,11 @@ def scd2_snapshot_merge(
     closed = dim.filter(F.col("end_time") != sent)
     open_rows = dim.filter(F.col("end_time") == sent)
 
-    # explicit presence markers, NOT key-nullity (same pattern as
-    # merge_into): a NULL-key open dim row joins nothing, and key-nullity
-    # classification would silently drop it from the rebuilt dimension —
-    # with markers it is retained as a dim-only row, and a NULL-key
-    # snapshot row is inserted with its actual values instead of
-    # injecting an all-NULL row
+    # explicit presence markers, NOT key-nullity: a NULL-key open dim row
+    # joins nothing, and key-nullity classification would silently drop
+    # it from the rebuilt dimension — with markers it is retained as a
+    # dim-only row, and a NULL-key snapshot row is inserted with its
+    # actual values instead of injecting an all-NULL row
     d_side = open_rows.withColumn("__dp", F.lit(True)).alias("d")
     s_side = snapshot.withColumn("__sp", F.lit(True)).alias("s")
     j = d_side.join(s_side, on=F.col(f"d.{key}") == F.col(f"s.{key}"), how="full_outer")

@@ -190,84 +190,6 @@ def ivf_assign(
     return assigned, centroids
 
 
-def kmeans_centroids(
-    embeddings: DataFrame,
-    k: int = 16,
-    n_iter: int = 5,
-    tol: float = 1e-6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Spherical k-means (Lloyd's) centroid training for IVF.
-
-    Init: the ``k`` lowest-id vectors (deterministic seed choice, planned
-    as TakeOrderedAndProject). Each round: assign every vector to its
-    highest-cosine centroid (broadcast centroids + ranking window — the
-    same bounded n×k cross ``ivf_assign`` uses), then recompute each
-    cell's mean element-wise via ``posexplode`` → (cell, pos) hash
-    aggregate → re-assemble. The shuffle is n×dim rows per round — linear
-    in the data, no collect, no per-cell array materialization (a cell
-    with 10^9 members never builds a 10^9-element list). Cells that lose
-    all members keep their previous centroid. At most ``n_iter`` rounds
-    (k-means objective is monotone; a handful of rounds is standard for
-    IVF coarse quantizers), with a convergence early-exit: when the max
-    squared centroid movement drops below ``tol`` the loop stops — one
-    scalar action per round over the already-materialized k×dim centroid
-    table (same cheap-convergence-probe pattern as
-    ``connected_components``), capping wasted rounds on easy corpora.
-
-    Note: per-cell mean sums doubles in shuffle order, so trained
-    centroids are deterministic only up to float accumulation order —
-    inherent to distributed k-means everywhere (Spark MLlib included).
-    Queries built on trained centroids are therefore rows-only checks,
-    never value-hash oracles.
-
-    Output: (cell, __c) — directly accepted by ``ivf_assign`` /
-    ``cosine_topk_ivf`` as the ``centroids`` parameter."""
-    cent = (
-        embeddings.orderBy(F.col(id_col))
-        .limit(k)
-        .select(F.col(id_col).alias("cell"), F.col(vec_col).cast("array<double>").alias("__c"))
-        .localCheckpoint()
-    )
-    for _ in range(n_iter):
-        assigned, _ = ivf_assign(embeddings, id_col=id_col, vec_col=vec_col, centroids=cent)
-        means = (
-            assigned.select("cell", F.posexplode(F.col("__v").cast("array<double>")).alias("pos", "x"))
-            .groupBy("cell", "pos")
-            .agg((F.sum("x") / F.count("x")).alias("m"))
-            .groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda t: t.getField("m")
-                ).alias("__new")
-            )
-        )
-        stepped = (
-            cent.join(means, "cell", "left")
-            .select(
-                "cell",
-                F.coalesce("__new", "__c").alias("__c"),
-                # squared L2 movement of this cell's centroid, folded
-                # JVM-side; a lost cell keeps its centroid → movement 0
-                F.coalesce(
-                    F.aggregate(
-                        F.zip_with(F.col("__new"), F.col("__c"), lambda a, b: (a - b) * (a - b)),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ),
-                    F.lit(0.0),
-                ).alias("__move2"),
-            )
-            .localCheckpoint()
-        )
-        max_move = stepped.agg(F.max("__move2")).first()[0] or 0.0
-        cent = stepped.drop("__move2")
-        if max_move < tol:
-            break
-    return cent
-
-
 def kmeans_centroids_quantized(
     embeddings: DataFrame,
     k: int = 16,
@@ -275,13 +197,13 @@ def kmeans_centroids_quantized(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Spherical k-means with BIT-REPRODUCIBLE centroids (round-11
-    verdict task 3: ``kmeans_centroids``'s per-cell mean sums doubles in
+    """Spherical k-means (Lloyd's) centroid training for IVF, with
+    BIT-REPRODUCIBLE centroids. A float per-cell mean sums doubles in
     shuffle order, so its output differs run-to-run and engine-to-engine
-    — the one nondeterministic operation in the whole IVF pipeline; every
-    scoring dot/norm is a fixed-order sequential fold, already proven
-    bit-identical to DuckDB's ``list_dot_product`` by the green ANN
-    oracles). This variant makes exactly that one operation exact:
+    — the one nondeterministic operation an IVF pipeline would have;
+    every scoring dot/norm is a fixed-order sequential fold, already
+    proven bit-identical to DuckDB's ``list_dot_product`` by the green
+    ANN oracles. This trainer makes exactly that one operation exact:
 
     - members are symmetric-int8 quantized ONCE (the
       ``embedding_quantize_int8`` formula: per-vector scale 127/max|x|,
@@ -301,8 +223,9 @@ def kmeans_centroids_quantized(
     lowest-id vectors — is bit-identical across partitionings, runs, and
     engines, which is what lets the registry query carry a full DuckDB
     value-hash oracle (unrolled CTE per iteration) instead of a
-    rows-only check. Scale shape is the parent's: broadcast n×k scoring,
-    n×dim integer shuffle per round, no collect. int64 headroom: member
+    rows-only check. Scale shape: broadcast n×k scoring (the same bounded
+    n×k cross ``ivf_assign`` uses), n×dim integer shuffle per round, no
+    collect, no per-cell array materialization. int64 headroom: member
     sums reach 127·n_cell, far below overflow at any shipped sf."""
     base = _kmeans_quantized_base(embeddings, id_col=id_col, vec_col=vec_col)
     cent = (
@@ -378,10 +301,10 @@ def _kmeans_quantized_round(base: DataFrame, cent: DataFrame) -> DataFrame:
             ).alias("__new")
         )
     )
-    # a cell that lost every member keeps its previous centroid —
-    # same carry-over rule as kmeans_centroids. sums is ≤ k rows by
-    # construction (one per nonempty cell); broadcast it so the
-    # carry-over is a hash join, not a 2-exchange sort-merge on k rows
+    # a cell that lost every member keeps its previous centroid. sums
+    # is ≤ k rows by construction (one per nonempty cell); broadcast it
+    # so the carry-over is a hash join, not a 2-exchange sort-merge on
+    # k rows
     return cent.join(F.broadcast(sums), "cell", "left").select(
         "cell", F.coalesce("__new", "__c").alias("__c")
     )
@@ -449,10 +372,11 @@ def cosine_topk_ivf(
 
 
 def ivf_assignment_audit(assigned: DataFrame, centroids: DataFrame) -> DataFrame:
-    """One-row invariant audit for an IVF assignment — the value-level
-    signal for queries whose centroids are not bit-reproducible (trained
-    k-means sums doubles in shuffle order, so the usual value-hash oracle
-    cannot apply; see ``kmeans_centroids``). Columns, all pinnable:
+    """One-row invariant audit for an IVF assignment — a value-level
+    signal that holds for any centroid table, including ones that are
+    not bit-reproducible (a float k-means mean sums doubles in shuffle
+    order, so a value-hash oracle cannot pin it). Columns, all
+    pinnable:
 
     - ``assign_is_argmax`` — every point's assigned cell attains the max
       cosine over the final centroid table, re-derived through an

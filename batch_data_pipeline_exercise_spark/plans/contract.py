@@ -34,9 +34,9 @@ from pyspark.sql.window import Window
 from batch_data_pipeline_exercise_spark.operators.asof import as_of_join
 from batch_data_pipeline_exercise_spark.operators.scd2 import scd2_from_events
 from batch_data_pipeline_exercise_spark.plans.dates import build_dim_dates
+from batch_data_pipeline_exercise_spark.schemas import SCD2_SENTINEL as SENTINEL
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-SENTINEL = "2999-12-31 23:59:59"
 
 
 @dataclass
@@ -93,16 +93,17 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     # parallelism and pays for itself. The fact tables hit a real shuffle
     # (join/agg) almost immediately anyway, so they skip it: measured at
     # sf0.1, repartitioning them costs more than it saves. The shuffle is
-    # CONDITIONAL on the scan actually being starved: an engine-written
-    # layout (Warehouse.ingest_corpus — hash-spread files, real row
-    # groups) already splits to >= cores, and re-shuffling it would be
-    # pure cost (measured: see SCALE.md round-7 layout row). The planned
+    # CONDITIONAL on the scan actually being starved: a multi-file
+    # layout with real row groups (e.g. one written from a frame
+    # repartitioned on its id) already splits to >= cores, and
+    # re-shuffling it would be pure cost (measured: see SCALE.md round-7
+    # layout row). The planned
     # split count is a PROXY: a very large single-row-group file can
     # plan >= cores byte-range splits that are almost all empty at read
     # time (row groups land in one split), which this check cannot see —
     # the testdata's small files plan < cores splits so the proxy holds
-    # here, and the durable fix for any external drop is ingest_corpus,
-    # not a smarter reader heuristic.
+    # here, and the durable fix for any external drop is a one-time
+    # rewrite into multi-file parquet, not a smarter reader heuristic.
     if table in ("documents", "embeddings"):
         from batch_data_pipeline_exercise_spark.functions.core import plan_partition_count
 

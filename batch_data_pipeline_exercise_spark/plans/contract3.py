@@ -1098,11 +1098,9 @@ _ZORDER_KEY_SQL = _morton_key_sql(
     FROM orders
     """,
     doc="Z-order (Morton) clustering key over (customer, day-of-year) — "
-    "the multi-dimensional data-skipping layout (operators/layout.py "
-    "zorder_by): bit-interleaved integer key, pure codegen arithmetic, "
-    "identical in both engines. The layout effect (range filters on "
-    "EITHER column touch a fraction of files) is proven by measured "
-    "file-pruning in tests/test_layout.py.",
+    "the multi-dimensional data-skipping layout key (operators/layout.py "
+    "morton_key): bit-interleaved integer key, pure codegen arithmetic, "
+    "identical in both engines.",
     bench=True,
 )
 def orders_zorder_keys(spark: SparkSession, sf_dir: str) -> DataFrame:

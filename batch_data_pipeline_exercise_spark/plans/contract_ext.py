@@ -444,10 +444,10 @@ def doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def corpus_prep_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship's filter + exact-dedup stages, shared by the registry
-    query below and the near-dup sizing harness
-    (``tests/sized_flagship.py``) so a resized minhash stage runs over
-    the byte-identical survivor set the shipped parameters see.
+    """The flagship's filter + exact-dedup stages, factored out of the
+    registry query below so a resized minhash stage can run over the
+    byte-identical survivor set the shipped parameters see (the
+    round-10 sizing runs, ``evidence/SIZEDFLAG_r10.jsonl``).
 
     The fused stats+quality+lang-id+fingerprint stage compiles clean
     since the marker/stopword folds left the generated code: first as

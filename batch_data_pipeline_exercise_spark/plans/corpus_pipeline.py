@@ -582,7 +582,7 @@ class CorpusPipeline:
                 )
             colliding = sides.join(pair_ids, "doc_id", "left_semi")
             # fused array verify (r14): per-doc in-row shingle sets +
-            # array_intersect instead of the exploded exact_jaccard — same
+            # array_intersect instead of an exploded shingle join — same
             # integer counts, bit-identical jaccard, one array per doc
             # crossing the pair joins instead of one row per (doc, shingle)
             verified = dedup.verify_jaccard_arrays(

@@ -44,12 +44,11 @@ from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
 from batch_data_pipeline_exercise_spark import schemas
-from batch_data_pipeline_exercise_spark.operators import sketches
 from batch_data_pipeline_exercise_spark.operators.facts import idempotent_append_rows
 from batch_data_pipeline_exercise_spark.operators.scd2 import scd2_from_events, scd2_snapshot_merge
 from batch_data_pipeline_exercise_spark.plans.dates import build_dim_dates
@@ -262,12 +261,7 @@ class Pipeline:
     #: append-heavy tables that accumulate small files batch over batch
     MAINTAINED_TABLES = ("fact_orders_created", "fact_inventory", "dim_products", "dim_orders")
 
-    def maintain(
-        self,
-        max_files_per_partition: int = 8,
-        sketch_tables: dict[str, list[str]] | None = None,
-        max_sketch_rows_per_group: int = 64,
-    ) -> list[str]:
+    def maintain(self, max_files_per_partition: int = 8) -> list[str]:
         """Nightly-cadence table maintenance — the parquet-native
         OPTIMIZE + ANALYZE. A table qualifies for compaction when its
         data-file count exceeds ``max_files_per_partition`` x its leaf
@@ -292,14 +286,5 @@ class Pipeline:
                 # full rewrite + ANALYZE every night forever
                 self.wh.compact(table, target_partitions=max(1, budget))
                 self.wh.analyze(table)
-                compacted.append(table)
-        # mergeable-sketch tables ride the same cadence: when a group has
-        # accumulated more than ``max_sketch_rows_per_group`` increment
-        # rows, merge them into one (answers provably unchanged — see
-        # operators/sketches.py and its tests)
-        for table, group_cols in (sketch_tables or {}).items():
-            if sketches.compact_sketch_table(
-                self.wh, table, group_cols, max_rows_per_group=max_sketch_rows_per_group
-            ):
                 compacted.append(table)
         return compacted

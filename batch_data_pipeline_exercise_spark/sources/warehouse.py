@@ -10,7 +10,10 @@ there are no constraints and no UPDATE, so the layer contract is:
 - facts/bronze logs: ``append_once`` (NULL-key rejection + composite-key
   dedup + anti-join idempotency).
 
-Fact tables are partitioned by date for pruning at scale.
+Fact tables are partitioned by date for pruning at scale. Like the
+reference's fixed DDL, every table has one schema for its whole life;
+history lives in SCD2 validity intervals and append-only facts, not in
+schema evolution or versioned snapshots.
 """
 
 from __future__ import annotations
@@ -32,9 +35,9 @@ class Warehouse:
         # overwrites must REFRESH TABLE them (refreshByPath alone does NOT
         # invalidate a catalog table's cached relation)
         self._catalog_names: dict[str, set[str]] = {}
-        # schema Spark inferred per (table, merge_schema), handed back to
-        # later reads so they skip the footer-inference job
-        self._schemas: dict[tuple[str, bool], StructType] = {}
+        # schema Spark inferred per table, handed back to later reads so
+        # they skip the footer-inference job
+        self._schemas: dict[str, StructType] = {}
 
     def path(self, table: str) -> str:
         return os.path.join(self.root, table)
@@ -74,39 +77,32 @@ class Warehouse:
                 return True
         return False
 
-    def read(self, table: str, merge_schema: bool = False) -> DataFrame:
-        """``merge_schema=True`` unions all part-file footers — needed to
-        see columns added by ``append_evolve`` (NULL-filled for older
-        files); off by default because footer merging reads every file's
-        metadata.
+    def read(self, table: str) -> DataFrame:
+        """Read a table. Every table has one fixed schema (the reference's
+        DDL), so a single sampled footer describes all its part-files.
 
         The schema Spark infers on the first read of a table is reused by
         later reads through this instance, so they launch no inference
         job. Every write here that can change a table's schema
-        (``overwrite`` and so ``compact``/``ingest_corpus``,
-        ``overwrite_partitions``, ``append_evolve``) forgets it; ``append``
-        and ``append_once`` conform to the existing columns and keep it. A
-        table rewritten outside this ``Warehouse`` instance needs a fresh
-        ``Warehouse`` to be read with its new schema. Threads may share an
-        instance as long as no read of a table overlaps a write of the
-        same table (the ``overwrite`` swap forbids that anyway)."""
+        (``overwrite`` and so ``compact``, ``overwrite_partitions``)
+        forgets it; ``append`` and ``append_once`` conform to the existing
+        columns and keep it. A table rewritten outside this ``Warehouse``
+        instance needs a fresh ``Warehouse`` to be read with its new
+        schema. Threads may share an instance as long as no read of a
+        table overlaps a write of the same table (the ``overwrite`` swap
+        forbids that anyway)."""
         self._recover(table)
-        key = (table, merge_schema)
-        known = self._schemas.get(key)
+        known = self._schemas.get(table)
         if known is not None:
             return self.spark.read.schema(known).parquet(self.path(table))
-        r = self.spark.read
-        if merge_schema:
-            r = r.option("mergeSchema", "true")
-        df = r.parquet(self.path(table))
-        self._schemas[key] = df.schema
+        df = self.spark.read.parquet(self.path(table))
+        self._schemas[table] = df.schema
         return df
 
     def _forget_schema(self, table: str) -> None:
-        """Drop the reused read schemas of ``table`` before a write that
-        may change them."""
-        for merge_schema in (False, True):
-            self._schemas.pop((table, merge_schema), None)
+        """Drop the reused read schema of ``table`` before a write that
+        may change it."""
+        self._schemas.pop(table, None)
 
     def partition_columns(self, table: str) -> list[str]:
         """Partition columns of an existing table, discovered from the
@@ -183,25 +179,6 @@ class Warehouse:
             fs.delete(P(bak), True)
         self._refresh(table)
 
-    def ingest_corpus(
-        self, src: DataFrame, table: str, id_col: str, buckets: int | None = None
-    ) -> None:
-        """One-time corpus ingest into engine-owned layout: hash-spread
-        the rows over ``buckets`` files (id-hash partitioning — the
-        content-hash-prefix discipline ``operators/multimodal.py``
-        prescribes, so skewed row sizes spread evenly) and write real
-        multi-file parquet. Externally-delivered corpora often arrive as
-        one giant single-row-group file, which a parquet scan CANNOT
-        split — every downstream compute-dense stage then runs on one
-        core unless the reader band-aids it with a per-query
-        ``repartition`` (``plans/contract.load``). Ingesting once makes
-        that shuffle redundant forever: the scan itself splits to
-        ``buckets`` tasks, and ``load()`` detects the healthy layout and
-        skips its shuffle. At 100 TB this is the difference between
-        paying a full-corpus shuffle per QUERY and per INGEST."""
-        buckets = buckets or self.spark.sparkContext.defaultParallelism
-        self.overwrite(src.repartition(buckets, F.col(id_col)), table)
-
     def append(self, df: DataFrame, table: str, partition_by: list[str] | None = None) -> None:
         """Append, conforming to the existing table's column order.
 
@@ -211,10 +188,7 @@ class Warehouse:
         nondeterministic. Values are always name-resolved; this keeps the
         schema presentation stable too."""
         if self.exists(table):
-            # merge_schema: a single sampled footer from before an
-            # append_evolve widening would silently strip the evolved
-            # columns from the incoming rows
-            df = df.select(*self.read(table, merge_schema=True).columns)
+            df = df.select(*self.read(table).columns)
         w = df.write.mode("append")
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -248,9 +222,7 @@ class Warehouse:
                 raise ValueError(
                     f"overwrite_partitions: table {table!r} is partitioned by {existing}, got {list(partition_by)}"
                 )
-            # merged footers, not a sampled one: a table widened by
-            # append_evolve must not lose its evolved columns here
-            df = df.select(*self.read(table, merge_schema=True).columns)
+            df = df.select(*self.read(table).columns)
         self._forget_schema(table)
         conf = self.spark.conf
         prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -259,37 +231,6 @@ class Warehouse:
             df.write.mode("overwrite").partitionBy(*partition_by).parquet(self.path(table))
         finally:
             conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        self._refresh(table)
-
-    def append_evolve(
-        self, df: DataFrame, table: str, partition_by: list[str] | None = None
-    ) -> None:
-        """Append with additive schema evolution: new columns in ``df``
-        are accepted (appended after the existing order); columns the
-        table has but ``df`` lacks are filled NULL. Old part-files keep
-        their footer — read the widened schema back with
-        ``read(table, merge_schema=True)`` (parquet footer merging is a
-        paid option, so plain ``read`` stays cheap and serves whichever
-        footer is sampled). Dropping or retyping columns is NOT schema
-        evolution — that's a rebuild through ``overwrite``."""
-        if self.exists(table):
-            # merged footers: the have/backfill set must include columns
-            # added by PRIOR append_evolve calls, not whichever footer
-            # the plain read happens to sample
-            schema = self.read(table, merge_schema=True).schema
-            have = [f.name for f in schema.fields]
-            for f in schema.fields:
-                if f.name not in df.columns:
-                    # typed NULL fill — an untyped lit(None) writes VOID,
-                    # which parquet footer-merging rejects
-                    df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-            new = [c for c in df.columns if c not in have]
-            df = df.select(*have, *new)
-        self._forget_schema(table)
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(table))
         self._refresh(table)
 
     def append_once(
@@ -322,97 +263,6 @@ class Warehouse:
         else:
             self.overwrite(fresh, table, partition_by)
 
-    # ----- snapshot versioning (time travel) -------------------------------
-
-    def _snap_dir(self, table: str, version: int) -> str:
-        return self.path(table) + f"__v{version}"
-
-    def _marker_path(self, table: str, version: int) -> str:
-        return os.path.join(self._snap_dir(table, version), "_COMMITTED")
-
-    def current_snapshot(self, table: str) -> int | None:
-        """Newest COMMITTED snapshot version, or None before the first
-        commit. A snapshot directory without its ``_COMMITTED`` marker is
-        an orphan from a crashed write — never served, swept by
-        vacuum."""
-        P, fs = self._fs(self.root)
-        committed = [
-            v for v in self.snapshots(table) if fs.exists(P(self._marker_path(table, v)))
-        ]
-        return committed[-1] if committed else None
-
-    def snapshot_overwrite(
-        self, df: DataFrame, table: str, partition_by: list[str] | None = None
-    ) -> int:
-        """Versioned overwrite with time travel: write snapshot N+1 to its
-        own directory, then commit it by CREATING a ``_COMMITTED`` marker
-        inside it — one atomic file creation, no delete-then-rename
-        window. Readers of version N are never disturbed (no in-place
-        mutation), a crash anywhere before the marker leaves N committed
-        and an orphan N+1 dir for vacuum, and version numbers only ever
-        grow (the next version is max(existing dirs)+1, committed or
-        not, so a crashed write can never be silently overwritten).
-        Returns the committed version."""
-        versions = self.snapshots(table)
-        nxt = (versions[-1] if versions else 0) + 1
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self._snap_dir(table, nxt))
-        marker = self._marker_path(table, nxt)
-        P, fs = self._fs(marker)
-        out = fs.create(P(marker), True)
-        try:
-            out.write(bytearray(b"1\n"))
-        finally:
-            out.close()
-        return nxt
-
-    def read_snapshot(self, table: str, version: int | None = None) -> DataFrame:
-        """Read the current (default) or a specific committed snapshot —
-        `read_snapshot(t, 3)` is the time-travel query. Uncommitted
-        (orphan) versions are not readable."""
-        v = version if version is not None else self.current_snapshot(table)
-        if v is None:
-            raise FileNotFoundError(f"no committed snapshot for table {table!r}")
-        P, fs = self._fs(self.root)
-        if not fs.exists(P(self._marker_path(table, v))):
-            raise FileNotFoundError(f"snapshot v{v} of {table!r} is not committed")
-        return self.spark.read.parquet(self._snap_dir(table, v))
-
-    def snapshots(self, table: str) -> list[int]:
-        """Existing snapshot versions on disk (committed or orphaned)."""
-        root, prefix = self.root, os.path.basename(self.path(table)) + "__v"
-        P, fs = self._fs(root)
-        if not fs.exists(P(root)):
-            return []
-        out = []
-        for s in fs.listStatus(P(root)):
-            name = s.getPath().getName()
-            if s.isDirectory() and name.startswith(prefix) and name[len(prefix):].isdigit():
-                out.append(int(name[len(prefix):]))
-        return sorted(out)
-
-    def vacuum_snapshots(self, table: str, keep: int = 2) -> list[int]:
-        """Drop all but the newest ``keep`` committed snapshots (the
-        current one is always retained, so ``keep=0`` keeps exactly it);
-        uncommitted orphans older than the current version are swept
-        too. Returns the versions removed. Run from the maintenance
-        cadence, never concurrently with a snapshot_overwrite — an
-        in-flight write looks like an orphan until its marker lands."""
-        cur = self.current_snapshot(table)
-        versions = self.snapshots(table)
-        P, fs = self._fs(self.root)
-        committed = [v for v in versions if fs.exists(P(self._marker_path(table, v)))]
-        protected = set(committed[-keep:] if keep > 0 else [])
-        if cur is not None:
-            protected.add(cur)
-        # never touch dirs newer than current: one may be mid-write
-        doomed = [v for v in versions if v not in protected and (cur is None or v < cur)]
-        for v in doomed:
-            fs.delete(P(self._snap_dir(table, v)), True)
-        return doomed
-
     def compact(self, table: str, target_partitions: int | None = None) -> None:
         """Rewrite a table into ``target_partitions`` files per partition
         directory (default: session parallelism for the whole table).
@@ -422,10 +272,7 @@ class Warehouse:
         partitioning is detected and preserved."""
         n = target_partitions or self.spark.sparkContext.defaultParallelism
         parts = self.partition_columns(table)
-        # merge_schema: compacting an append_evolve-widened table from a
-        # stale sampled footer would rewrite the whole table WITHOUT the
-        # evolved columns — permanent data loss, not a display quirk
-        df = self.read(table, merge_schema=True)
+        df = self.read(table)
         if parts:
             # hash on (partition cols + a row-content split) so a skewed
             # partition value spreads over several of the n shuffle tasks

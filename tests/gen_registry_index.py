@@ -38,9 +38,14 @@ FAMILIES = [
     (("session", "funnel", "retention", "cohort", "sessions"), "sessionization / funnels"),
     (("anomaly", "impute", "drift", "autocorr", "chi2", "zscore", "percentile", "hhi", "seasonality", "fir", "smooth", "power_curve", "lift"), "robust stats / drift"),
     (("rank", "cumshare", "prefix", "zorder", "layout", "occupancy", "audit"), "ranking / layout / audit"),
-    (("stream", "window",), "streaming"),
+    (("window",), "event-time windows"),
     (("revenue", "orders", "pricing", "nation", "supplier", "customer", "part", "lineitem", "balance", "priority", "shipping", "lead_time", "discount", "market", "quarter", "month", "daily", "stock", "value"), "warehouse / TPC-H analytics"),
 ]
+
+
+#: families matched on the query name only — "window" is too common in
+#: docs (window functions) to mean an event-time window query
+NAME_ONLY = {"event-time windows"}
 
 
 def family_of(name: str, doc: str) -> str:
@@ -48,7 +53,7 @@ def family_of(name: str, doc: str) -> str:
         if any(k in name for k in keys):
             return fam
     for keys, fam in FAMILIES:
-        if any(k in doc.lower() for k in keys):
+        if fam not in NAME_ONLY and any(k in doc.lower() for k in keys):
             return fam
     return "other"
 

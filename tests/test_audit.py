@@ -1,4 +1,4 @@
-"""Order-free content checksums + file provenance audit."""
+"""Order-free content checksums."""
 
 from __future__ import annotations
 
@@ -6,8 +6,7 @@ from functools import reduce
 
 from pyspark.sql import functions as F
 
-from batch_data_pipeline_exercise_spark.operators.audit import content_checksum, file_audit
-from batch_data_pipeline_exercise_spark.sources.warehouse import Warehouse
+from batch_data_pipeline_exercise_spark.operators.audit import content_checksum
 
 
 def _df(spark, rows):
@@ -52,15 +51,3 @@ def test_checksum_distinguishes_null_placement(spark):
     c1 = content_checksum(df1, ["x", "y", "z"]).collect()[0]["checksum"]
     c2 = content_checksum(df2, ["x", "y", "z"]).collect()[0]["checksum"]
     assert c1 != c2 and c1 is not None and c2 is not None
-
-
-def test_file_audit_reproducible_over_warehouse_files(spark, tmp_path):
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    df = spark.createDataFrame([(i, f"v{i}") for i in range(100)], "id int, v string").repartition(4)
-    wh.overwrite(df, "t")
-    cols = [F.col("id").cast("string"), "v"]
-    a = sorted(map(tuple, file_audit(wh.read("t"), cols).collect()))
-    b = sorted(map(tuple, file_audit(wh.read("t"), cols).collect()))
-    assert a == b and len(a) >= 2  # multiple part files, stable ledger
-    # total rows across files add up
-    assert sum(r[1] for r in a) == 100

@@ -607,7 +607,7 @@ def _crash_compaction(spark, wh_root: str, table: str, window: str) -> None:
 
     wh = Warehouse(spark, wh_root)
     parts = wh.partition_columns(table)
-    df = wh.read(table, merge_schema=True).repartition(2)
+    df = wh.read(table).repartition(2)
     target, tmp, bak = wh.path(table), wh.path(table) + "__tmp", wh.path(table) + "__bak"
     w = df.write.mode("overwrite")
     if parts:

@@ -1,4 +1,5 @@
-"""Z-order layout tests: key correctness and measured file pruning."""
+"""Layout tests: the Z-order (Morton) key and its SQL twin, and the
+layout check in ``contract.load``."""
 
 from __future__ import annotations
 
@@ -46,69 +47,31 @@ def test_morton_sql_twin_agrees(spark):
     assert got == want
 
 
-def test_zorder_layout_prunes_files(spark, tmp_path):
-    """The point of the layout: a selective filter on EITHER clustered
-    column touches far fewer files than the unclustered write."""
-    n = 20_000
-    df = spark.range(n).select(
-        (F.col("id") % 128).alias("a"),
-        ((F.col("id") * 7919) % 128).alias("b"),
-        F.col("id").alias("payload"),
-    )
-    plain_dir, z_dir = str(tmp_path / "plain"), str(tmp_path / "zorder")
-    # the plain layout is round-robin over the same file count
-    df.repartition(16).write.parquet(plain_dir)
-    layout.zorder_by(df, ["a", "b"], bits=7, num_partitions=16).write.parquet(z_dir)
-
-    def files_touched(path, col, lo, hi):
-        hit = (
-            spark.read.parquet(path)
-            .filter((F.col(col) >= lo) & (F.col(col) <= hi))
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .count()
-        )
-        return hit
-
-    for col in ["a", "b"]:
-        plain = files_touched(plain_dir, col, 10, 17)
-        z = files_touched(z_dir, col, 10, 17)
-        # round-robin spreads every value across all 16 files; the
-        # z-ordered layout confines an 8/128 range of either column to a
-        # fraction of them
-        assert plain == 16, f"{col}: expected full scatter, got {plain}"
-        assert z <= 8, f"{col}: z-order touched {z}/16 files"
-
-
-def test_ingest_corpus_layout_makes_reader_shuffle_redundant(spark, sf_dir, tmp_path):
-    """Warehouse.ingest_corpus rewrites a single-row-group corpus drop
-    into hash-spread multi-file parquet; contract.load() then detects
-    the healthy layout and SKIPS its parallelism-restoring repartition
-    (the band-aid stays only for starved external layouts)."""
+def test_load_skips_shuffle_on_multi_file_corpus_layout(spark, sf_dir, tmp_path):
+    """contract.load() repartitions a corpus scan only when the scan is
+    starved: a hash-spread multi-file rewrite of the single-row-group
+    drop scans at >= cores and gets no Exchange, while the external
+    layout still gets the parallelism-restoring repartition."""
     import os
 
     from batch_data_pipeline_exercise_spark.functions.core import plan_partition_count
     from batch_data_pipeline_exercise_spark.plans.contract import load
     from batch_data_pipeline_exercise_spark.sources.warehouse import Warehouse
 
-    wh = Warehouse(spark, str(tmp_path))
+    par = spark.sparkContext.defaultParallelism
     src = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    wh.ingest_corpus(src, "documents.parquet", "doc_id")
+    Warehouse(spark, str(tmp_path)).overwrite(src.repartition(par, F.col("doc_id")), "documents.parquet")
 
-    # content preserved exactly
+    # content preserved exactly; the scan itself splits to >= cores
     back = spark.read.parquet(str(tmp_path / "documents.parquet"))
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, src.collect()))
-    # the scan itself splits to >= cores — no shuffle needed
-    par = spark.sparkContext.defaultParallelism
     assert plan_partition_count(back) >= par
 
-    # load() on the ingested layout: parallel AND shuffle-free
     for t in ("region", "nation", "customer", "supplier", "part",
               "orders", "lineitem", "events", "embeddings"):
         os.symlink(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
     d = load(spark, str(tmp_path), "documents")
     assert plan_partition_count(d) >= par
     assert "Exchange" not in d._jdf.queryExecution().executedPlan().toString()
-    # ...while the starved external layout still gets the repartition
     d0 = load(spark, sf_dir, "documents")
     assert "Exchange" in d0._jdf.queryExecution().executedPlan().toString()

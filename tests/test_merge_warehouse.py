@@ -1,77 +1,10 @@
-"""merge_into emulation + warehouse compaction/analyze tests."""
+"""Warehouse compaction, analyze, crash recovery and append-once tests."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from batch_data_pipeline_exercise_spark.operators.merge import merge_into
 from batch_data_pipeline_exercise_spark.sources.warehouse import Warehouse
-
-
-@pytest.fixture()
-def tables(spark):
-    target = spark.createDataFrame(
-        [("a", 1, "keep"), ("b", 2, "update-me"), ("c", 3, "delete-me")],
-        "id string, version int, note string",
-    )
-    source = spark.createDataFrame(
-        [("b", 20, "updated"), ("c", 30, "DELETE"), ("d", 40, "new")],
-        "id string, version int, note string",
-    )
-    return target, source
-
-
-def test_merge_update_insert_delete(spark, tables):
-    target, source = tables
-    out = merge_into(
-        target,
-        source,
-        key="id",
-        update_set={"version": F.col("s.version"), "note": F.col("s.note")},
-        delete_condition=F.col("s.note") == "DELETE",
-    )
-    rows = {r["id"]: r for r in out.collect()}
-    assert set(rows) == {"a", "b", "d"}
-    assert rows["a"]["version"] == 1 and rows["a"]["note"] == "keep"  # untouched
-    assert rows["b"]["version"] == 20 and rows["b"]["note"] == "updated"  # matched+updated
-    assert rows["d"]["version"] == 40  # inserted
-    # 'c' matched the delete condition → gone
-
-
-def test_merge_conditional_update_no_insert(spark, tables):
-    target, source = tables
-    out = merge_into(
-        target,
-        source,
-        key="id",
-        update_set={"version": F.col("s.version")},
-        update_condition=F.col("s.note") != "DELETE",
-        insert_not_matched=False,
-    )
-    rows = {r["id"]: r["version"] for r in out.collect()}
-    # 'b' passes the condition and updates; 'c' fails it and keeps 3; no 'd' insert
-    assert rows == {"a": 1, "b": 20, "c": 3}
-
-
-def test_merge_is_idempotent_for_same_source(spark, tables):
-    target, source = tables
-    once = merge_into(target, source, key="id", update_set={"version": F.col("s.version"), "note": F.col("s.note")})
-    twice = merge_into(once, source, key="id", update_set={"version": F.col("s.version"), "note": F.col("s.note")})
-    assert sorted(map(tuple, once.collect())) == sorted(map(tuple, twice.collect()))
-
-
-def test_merge_rejects_duplicate_source_keys_when_asked(spark, tables):
-    target, _ = tables
-    dup_source = spark.createDataFrame(
-        [("b", 20, "x"), ("b", 21, "y"), ("d", 40, "new")], "id string, version int, note string"
-    )
-    with pytest.raises(ValueError, match="multiple rows per key"):
-        merge_into(target, dup_source, key="id", update_set={"version": F.col("s.version")},
-                   assert_unique_source_key=True)
-    # default stays permissive (documented full-outer fan-out)
-    out = merge_into(target, dup_source, key="id", update_set={"version": F.col("s.version")})
-    assert out.filter(F.col("id") == "b").count() == 2
 
 
 def test_warehouse_compact_and_analyze(spark, tmp_path):
@@ -149,25 +82,6 @@ def test_catalog_refresh_after_overwrite(spark, tmp_path):
     wh.overwrite(spark.range(0, 75).toDF("id"), "t")
     assert spark.sql("SELECT COUNT(*) c FROM t_refresh_cat").first()["c"] == 75
     spark.sql("DROP TABLE t_refresh_cat")
-
-
-def test_merge_null_key_rows_retained(spark):
-    """NULL-key rows on either side are unmatched rows — kept / inserted,
-    never silently dropped (presence markers, not key-nullity)."""
-    target = spark.createDataFrame([(None, 1), ("a", 2)], "id string, v int")
-    source = spark.createDataFrame([(None, 10), ("b", 20)], "id string, v int")
-    out = merge_into(target, source, key="id", update_set={"v": F.col("s.v")})
-    vals = sorted([(r["id"], r["v"]) for r in out.collect()], key=repr)
-    assert (None, 1) in vals  # target NULL-key row survives
-    assert (None, 10) in vals  # source NULL-key row inserted
-    assert ("a", 2) in vals and ("b", 20) in vals
-
-
-def test_merge_null_delete_condition_keeps_row(spark):
-    target = spark.createDataFrame([("a", 1)], "id string, v int")
-    source = spark.createDataFrame([("a", None)], "id string, note string")
-    out = merge_into(target, source, key="id", delete_condition=F.col("s.note") == "DELETE")
-    assert out.count() == 1  # NULL condition = not deleted
 
 
 def test_compact_partitioned_with_map_column(spark, tmp_path):

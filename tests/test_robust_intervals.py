@@ -105,29 +105,6 @@ def test_as_of_forward_is_mirror_of_backward(spark):
     assert fwd == bwd == {"L2": 4, "L6": 8, "L9": 12, "L13": None}
 
 
-def test_as_of_cogroup_matches_window_implementation(spark):
-    """The cogrouped-map (pd.merge_asof) variant agrees with the
-    union+window implementation on keys with matches, without matches,
-    and left-only keys."""
-    from batch_data_pipeline_exercise_spark.operators.asof import as_of_join_cogroup
-
-    left = spark.createDataFrame(
-        [("u1", _t(5), "L1"), ("u1", _t(2), "L2"), ("u2", _t(4), "L3"), ("u3", _t(1), "L4")],
-        "k string, lt timestamp, lbl string",
-    )
-    right = spark.createDataFrame(
-        [("u1", _t(3), 1), ("u1", _t(5), 2), ("u2", _t(9), 3)],
-        "k string, rt timestamp, rid int",
-    )
-    a = sorted(
-        (r["lbl"], r["rid"]) for r in as_of_join(left, right, "k", "lt", "rt").collect()
-    )
-    b = sorted(
-        (r["lbl"], r["rid"]) for r in as_of_join_cogroup(left, right, "k", "lt", "rt").collect()
-    )
-    assert a == b == [("L1", 2), ("L2", None), ("L3", None), ("L4", None)]
-
-
 # ---------------------------------------------------------------------------
 # winsorize / anomalies / imputation
 # ---------------------------------------------------------------------------

@@ -70,17 +70,6 @@ def test_null_keys_cross_engine_consistent(spark):
     assert None not in {r["doc_id"] for r in top}  # non-null rows win the quota
 
 
-def test_global_dense_rank_keeps_null_values(spark):
-    from batch_data_pipeline_exercise_spark.operators import ranking
-
-    df = spark.createDataFrame([("b",), (None,), ("a",), ("b",)], "v string")
-    out = ranking.with_global_dense_rank(df, "v", "rk")
-    got = sorted(((r["v"], r["rk"]) for r in out.collect()),
-                 key=lambda t: (t[0] is not None, t[0] or "", t[1]))
-    # NULL ranks first (Spark DENSE_RANK semantics), nothing dropped
-    assert got == [(None, 1), ("a", 2), ("b", 3), ("b", 3)]
-
-
 def test_packing_bins_respect_budget(spark, docs):
     out = sampling.assign_packing_bins(
         docs, size_col="n_tokens", budget=5000, order_cols=["doc_id"], partition_cols=["grp"]

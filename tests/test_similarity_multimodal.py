@@ -159,9 +159,6 @@ def test_multimodal_features_and_plumbing(spark):
     again = {r["media_id"]: r["phash"] for r in multimodal.extract_image_features(df).collect()}
     assert again == {k: v["phash"] for k, v in f.items()}
 
-    resized = {r["media_id"]: r for r in multimodal.resize_images(df, max_side=32).collect()}
-    assert all(max(r["target_width"], r["target_height"]) == 32 for r in resized.values())
-
     frames = multimodal.sample_video_frames(df, every_ms=1000)
     assert frames.count() == 20 * 4  # 0,1000,2000,3000
 

@@ -6,8 +6,8 @@ honest infeasibility.
 
 Evidence half: the model's predictions validated against the MEASURED
 sized-sketch recall probe on the replica-dense scale corpus
-(``evidence/SIZEDRECALL_r11.jsonl``, produced by
-``tests/sized_recall_probe.py`` at sf3): per Jaccard bin, predicted
+(``evidence/SIZEDRECALL_r11.jsonl``, the probe's recorded sf3 run):
+per Jaccard bin, predicted
 lost-pair fraction 1 - lsh_recall(J_mid, sized) vs observed
 lost/baseline. Stated tolerance covers the two knowingly-unmodeled
 effects: (a) the sized sketches share minhash components with the
@@ -93,7 +93,7 @@ def test_bands_rows_for_default_floor_and_validation():
 
 def _load_probe():
     if not EVIDENCE.exists():
-        pytest.skip(f"{EVIDENCE} not produced yet (tests/sized_recall_probe.py)")
+        pytest.skip(f"{EVIDENCE} is missing (the recorded sf3 recall-probe run)")
     lines = [json.loads(x) for x in EVIDENCE.read_text().splitlines() if x.strip()]
     baseline = next(x for x in lines if "baseline_hist_binfloor" in x)
     sized = [x for x in lines if "lost_hist_binfloor" in x]

@@ -1,4 +1,4 @@
-"""Mergeable-sketch maintenance tests: incremental distinct + quantiles."""
+"""Mergeable-sketch tests: incremental distinct counts."""
 
 from __future__ import annotations
 
@@ -79,154 +79,3 @@ def test_hll_estimation_regime_error_bound(spark):
     )
     s2 = sketches.build_distinct_sketches(small, ["g"], "user_id")
     assert sketches.merge_distinct_counts(s2, ["g"]).collect()[0]["n_distinct"] == m
-
-
-def test_incremental_quantiles_bounded_error(spark, sf_dir):
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").filter(F.col("value").isNotNull())
-    parts = [e.filter(F.col("event_id") % 4 == i) for i in range(4)]
-    table = None
-    for p in parts:
-        s = sketches.build_quantile_sketches(p, ["event_type"], "value")
-        table = s if table is None else table.unionByName(s)
-    approx = {
-        r["event_type"]: r["q_0_5"]
-        for r in sketches.merge_quantiles(table, ["event_type"], [0.5]).collect()
-    }
-    exact = {
-        r["event_type"]: r["m"]
-        for r in e.groupBy("event_type").agg(F.expr("percentile(value, 0.5)").alias("m")).collect()
-    }
-    for t, m in exact.items():
-        lo, hi = sorted([approx[t], m])
-        # KLL at k=2048 has ~0.08% rank error; on these distributions the
-        # value-space gap stays tiny
-        assert hi - lo <= max(0.05 * abs(m), 1e-9), (t, approx[t], m)
-
-
-def test_compaction_preserves_distinct_counts(spark, sf_dir):
-    """compact_distinct_sketches merges each group's increment rows into
-    one row; union-of-unions is the same set-function, so every rollup
-    (same grouping AND coarser) must be identical before and after."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    parts = [e.filter(F.col("event_id") % 5 == i) for i in range(5)]
-    table = None
-    for p in parts:
-        s = sketches.build_distinct_sketches(p, ["event_type"], "user_id")
-        table = s if table is None else table.unionByName(s)
-
-    compacted = sketches.compact_distinct_sketches(table, ["event_type"])
-    assert compacted.count() == table.select("event_type").distinct().count()
-
-    before = {
-        (r["event_type"],): r["n_distinct"]
-        for r in sketches.merge_distinct_counts(table, ["event_type"]).collect()
-    }
-    after = {
-        (r["event_type"],): r["n_distinct"]
-        for r in sketches.merge_distinct_counts(compacted, ["event_type"]).collect()
-    }
-    assert after == before
-    # coarser rollup from the compacted table still works and agrees
-    assert (
-        sketches.merge_distinct_counts(compacted, []).collect()[0]["n_distinct"]
-        == sketches.merge_distinct_counts(table, []).collect()[0]["n_distinct"]
-    )
-
-
-def test_compaction_preserves_quantiles(spark, sf_dir):
-    """compact_quantile_sketches produces the SAME merged sketch the
-    read path's sort-fold would build, so read-off quantiles must be
-    bit-identical before and after compaction — the invariant that lets
-    Pipeline.maintain compact the table without changing any report."""
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").filter(F.col("value").isNotNull())
-    parts = [e.filter(F.col("event_id") % 4 == i) for i in range(4)]
-    table = None
-    for p in parts:
-        s = sketches.build_quantile_sketches(p, ["event_type"], "value")
-        table = s if table is None else table.unionByName(s)
-
-    qs = [0.1, 0.5, 0.9]
-    before = {
-        r["event_type"]: (r["q_0_1"], r["q_0_5"], r["q_0_9"])
-        for r in sketches.merge_quantiles(table, ["event_type"], qs).collect()
-    }
-    compacted = sketches.compact_quantile_sketches(table, ["event_type"])
-    assert compacted.count() == len(before)
-    assert compacted.columns == table.columns  # schema-stable: drop-in overwrite
-    after = {
-        r["event_type"]: (r["q_0_1"], r["q_0_5"], r["q_0_9"])
-        for r in sketches.merge_quantiles(compacted, ["event_type"], qs).collect()
-    }
-    assert after == before
-
-    # compacting twice is a no-op on the read path
-    twice = sketches.compact_quantile_sketches(compacted, ["event_type"])
-    again = {
-        r["event_type"]: (r["q_0_1"], r["q_0_5"], r["q_0_9"])
-        for r in sketches.merge_quantiles(twice, ["event_type"], qs).collect()
-    }
-    assert again == before
-
-
-def test_compact_sketch_table_gate(spark, sf_dir, tmp_path):
-    """compact_sketch_table rewrites only past the per-group row budget,
-    and the post-rewrite table reports identical quantiles."""
-    from batch_data_pipeline_exercise_spark.sources.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path))
-    e = spark.read.parquet(f"{sf_dir}/events.parquet").filter(F.col("value").isNotNull())
-    for i in range(6):
-        inc = sketches.build_quantile_sketches(
-            e.filter(F.col("event_id") % 6 == i), ["event_type"], "value"
-        )
-        wh.append(inc, "sketch_event_value")
-
-    before = {
-        r["event_type"]: r["q_0_5"]
-        for r in sketches.merge_quantiles(wh.read("sketch_event_value"), ["event_type"], [0.5]).collect()
-    }
-    # under budget: no rewrite
-    assert sketches.compact_sketch_table(wh, "sketch_event_value", ["event_type"], max_rows_per_group=10) is False
-    # over budget: rewrite to one row per group, same answers
-    assert sketches.compact_sketch_table(wh, "sketch_event_value", ["event_type"], max_rows_per_group=2) is True
-    compacted = wh.read("sketch_event_value")
-    assert compacted.groupBy("event_type").count().agg(F.max("count")).collect()[0][0] == 1
-    after = {
-        r["event_type"]: r["q_0_5"]
-        for r in sketches.merge_quantiles(compacted, ["event_type"], [0.5]).collect()
-    }
-    assert after == before
-    # missing table is a clean no-op
-    assert sketches.compact_sketch_table(wh, "nope", ["event_type"]) is False
-
-
-def test_pipeline_maintain_compacts_sketch_tables(spark, sf_dir, tmp_path):
-    """Pipeline.maintain folds sketch-table compaction into its nightly
-    cadence: over-budget sketch tables are rewritten to one row per
-    group, under-budget ones untouched."""
-    from batch_data_pipeline_exercise_spark.plans.pipeline import Pipeline
-
-    pl = Pipeline(spark, str(tmp_path))
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
-    for i in range(4):
-        pl.wh.append(
-            sketches.build_distinct_sketches(
-                e.filter(F.col("event_id") % 4 == i), ["event_type"], "user_id"
-            ),
-            "sketch_user_reach",
-        )
-    before = {
-        (r["event_type"],): r["n_distinct"]
-        for r in sketches.merge_distinct_counts(pl.wh.read("sketch_user_reach"), ["event_type"]).collect()
-    }
-    done = pl.maintain(sketch_tables={"sketch_user_reach": ["event_type"]}, max_sketch_rows_per_group=2)
-    assert "sketch_user_reach" in done
-    t = pl.wh.read("sketch_user_reach")
-    assert t.groupBy("event_type").count().agg(F.max("count")).collect()[0][0] == 1
-    after = {
-        (r["event_type"],): r["n_distinct"]
-        for r in sketches.merge_distinct_counts(t, ["event_type"]).collect()
-    }
-    assert after == before
-    # second call: under budget now, nothing to do
-    assert pl.maintain(sketch_tables={"sketch_user_reach": ["event_type"]}, max_sketch_rows_per_group=2) == []

@@ -91,7 +91,7 @@ def test_kmeans_centroids_shape_and_carryover(spark):
     # and must carry their previous centroid forward — never vanish.
     rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(5)]
     vecs = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    cent = similarity.kmeans_centroids(vecs, k=3, n_iter=2)
+    cent = similarity.kmeans_centroids_quantized(vecs, k=3, n_iter=2)
     out = cent.collect()
     assert len(out) == 3
     assert {r["cell"] for r in out} == {0, 1, 2}
@@ -114,9 +114,8 @@ def test_kmeans_ivf_recall_at_least_seeded(spark):
     exact_ids = {(r["query_id"], r["neighbor_id"]) for r in exact.collect()}
 
     # one Lloyd round from lowest-id seeds is the smallest training that
-    # keeps recall here — the round-9 CPU-cut floor (the registry query
-    # itself now trains 2 rounds of the QUANTIZED variant; see below)
-    trained = similarity.kmeans_centroids(vecs, k=6, n_iter=1)
+    # keeps recall here (the registry query trains 2 rounds)
+    trained = similarity.kmeans_centroids_quantized(vecs, k=6, n_iter=1)
     approx = similarity.cosine_topk_ivf(vecs, queries, k=10, n_cells=6, n_probe=2, centroids=trained)
     got = {(r["query_id"], r["neighbor_id"]) for r in approx.collect()}
     recall = len(exact_ids & got) / len(exact_ids)
@@ -129,7 +128,7 @@ def test_ivf_assignment_audit_invariants(spark):
     rng = random.Random(11)
     rows = [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(200)]
     vecs = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
-    cent = similarity.kmeans_centroids(vecs, k=4, n_iter=1)
+    cent = similarity.kmeans_centroids_quantized(vecs, k=4, n_iter=1)
     assigned, cent = similarity.ivf_assign(vecs, centroids=cent)
     audit = similarity.ivf_assignment_audit(assigned, cent).first()
     assert audit["assign_is_argmax"] is True
@@ -153,12 +152,11 @@ def test_ivf_assignment_audit_catches_poisoned_centroid(spark):
 
 
 def test_kmeans_quantized_bit_reproducible(spark):
-    """``kmeans_centroids_quantized`` (round-11 verdict task 3): trained
-    centroids are BIT-identical across partitionings — the per-cell sum
-    runs over int8-quantized integer components, removing the
-    shuffle-order float accumulation that makes ``kmeans_centroids``
-    non-reproducible (and kept the registry query rows-only until
-    round 12). Updated cells carry raw integer sums (exact doubles)."""
+    """``kmeans_centroids_quantized``: trained centroids are BIT-identical
+    across partitionings — the per-cell sum runs over int8-quantized
+    integer components, removing the shuffle-order float accumulation
+    that makes a float per-cell mean non-reproducible. Updated cells
+    carry raw integer sums (exact doubles)."""
     rng = random.Random(7)
     rows = [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(200)]
     vecs = spark.createDataFrame(rows, "vec_id int, embedding array<double>")

@@ -78,14 +78,10 @@ def test_ngram_jaccard_max_df_cap(spark, docs):
     assert loose.count() == 3 and tight.count() == 0
 
 
-def test_simhash_near_dups(spark, docs):
+def test_simhash_depends_only_on_token_set(spark, docs):
     s = {r["id"]: (r["simhash_hi"], r["simhash_lo"]) for r in dedup.simhash(docs, "doc_id").collect()}
     assert s[1] == s[2] == s[3]  # identical token sets → identical simhash
     assert all(0 <= hi < 2**32 and 0 <= lo < 2**32 for hi, lo in s.values())
-
-    pairs = {(r["id1"], r["id2"]): r["hamming"] for r in dedup.simhash_near_dups(docs, "doc_id", max_hamming=10).collect()}
-    assert pairs[(1, 2)] == 0 and pairs[(1, 3)] == 0
-    assert (1, 5) not in pairs
 
 
 def test_text_stats_and_quality(spark, docs):
@@ -118,31 +114,6 @@ def test_fingerprint(spark, docs):
     assert out[1]["fingerprint"] == out[2]["fingerprint"]
     assert out[1]["fingerprint"] != out[3]["fingerprint"]  # raw differs
     assert out[1]["fingerprint_norm"] == out[3]["fingerprint_norm"]  # normalized matches
-
-
-def test_char_shingles_cjk_near_dup(spark):
-    """CJK text has no whitespace — character shingles make minhash work
-    where word shingles see one giant token."""
-    zh = spark.createDataFrame(
-        [
-            (1, "数据管道每天处理批量订单事件并构建维度模型与事实表"),
-            (2, "数据管道每天处理批量订单事件并构建维度模型和事实表"),  # one char differs
-            (3, "完全不同的内容讲述机器学习训练样本的去重方法与策略"),
-        ],
-        "doc_id int, text string",
-    )
-    sh = dedup.char_shingles(zh, "doc_id", n=5)
-    sig = dedup.minhash_signatures(sh, k=32)
-    cand = dedup.lsh_candidate_pairs(dedup.lsh_band_keys(sig, bands=8, rows=4))
-    pairs = {(r["id1"], r["id2"]) for r in cand.collect()}
-    assert (1, 2) in pairs
-    jac = {(r["id1"], r["id2"]): r["jaccard"] for r in dedup.exact_jaccard(cand, sh).collect()}
-    assert jac[(1, 2)] > 0.6
-    assert not any(3 in p for p in pairs)
-
-    # word shingles would lump each doc into ONE shingle — no resolution
-    word_sh = dedup.word_shingles(zh, "doc_id")
-    assert word_sh.groupBy("id").count().agg(F.max("count")).first()[0] == 1
 
 
 def test_chunk_documents_windows_and_edges(spark):
@@ -217,22 +188,6 @@ def test_shingle_kernels_bind_once_edge_cases(spark):
         .collect()
     )
     assert got == [(6, "one two three"), (6, "two three four")]
-
-    # char_shingles: every n-char window of the ws-normalized text
-    got = sorted(
-        (r["id"], r["shingle"])
-        for r in dedup.char_shingles(df, "doc_id", "text", n=3, distinct=False).collect()
-    )
-    expect = []
-    for i, t in rows:
-        if t is None:
-            continue
-        norm = " ".join(t.lower().split())
-        for s in range(max(len(norm) - 2, 1)):
-            sh = norm[s : s + 3]
-            if sh:
-                expect.append((i, sh))
-    assert got == sorted(expect)
 
 
 def test_lsh_occupancy_stats_exact(spark, docs):

@@ -1,4 +1,4 @@
-"""Warehouse dynamic partition overwrite + additive schema evolution."""
+"""Warehouse dynamic partition overwrite."""
 
 from __future__ import annotations
 
@@ -11,10 +11,6 @@ from batch_data_pipeline_exercise_spark.sources.warehouse import Warehouse
 @pytest.fixture()
 def wh(spark, tmp_path):
     return Warehouse(spark, str(tmp_path / "wh"))
-
-
-def _rows(wh, table, **kw):
-    return sorted(map(tuple, wh.read(table, **kw).collect()))
 
 
 def test_overwrite_partitions_replaces_only_touched(spark, wh):
@@ -72,110 +68,3 @@ def test_overwrite_partitions_rejects_existing_unpartitioned_table(spark, wh):
         )
     # prior rows untouched by the rejected call
     assert [tuple(r) for r in wh.read("u").collect()] == [(1, "a", "m1")]
-
-
-def test_overwrite_partitions_preserves_evolved_columns(spark, wh):
-    wh.append_evolve(spark.createDataFrame([("m1", 1)], "p string, id int"), "t", ["p"])
-    wh.append_evolve(
-        spark.createDataFrame([("m2", 2, 0.9)], "p string, id int, score double"), "t", ["p"]
-    )
-    # reprocess m2 WITH the evolved column: it must survive the rewrite
-    wh.overwrite_partitions(
-        spark.createDataFrame([("m2", 3, 0.7)], "p string, id int, score double"), "t", ["p"]
-    )
-    merged = wh.read("t", merge_schema=True)
-    assert "score" in merged.columns
-    got = {r["id"]: r["score"] for r in merged.collect()}
-    assert got == {1: None, 3: 0.7}
-
-
-def test_snapshot_survives_lost_marker_history(spark, wh):
-    """An orphan dir (crash before the marker) is never served, never
-    renumbered over, and vacuum sweeps it once a newer commit exists."""
-    wh.snapshot_overwrite(spark.createDataFrame([(1,)], "id int"), "t")
-    wh.snapshot_overwrite(spark.createDataFrame([(2,)], "id int"), "t")
-    # simulate a crashed v3 write: dir exists, marker missing
-    spark.createDataFrame([(99,)], "id int").write.parquet(wh._snap_dir("t", 3))
-    assert wh.current_snapshot("t") == 2  # orphan not served
-    with pytest.raises(FileNotFoundError, match="not committed"):
-        wh.read_snapshot("t", 3)
-    # next commit numbers PAST the orphan — never overwrites it
-    assert wh.snapshot_overwrite(spark.createDataFrame([(4,)], "id int"), "t") == 4
-    assert [r["id"] for r in wh.read_snapshot("t").collect()] == [4]
-    removed = wh.vacuum_snapshots("t", keep=1)
-    assert 3 in removed and wh.current_snapshot("t") == 4
-
-
-def test_snapshot_versioning_time_travel_and_vacuum(spark, wh):
-    v1 = spark.createDataFrame([(1, "a")], "id int, v string")
-    v2 = spark.createDataFrame([(1, "A"), (2, "b")], "id int, v string")
-    assert wh.current_snapshot("t") is None
-    assert wh.snapshot_overwrite(v1, "t") == 1
-    assert wh.snapshot_overwrite(v2, "t") == 2
-    assert wh.current_snapshot("t") == 2
-    assert {r["v"] for r in wh.read_snapshot("t").collect()} == {"A", "b"}
-    # time travel to version 1 — unchanged by the later commit
-    assert [tuple(r) for r in wh.read_snapshot("t", 1).collect()] == [(1, "a")]
-    # third commit, vacuum to keep 2: version 1 removed, current safe
-    wh.snapshot_overwrite(v1, "t")
-    assert wh.vacuum_snapshots("t", keep=2) == [1]
-    assert wh.snapshots("t") == [2, 3]
-    assert wh.current_snapshot("t") == 3
-    with pytest.raises(Exception):
-        wh.read_snapshot("t", 1)  # vacuumed
-
-
-def test_snapshot_read_before_commit_raises(spark, wh):
-    with pytest.raises(FileNotFoundError, match="no committed snapshot"):
-        wh.read_snapshot("ghost")
-
-
-def test_append_evolve_adds_and_backfills_columns(spark, wh):
-    v1 = spark.createDataFrame([(1, "a")], "id int, v string")
-    wh.append_evolve(v1, "t")
-    # widened batch: new column 'score'
-    v2 = spark.createDataFrame([(2, "b", 0.5)], "id int, v string, score double")
-    wh.append_evolve(v2, "t")
-    # narrowed batch: missing 'v' is NULL-filled
-    v3 = spark.createDataFrame([(3,)], "id int")
-    wh.append_evolve(v3, "t")
-
-    merged = wh.read("t", merge_schema=True)
-    assert merged.columns[:2] == ["id", "v"]  # existing order preserved
-    got = {r["id"]: (r["v"], r["score"]) for r in merged.collect()}
-    assert got == {1: ("a", None), 2: ("b", 0.5), 3: (None, None)}
-    # plain read stays cheap and still sees the original columns
-    assert set(wh.read("t").columns) >= {"id", "v"}
-
-
-def test_compact_preserves_evolved_columns(spark, tmp_path):
-    """compact() must read the MERGED schema: rewriting an
-    append_evolve-widened table from a stale sampled footer would
-    permanently drop the evolved columns."""
-    from pyspark.sql import functions as F
-
-    from batch_data_pipeline_exercise_spark.sources.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    wh.overwrite(spark.range(50).select("id"), "t")
-    wh.append_evolve(spark.range(50, 100).select("id", (F.col("id") * 2).alias("b")), "t")
-    for _ in range(4):  # several trials: footer sampling order varies
-        wh.compact("t", target_partitions=2)
-        df = wh.read("t", merge_schema=True)
-        assert "b" in df.columns, "compact dropped the evolved column"
-        assert df.filter(F.col("b").isNotNull()).count() == 50
-
-
-def test_append_conforms_to_merged_schema(spark, tmp_path):
-    """append() after append_evolve must keep the evolved column in the
-    incoming rows regardless of which footer gets sampled."""
-    from pyspark.sql import functions as F
-
-    from batch_data_pipeline_exercise_spark.sources.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    wh.overwrite(spark.range(10).select("id"), "t2")
-    wh.append_evolve(spark.range(10, 20).select("id", (F.col("id") * 3).alias("c")), "t2")
-    wh.append(spark.range(20, 30).select("id", (F.col("id") * 3).alias("c")), "t2")
-    got = wh.read("t2", merge_schema=True).filter(F.col("id") >= 20)
-    assert got.filter(F.col("c").isNotNull()).count() == 10

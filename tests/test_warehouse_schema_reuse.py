@@ -51,12 +51,10 @@ def test_repeated_read_launches_no_job(spark, wh, partition_by):
     wh.overwrite(_base(spark), "t", partition_by=partition_by)
     first, jobs = _jobs_during(spark, lambda: wh.read("t"))
     assert jobs, "the first read infers the schema with a Spark job"
-    for merge_schema in (False, True):
-        wh.read("t", merge_schema=merge_schema)
-        again, jobs = _jobs_during(spark, lambda: wh.read("t", merge_schema=merge_schema))
-        assert jobs == [], f"merge_schema={merge_schema}"
-        assert again.schema == first.schema
-        assert _rows(again) == _rows(first)
+    again, jobs = _jobs_during(spark, lambda: wh.read("t"))
+    assert jobs == []
+    assert again.schema == first.schema
+    assert _rows(again) == _rows(first)
     # append conforms to the existing columns, so the schema stays known
     wh.append(spark.createDataFrame([("c", 4, "w")], "p string, id int, v string"), "t",
               partition_by=partition_by)
@@ -69,34 +67,34 @@ def test_repeated_read_launches_no_job(spark, wh, partition_by):
 def test_read_after_overwrite_with_new_schema(spark, wh, partition_by):
     wh.overwrite(_base(spark), "t", partition_by=partition_by)
     wh.read("t")
-    wh.read("t", merge_schema=True)
     retyped = spark.createDataFrame([("a", 10, 1.5)], "p string, id bigint, w double")
     wh.overwrite(retyped, "t", partition_by=partition_by)
-    for merge_schema in (False, True):
-        got = wh.read("t", merge_schema=merge_schema)
-        assert got.schema == Warehouse(spark, wh.root).read("t", merge_schema=merge_schema).schema
-        assert got.schema["id"].dataType == T.LongType()
-        assert "w" in got.columns and "v" not in got.columns
-        assert [tuple(r) for r in got.select("p", "id", "w").collect()] == [("a", 10, 1.5)]
+    got = wh.read("t")
+    assert got.schema == Warehouse(spark, wh.root).read("t").schema
+    assert got.schema["id"].dataType == T.LongType()
+    assert "w" in got.columns and "v" not in got.columns
+    assert [tuple(r) for r in got.select("p", "id", "w").collect()] == [("a", 10, 1.5)]
 
 
 @pytest.mark.parametrize("partition_by", LAYOUTS)
-def test_reads_see_append_evolve_then_compact(spark, wh, partition_by):
+def test_append_after_read_launches_no_inference_job(spark, wh, tmp_path, partition_by):
+    """An append conforms to the schema the last read inferred: it
+    launches exactly the jobs of a bare parquet append of the same
+    frame, with no footer-inference job of its own."""
     wh.overwrite(_base(spark), "t", partition_by=partition_by)
     wh.read("t")
-    wh.read("t", merge_schema=True)
-    wider = spark.createDataFrame([("b", 4, "q", 7)], "p string, id int, v string, extra int")
-    wh.append_evolve(wider, "t", partition_by=partition_by)
-    merged = wh.read("t", merge_schema=True)
-    assert "extra" in merged.columns
-    assert {r["id"]: r["extra"] for r in merged.collect()} == {1: None, 2: None, 3: None, 4: 7}
-    # compaction rewrites every file with the merged columns, so the
-    # plain read must stop serving the narrow schema it knew before
-    wh.compact("t", target_partitions=1)
-    plain = wh.read("t")
-    assert "extra" in plain.columns
-    assert plain.count() == 4
-    assert wh.partition_columns("t") == (partition_by or [])
+    more = spark.createDataFrame([("c", 4, "w")], "p string, id int, v string")
+
+    def bare_append():
+        w = more.write.mode("append")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(str(tmp_path / "bare"))
+
+    _, bare = _jobs_during(spark, bare_append)
+    _, jobs = _jobs_during(spark, lambda: wh.append(more, "t", partition_by=partition_by))
+    assert len(jobs) == len(bare)
+    assert wh.read("t").count() == 4
 
 
 def test_read_after_overwrite_partitions_retype(spark, wh):
@@ -107,10 +105,9 @@ def test_read_after_overwrite_partitions_retype(spark, wh):
         spark.createDataFrame([("a", 5, "u"), ("b", 6, "v")], "p string, id bigint, v string"),
         "t", partition_by=["p"],
     )
-    for merge_schema in (False, True):
-        got = wh.read("t", merge_schema=merge_schema)
-        assert got.schema["id"].dataType == T.LongType()
-        assert sorted(r["id"] for r in got.collect()) == [5, 6]
+    got = wh.read("t")
+    assert got.schema["id"].dataType == T.LongType()
+    assert sorted(r["id"] for r in got.collect()) == [5, 6]
 
 
 def test_concurrent_writers_keep_each_tables_schema(spark, wh):
