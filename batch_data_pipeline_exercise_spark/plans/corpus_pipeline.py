@@ -87,31 +87,30 @@ class CorpusPipeline:
     LOG = "_corpus_log"
     SKETCH_CONFIG = "_corpus_sketch_config"
 
+    #: the kept documents' language and minimum quality score
+    LANG = "en"
+    MIN_QUALITY = 0.6
+    #: verify thresholds of the text (Jaccard) and embedding (cosine)
+    #: near-dup stages; the LSH sizing targets them too
+    JACCARD_THRESHOLD = 0.7
+    COSINE_THRESHOLD = 0.95
+    #: output shards, and the token budget of one packing bin
+    N_SHARDS = 8
+    PACK_BUDGET = 2048
+
     def __init__(
         self,
         spark: SparkSession,
         warehouse_root: str,
-        lang: str = "en",
-        min_quality: float = 0.6,
-        jaccard_threshold: float = 0.7,
-        cosine_threshold: float = 0.95,
-        n_shards: int = 8,
-        pack_budget: int = 2048,
         max_text_candidates: int | str | None = "auto",
         max_embedding_candidates: int | str | None = "auto",
         expected_corpus_docs: int | None = None,
         min_recall: float = similarity.SIZING_MIN_RECALL,
         sizing_target_occupancy: int | None = None,
         recycle_session_every: int = 0,
-        extra_conf: dict[str, str] | None = None,
     ):
         self.spark = spark
         self.wh = Warehouse(spark, warehouse_root)
-        #: confs replayed into every recycled session (same contract as
-        #: ``Pipeline.extra_conf``): callers whose session came from
-        #: ``get_spark(extra_conf=...)`` must pass the same dict here or
-        #: the first recycle silently drops those settings
-        self.extra_conf = dict(extra_conf) if extra_conf else None
         #: opt-in (0 = off): rebuild the SparkSession after every N
         #: completed daily runs — see ``Pipeline.recycle_session`` for
         #: the JVM-state rationale. A recycle happens only at the END of
@@ -123,12 +122,6 @@ class CorpusPipeline:
         self._runs_since_recycle = 0
         #: observability: how many times this pipeline recycled its session
         self.session_recycles = 0
-        self.lang = lang
-        self.min_quality = min_quality
-        self.jaccard_threshold = jaccard_threshold
-        self.cosine_threshold = cosine_threshold
-        self.n_shards = n_shards
-        self.pack_budget = pack_budget
         self.max_text_candidates = max_text_candidates
         self.max_embedding_candidates = max_embedding_candidates
         self.min_recall = min_recall
@@ -164,15 +157,15 @@ class CorpusPipeline:
             #   candidate work scales occ²/2, so the target stays at the
             #   scout-health 256 (the rows_per_band_for default).
             self.text_bands, self.text_rows, _ = similarity.bands_rows_for(
-                jaccard_threshold, min_recall, expected_corpus_docs,
+                self.JACCARD_THRESHOLD, min_recall, expected_corpus_docs,
                 sizing_target_occupancy if sizing_target_occupancy is not None else 16384,
             )
             self.emb_bands, self.emb_rows, _ = similarity.bands_rows_for(
-                cosine_threshold, min_recall, expected_corpus_docs,
+                self.COSINE_THRESHOLD, min_recall, expected_corpus_docs,
                 sizing_target_occupancy
                 if sizing_target_occupancy is not None
                 else self.BUDGET_TARGET_OCCUPANCY,
-                p=similarity.cosine_collision_p(cosine_threshold),
+                p=similarity.cosine_collision_p(self.COSINE_THRESHOLD),
             )
             for label, k in (
                 ("text", self.text_bands * self.text_rows),
@@ -234,7 +227,7 @@ class CorpusPipeline:
         from batch_data_pipeline_exercise_spark.session import rebuild_session
 
         root = self.wh.root
-        self.spark = rebuild_session(self.spark, extra_conf=self.extra_conf)
+        self.spark = rebuild_session(self.spark)
         self.wh = Warehouse(self.spark, root)
         self._runs_since_recycle = 0
         self.session_recycles += 1
@@ -507,7 +500,7 @@ class CorpusPipeline:
         )
         scored = scored.localCheckpoint()
         kept = scored.filter(
-            (F.col("lang_pred") == self.lang) & (F.col("quality_score") >= self.min_quality)
+            (F.col("lang_pred") == self.LANG) & (F.col("quality_score") >= self.MIN_QUALITY)
         )
 
         # 2. exact dedup: canonical min-id within the batch, then an
@@ -558,7 +551,7 @@ class CorpusPipeline:
                     max_candidates=self._budget(
                         self.max_text_candidates, n_increment, self.text_bands
                     ),
-                    threshold=self.jaccard_threshold,
+                    threshold=self.JACCARD_THRESHOLD,
                 )
             except LshCandidateBudgetError as e:
                 raise CorpusContractError(
@@ -586,7 +579,7 @@ class CorpusPipeline:
             # integer counts, bit-identical jaccard, one array per doc
             # crossing the pair joins instead of one row per (doc, shingle)
             verified = dedup.verify_jaccard_arrays(
-                cand, colliding, "doc_id", "text", n=3, threshold=self.jaccard_threshold
+                cand, colliding, "doc_id", "text", n=3, threshold=self.JACCARD_THRESHOLD
             )
             drops = self._dup_drops(verified, kept.select("doc_id")).localCheckpoint()
             return drops, lsh_union
@@ -625,7 +618,7 @@ class CorpusPipeline:
                 pairs, sign_union = similarity.incremental_embedding_pairs(
                     prior_sign,
                     emb_in,
-                    threshold=self.cosine_threshold,
+                    threshold=self.COSINE_THRESHOLD,
                     bands=self.emb_bands,
                     rows_per_band=self.emb_rows,
                     id_col="doc_id",
@@ -724,10 +717,10 @@ class CorpusPipeline:
                 )
         # 5. shard + pack the day's survivors for downstream tokenization
         kept = kept.withColumn(
-            "shard", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(self.n_shards)).cast("int")
+            "shard", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(self.N_SHARDS)).cast("int")
         )
         kept = assign_packing_bins(
-            kept, "n_tokens", self.pack_budget, order_cols=["doc_id"], partition_cols=["shard"]
+            kept, "n_tokens", self.PACK_BUDGET, order_cols=["doc_id"], partition_cols=["shard"]
         ).withColumn("ds", F.lit(ds))
 
         # 6. persist — append_once everywhere, so a crashed/replayed run

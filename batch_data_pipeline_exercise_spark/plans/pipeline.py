@@ -75,16 +75,9 @@ class Pipeline:
         spark: SparkSession,
         warehouse_root: str,
         recycle_session_every: int = 0,
-        extra_conf: dict[str, str] | None = None,
     ):
         self.spark = spark
         self.wh = Warehouse(spark, warehouse_root)
-        #: confs to replay into every recycled session. Since r13 the
-        #: recycle also snapshots the LIVE session's explicitly-set
-        #: confs (``session.rebuild_session``), so this dict is
-        #: belt-and-braces for SQL confs; it remains the only channel
-        #: for settings ``SET`` does not list
-        self.extra_conf = dict(extra_conf) if extra_conf else None
         #: opt-in (0 = off): rebuild the SparkSession after every N
         #: completed feed runs. Long-lived local sessions accumulate JVM
         #: state ``_clear_session_state`` cannot drop (README: an 8 GB
@@ -104,9 +97,9 @@ class Pipeline:
     def recycle_session(self) -> SparkSession:
         """Stop the bound SparkSession and rebind this pipeline (and its
         warehouse) to a fresh one carrying the same master, app name,
-        shuffle-partition setting, the constructor's ``extra_conf``, AND
-        every explicitly-set session conf of the live session — runtime
-        ``spark.conf.set`` calls included (``session.rebuild_session``
+        shuffle-partition setting AND every explicitly-set conf of the
+        live session — builder confs and runtime ``spark.conf.set``
+        calls alike (``session.rebuild_session``
         snapshots the ``SET`` list before stopping; r12 verdict task 5 —
         previously a runtime set silently vanished here and could bite
         on day 6 of a soak). All pipeline state lives in the warehouse,
@@ -117,7 +110,7 @@ class Pipeline:
         from batch_data_pipeline_exercise_spark.session import rebuild_session
 
         root = self.wh.root
-        self.spark = rebuild_session(self.spark, extra_conf=self.extra_conf)
+        self.spark = rebuild_session(self.spark)
         self.wh = Warehouse(self.spark, root)
         self._runs_since_recycle = 0
         self.session_recycles += 1

@@ -117,14 +117,14 @@ def _is_identity_key(key: str) -> bool:
 
 def session_conf_snapshot(spark: SparkSession) -> dict[str, str]:
     """Every EXPLICITLY-SET session-level conf of the live session — the
-    ``SET`` command's list, which covers both builder-time configs and
-    runtime ``spark.conf.set`` calls (verified against both in
-    ``tests/test_session_recycle.py``), minus the keys a rebuild manages
-    itself. This is what makes ``rebuild_session`` faithful: before it
-    existed, a conf set after construction silently vanished at the
-    first recycle (r12 verdict task 5). Non-SQL custom keys that ``SET``
-    does not list (e.g. ``spark.my.app.tag``) are outside the contract —
-    they do not affect engine execution. Runtime-identity keys the old
+    ``SET`` command's list, which covers builder-time configs (custom
+    keys such as ``spark.my.app.tag`` and static ones such as
+    ``spark.driver.memory`` included) and runtime ``spark.conf.set``
+    calls (verified in ``tests/test_session_recycle.py``), minus the
+    keys a rebuild manages itself. This is what makes
+    ``rebuild_session`` faithful: before it existed, a conf set after
+    construction silently vanished at the first recycle (r12 verdict
+    task 5). Runtime-identity keys the old
     session minted for itself (``spark.driver.port``/``host``,
     ``spark.app.*``, ``spark.executor.id``) are excluded: they describe
     the DEAD process, and replaying the old ephemeral port can
@@ -136,21 +136,17 @@ def session_conf_snapshot(spark: SparkSession) -> dict[str, str]:
     }
 
 
-def rebuild_session(
-    spark: SparkSession, extra_conf: dict[str, str] | None = None
-) -> SparkSession:
+def rebuild_session(spark: SparkSession) -> SparkSession:
     """Stop ``spark`` and return a fresh session with the same app name,
     master, shuffle-partition setting, and every explicitly-set session
     conf the live session held (builder-time AND runtime ``conf.set`` —
     the snapshot is taken from the live session immediately before
-    stopping it, so what you had is what you get back). ``extra_conf``
-    is the pipeline constructor's replay dict; the live snapshot wins on
-    conflict because a runtime override WAS the session's operative
-    value. Shared by both pipelines' ``recycle_session``."""
+    stopping it, so what you had is what you get back). Shared by both
+    pipelines' ``recycle_session``."""
     sc = spark.sparkContext
     master, app = sc.master, sc.appName
     shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    replay = {**(extra_conf or {}), **session_conf_snapshot(spark)}
+    replay = session_conf_snapshot(spark)
     spark.stop()
     fresh = get_spark(
         app_name=app, master=master, shuffle_partitions=shuffle, extra_conf=replay

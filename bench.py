@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE COMPACT JSON LINE PER QUERY as it settles —
+Prints ONE COMPACT JSON LINE PER QUERY as it finishes —
 ``{"q": name, "wall": s, "codegen_compiles": n, "cpu": s, "shuffle_mb": m,
 "input_mb": m}`` —
 then the compact headline as the LAST line of stdout:
@@ -17,7 +17,9 @@ driver collect) and timed wall-clock. A warmup run of the cheapest query
 absorbs JVM/codegen startup so numbers reflect steady-state throughput.
 
 Besides min-of-3 wall seconds, each per-query line carries executor
-counters read from the Spark UI REST API (mean over the 3 runs):
+counters from ``obs.measure`` — the stages of the jobs tagged during
+the query's 3 runs, read once from the Spark UI REST API — as the mean
+over the 3 runs:
 ``cpu`` (executor CPU seconds), ``shuffle_mb`` (shuffle write),
 ``input_mb`` (scan bytes), and ``codegen_compiles``: the generated
 classes Janino compiled over the 3 runs (generated-class cache misses).
@@ -34,54 +36,15 @@ import os
 import re
 import sys
 import time
-import urllib.request
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql import functions as F
 
+from batch_data_pipeline_exercise_spark.obs import measure
 from batch_data_pipeline_exercise_spark.plans.registry import REGISTRY
-from batch_data_pipeline_exercise_spark.session import codegen_compiles, get_spark
-
-
-def _stage_totals(ui_url: str) -> dict[str, float] | None:
-    """Cumulative executor counters summed over completed stages, via the
-    UI REST API. The status store updates asynchronously, so the caller
-    polls this until two reads agree. Returns None if the UI is off."""
-    try:
-        with urllib.request.urlopen(f"{ui_url}/api/v1/applications", timeout=5) as r:
-            app_id = json.load(r)[0]["id"]
-        url = f"{ui_url}/api/v1/applications/{app_id}/stages?status=complete"
-        with urllib.request.urlopen(url, timeout=5) as r:
-            stages = json.load(r)
-    except Exception:
-        return None
-    return {
-        "cpu": sum(s.get("executorCpuTime", 0) for s in stages) / 1e9,
-        "shuffle_mb": sum(s.get("shuffleWriteBytes", 0) for s in stages) / 2**20,
-        "input_mb": sum(s.get("inputBytes", 0) for s in stages) / 2**20,
-        "stages": float(len(stages)),
-    }
-
-
-def _settled_totals(ui_url: str) -> dict[str, float] | None:
-    """Poll until three consecutive reads agree (the status store drains
-    its event queue asynchronously; a 2-read check can observe a
-    stable-but-stale view mid-drain and misattribute a stage's cost to
-    the neighboring query)."""
-    prev = _stage_totals(ui_url)
-    if prev is None:
-        return None
-    stable = 0
-    for _ in range(40):
-        time.sleep(0.25)
-        cur = _stage_totals(ui_url)
-        stable = stable + 1 if cur == prev else 0
-        prev = cur
-        if stable >= 2:
-            return cur
-    return prev
+from batch_data_pipeline_exercise_spark.session import get_spark
 
 
 #: min-of-runs wall seconds of ``_calibration_fn`` on the round-12
@@ -112,38 +75,33 @@ def _calibration_fn(spark):
     )
 
 
-def _run_calibration(
-    spark, ui_url: str | None = None, runs: int = 3
-) -> tuple[float, float | None, dict[str, float] | None]:
+def _noop_min_wall(make_df, runs: int = 3) -> float:
+    """Min wall seconds over ``runs`` full executions of ``make_df()``
+    to the ``noop`` sink."""
+    best = float("inf")
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        make_df().write.mode("overwrite").format("noop").save()
+        best = min(best, time.perf_counter() - t0)
+    return best
+
+
+def _run_calibration(spark, runs: int = 3) -> tuple[float, float | None]:
     """One calibration leg: min-of-``runs`` wall seconds of the probe,
     plus (r13 verdict task 2) the leg's mean executor-CPU seconds per
-    run from the UI REST counters. Wall legs detect the box's SPEED
+    run, from ``obs.measure``. Wall legs detect the box's SPEED
     changing mid-bench; CPU legs detect the counter channel itself
     inflating under contention — the r13 rounds saw identical-code
     cpu_total_sec swing 115-210 s across contended runs, so an artifact
     could be wall-suspect yet still present misleading CPU totals with
-    nothing to cross-check them against. Returns ``(wall, cpu_per_run,
-    post_totals)``; the post-leg totals double as the caller's fresh
-    counter baseline (the probe's stages must not be attributed to the
-    next query). CPU is None when the UI is off or a read fails."""
-    pre = _settled_totals(ui_url) if ui_url else None
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        _calibration_fn(spark).write.mode("overwrite").format("noop").save()
-        best = min(best, time.perf_counter() - t0)
-    post = _settled_totals(ui_url) if ui_url else None
-    cpu = (
-        round((post["cpu"] - pre["cpu"]) / runs, 3)
-        if pre is not None and post is not None
-        else None
-    )
-    return best, cpu, post
+    nothing to cross-check them against. CPU is None when the UI is off
+    or the read fails."""
+    best, rec = measure(spark, lambda: _noop_min_wall(lambda: _calibration_fn(spark), runs))
+    cpu = None if rec["exec_cpu_s"] is None else round(rec["exec_cpu_s"] / runs, 3)
+    return best, cpu
 
 
-def _scan_probe(
-    spark, sf_dir: str, ui_url: str | None
-) -> tuple[float | None, dict[str, float] | None]:
+def _scan_probe(spark, sf_dir: str) -> float | None:
     """Informational scan-throughput leg (r13 verdict task 2's second
     channel): full-width scan of lineitem to the noop sink, reported as
     on-disk parquet MB per wall second. The numerator is the file size
@@ -155,20 +113,18 @@ def _scan_probe(
     page cache, so the rate reads decode+memory bandwidth more than
     disk and its quiet-box variance is wider than the CPU probe's; it
     is a recorded channel for a human comparing rounds, not a gate.
-    Returns ``(mbps, post_totals)`` so the caller can re-baseline its
-    per-query counter deltas past the probe's stages."""
+    Measured under its own job tag, so its stages are billed to no
+    query."""
     path = Path(sf_dir) / "lineitem.parquet"
     size_mb = (
         sum(p.stat().st_size for p in path.rglob("*") if p.is_file())
         if path.is_dir()
         else path.stat().st_size
     ) / 2**20
-    t0 = time.perf_counter()
-    spark.read.parquet(str(path)).write.mode("overwrite").format("noop").save()
-    wall = time.perf_counter() - t0
-    post = _settled_totals(ui_url) if ui_url else None
-    mbps = round(size_mb / wall, 1) if wall > 0 else None
-    return mbps, post
+    _, rec = measure(
+        spark, lambda: spark.read.parquet(str(path)).write.mode("overwrite").format("noop").save()
+    )
+    return round(size_mb / rec["wall_s"], 1) if rec["wall_s"] > 0 else None
 
 
 def normalized_headline(value: float, calibration: float) -> float:
@@ -269,12 +225,11 @@ def main() -> None:
         master=f"local[{cpus}]",
         shuffle_partitions=int(cpus),
         # the whole bench is ~24 queries x 3 runs x O(10) stages; keep
-        # every stage in the status store so the REST counter deltas
-        # below are exact (default retention evicts at 1000)
+        # every stage in the status store (default retention evicts at
+        # 1000) so the run's stages can also be totalled at the end
         extra_conf={"spark.ui.retainedStages": "100000", "spark.ui.retainedJobs": "100000"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    ui_url = spark.sparkContext.uiWebUrl
 
     headline = [q for q in REGISTRY.values() if q.bench]
 
@@ -290,14 +245,20 @@ def main() -> None:
     # inflated the artifact 22% while both probe legs ran quiet). Each
     # leg also records its probe executor-CPU (r13 task 2: the counter
     # channel's own health check) and an informational scan MB/s.
-    leg_wall, leg_cpu, _ = _run_calibration(spark, ui_url)
-    calibration_legs, cpu_legs = [leg_wall], [leg_cpu]
-    scan_mbps, post = _scan_probe(spark, sf_dir, ui_url)
-    scan_legs = [scan_mbps]
-    print(
-        json.dumps({"calibration_leg1": round(leg_wall, 3), "cpu": leg_cpu, "scan_mbps": scan_mbps}),
-        flush=True,
-    )
+    calibration_legs: list[float] = []
+    cpu_legs: list[float | None] = []
+    scan_legs: list[float | None] = []
+
+    def leg() -> tuple[float, dict]:
+        wall, cpu = _run_calibration(spark)
+        scan_mbps = _scan_probe(spark, sf_dir)
+        calibration_legs.append(wall)
+        cpu_legs.append(cpu)
+        scan_legs.append(scan_mbps)
+        return round(wall, 3), {"cpu": cpu, "scan_mbps": scan_mbps}
+
+    wall, fields = leg()
+    print(json.dumps({"calibration_leg1": wall, **fields}), flush=True)
     _clear_session_state(spark)
 
     # three timed runs per query, keep the min — strips one-off codegen /
@@ -306,87 +267,39 @@ def main() -> None:
     timings: dict[str, float] = {}
     resource: dict[str, dict[str, float]] = {}
     resource_partial = False
-    prev_stale = False
-    prev = post if post is not None else _settled_totals(ui_url)
     mid_at = len(headline) // 2  # mid calibration leg after this many queries
     for qi, q in enumerate(headline):
-        best = float("inf")
-        compiles0 = codegen_compiles(spark)
-        for _ in range(3):
-            t0 = time.perf_counter()
-            q.fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
+        best, rec = measure(spark, lambda: _noop_min_wall(lambda: q.fn(spark, sf_dir)))
         timings[q.name] = round(best, 3)
         _clear_session_state(spark)
         line: dict[str, object] = {
-            "q": q.name, "wall": round(best, 3),
-            "codegen_compiles": codegen_compiles(spark) - compiles0,
+            "q": q.name, "wall": round(best, 3), "codegen_compiles": rec["codegen_compiles"],
         }
-        if prev is not None:
-            cur = _settled_totals(ui_url)
-            if cur is None:
-                # transient UI read failure: this query's counters are
-                # missing, flagged on its own line — and the baseline is
-                # now STALE (it predates this query's runs)
-                resource_partial = True
-                line["resource_missing"] = True
-                prev_stale = True
-            elif prev_stale:
-                # the delta since the last good baseline spans BOTH the
-                # query whose read failed and this one — attributing it
-                # here would inflate this query by its neighbor's whole
-                # cost, so drop this delta too and re-baseline from cur
-                resource_partial = True
-                line["resource_missing"] = True
-                prev = cur
-                prev_stale = False
-            else:
-                # mean over the 3 identical runs — per-run plan cost
-                resource[q.name] = {
-                    k: round((cur[k] - prev[k]) / 3, 3) for k in ("cpu", "shuffle_mb", "input_mb")
-                }
-                line.update(resource[q.name])
-                prev = cur
+        if rec["exec_cpu_s"] is None:
+            # the UI read failed: only this query's counters are missing
+            resource_partial = True
+            line["resource_missing"] = True
+        else:
+            # mean over the 3 identical runs — per-run plan cost
+            resource[q.name] = {
+                k: round(rec[src] / 3, 3)
+                for k, src in (("cpu", "exec_cpu_s"), ("shuffle_mb", "shuffle_write_mb"),
+                               ("input_mb", "input_mb"))
+            }
+            line.update(resource[q.name])
         # flush immediately: the per-query record must hit stdout before a
         # later query can crash or the tail window can close over it
         print(json.dumps(line), flush=True)
         if qi + 1 == mid_at:
-            # mid-run calibration leg — the probe's stages would land in
-            # the NEXT query's counter delta, so re-baseline after it
-            leg_wall, leg_cpu, post = _run_calibration(spark, ui_url)
-            calibration_legs.append(leg_wall)
-            cpu_legs.append(leg_cpu)
-            scan_mbps, post = _scan_probe(spark, sf_dir, ui_url)
-            scan_legs.append(scan_mbps)
-            print(
-                json.dumps({
-                    "calibration_leg_mid": round(leg_wall, 3),
-                    "cpu": leg_cpu, "scan_mbps": scan_mbps,
-                }),
-                flush=True,
-            )
+            wall, fields = leg()
+            print(json.dumps({"calibration_leg_mid": wall, **fields}), flush=True)
             _clear_session_state(spark)
-            if prev is not None:
-                if post is None:
-                    # ADVICE r13: a transient UI failure here must not keep
-                    # the stale PRE-probe baseline — the next query's delta
-                    # would silently absorb both probes' CPU/shuffle. Mark
-                    # stale so the next delta is dropped and re-baselined,
-                    # mirroring the in-loop handling.
-                    prev_stale = True
-                    resource_partial = True
-                else:
-                    prev = post
 
     if resource_partial:
         print(json.dumps({"resource_partial": True}), flush=True)
 
     # calibration probe, final leg
-    leg_wall, leg_cpu, _ = _run_calibration(spark, ui_url)
-    calibration_legs.append(leg_wall)
-    cpu_legs.append(leg_cpu)
-    scan_mbps, _ = _scan_probe(spark, sf_dir, ui_url)
-    scan_legs.append(scan_mbps)
+    leg()
     cal = calibration_fields(calibration_legs, cpu_legs)
     cal["calibration_scan_mbps_legs"] = scan_legs
     calibration = cal["calibration_sec"]

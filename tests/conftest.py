@@ -13,8 +13,9 @@ def spark():
         app_name="bdpe-spark-tests",
         master="local[4]",
         shuffle_partitions=4,
+        # the UI stays on: obs.measure reads its cost records from the
+        # UI REST API (tests/test_obs.py)
         extra_conf={
-            "spark.ui.enabled": "false",
             "spark.driver.memory": "4g",
             "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="spark-warehouse-"),
         },

@@ -80,9 +80,9 @@ import numpy as np
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
+from batch_data_pipeline_exercise_spark.obs import measure  # noqa: E402
 from batch_data_pipeline_exercise_spark.plans.corpus_pipeline import CorpusPipeline  # noqa: E402
 from batch_data_pipeline_exercise_spark.session import get_spark  # noqa: E402
-from bench import _settled_totals  # noqa: E402
 
 SRC = "/root/testdata/sf0.1/documents.parquet"
 FRESH_PER_DAY = 450
@@ -187,26 +187,35 @@ def _build_days(spark, n_days: int = N_DAYS) -> list[tuple[str, list[tuple], lis
 
 
 def _run_sequence(
-    spark, root: str, days, maintain: bool, ui_url, out: list | None, **pipeline_kwargs
+    spark, root: str, days, maintain: bool, out: list | None, **pipeline_kwargs
 ) -> CorpusPipeline:
     cp = CorpusPipeline(spark, root, **pipeline_kwargs)
-    for ds, docs, embs in days:
+    every = cp.recycle_session_every
+    for day_no, (ds, docs, embs) in enumerate(days, 1):
         # cp.spark, not the captured session: a recycling pipeline
         # rebinds itself to a fresh session at run boundaries and the
-        # old one is dead (its UI too — re-derive the URL per day)
-        ui_url = cp.spark.sparkContext.uiWebUrl
+        # old one is dead
         recycles_before = cp.session_recycles
         ddf = cp.spark.createDataFrame(docs, "doc_id long, text string")
         edf = cp.spark.createDataFrame(embs, "doc_id long, embedding array<double>")
-        before = _settled_totals(ui_url) if out is not None else None
-        t0 = time.perf_counter()
-        stats = cp.run(ddf, ds, embeddings=edf)
-        wall = time.perf_counter() - t0
+
+        def day():
+            t0 = time.perf_counter()
+            stats = cp.run(ddf, ds, embeddings=edf)
+            wall = time.perf_counter() - t0
+            return stats, wall, cp.maintain() if maintain else []
+
+        cpu = None
+        if out is not None and not (every and day_no % every == 0):
+            (stats, wall, compacted), cost = measure(cp.spark, day)
+            if cost["exec_cpu_s"] is not None:
+                cpu = round(cost["exec_cpu_s"], 2)
+        else:
+            # a recycle day stops its session at the end of run, so the
+            # old session's counters cannot be read afterwards
+            stats, wall, compacted = day()
         recycled = cp.session_recycles > recycles_before
-        compacted = cp.maintain() if maintain else []
         if out is not None:
-            after = None if recycled else _settled_totals(ui_url)
-            cpu = round(after["cpu"] - before["cpu"], 2) if before and after else None
             rec = {
                 "recycled": recycled,
                 **{k: stats[k] for k in ("ds", "docs_in", "docs_shingled", "docs_kept", "corpus_total")},
@@ -264,7 +273,6 @@ def main() -> None:
         extra_conf={"spark.ui.retainedStages": "100000", "spark.ui.retainedJobs": "100000"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    ui_url = spark.sparkContext.uiWebUrl
     if not explicit_source:
         SRC = _provision_pool(spark, n_days * FRESH_PER_DAY)
     days = _build_days(spark, n_days)
@@ -272,7 +280,7 @@ def main() -> None:
     records: list[dict] = []
     with tempfile.TemporaryDirectory() as tmp:
         cp = _run_sequence(
-            spark, f"{tmp}/soak", days, maintain=True, ui_url=ui_url, out=records,
+            spark, f"{tmp}/soak", days, maintain=True, out=records,
             **pipeline_kwargs,
         )
         final = sorted(
@@ -286,7 +294,7 @@ def main() -> None:
             k: v for k, v in pipeline_kwargs.items() if k != "recycle_session_every"
         }
         cp2 = _run_sequence(
-            cp.spark, f"{tmp}/rebuild", days, maintain=False, ui_url=ui_url, out=None,
+            cp.spark, f"{tmp}/rebuild", days, maintain=False, out=None,
             **rebuild_kwargs,
         )
         rebuilt = sorted(

@@ -17,6 +17,7 @@ router order to a round).
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
@@ -49,11 +50,15 @@ NAME_ONLY = {"event-time windows"}
 
 
 def family_of(name: str, doc: str) -> str:
+    """Substring match on the name; whole-word match on the doc, where
+    "part" must not hit "partition" nor "value" hit "values"."""
     for keys, fam in FAMILIES:
         if any(k in name for k in keys):
             return fam
     for keys, fam in FAMILIES:
-        if fam not in NAME_ONLY and any(k in doc.lower() for k in keys):
+        if fam not in NAME_ONLY and any(
+            re.search(rf"\b{re.escape(k)}\b", doc.lower()) for k in keys
+        ):
             return fam
     return "other"
 

@@ -11,6 +11,7 @@ import uuid
 
 import pytest
 
+from batch_data_pipeline_exercise_spark.obs import measure
 from batch_data_pipeline_exercise_spark.operators import similarity
 from batch_data_pipeline_exercise_spark.plans.corpus_pipeline import CorpusPipeline
 from tests.test_corpus_pipeline import (
@@ -98,17 +99,9 @@ def test_failed_embedding_stage_waits_for_text_stage_and_replay_converges(
 def test_branch_jobs_keep_the_callers_job_group_and_tags(spark, tmp_path):
     cp = CorpusPipeline(spark, str(tmp_path / "wh"))
     sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
 
     def marker_job() -> int:
-        group = f"marker-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            sc.parallelize([1]).count()
-        finally:
-            sc._jsc.clearJobGroup()
-        bus.waitUntilEmpty()
-        (job,) = sc.statusTracker().getJobIdsForGroup(group)
+        (job,) = measure(spark, sc.parallelize([1]).count)[1]["jobs"]
         return job
 
     group, tag = f"corpus-run-{uuid.uuid4().hex}", f"corpus-run-tag-{uuid.uuid4().hex}"

@@ -129,7 +129,7 @@ def test_two_day_incremental_run(spark, corpus_wh):
 
     # survivors carry shard + packing-bin assignments
     row = cp.wh.read(cp.DOCS).filter("doc_id = 13").collect()[0]
-    assert 0 <= row["shard"] < cp.n_shards and row["bin"] >= 0
+    assert 0 <= row["shard"] < cp.N_SHARDS and row["bin"] >= 0
 
 
 def test_rerun_is_noop(spark, corpus_wh):
@@ -377,10 +377,10 @@ def test_sized_pipeline_and_sketch_config_guard(spark, corpus_wh):
             sizing_target_occupancy=256,
         )
     assert (
-        similarity.lsh_recall(cp.jaccard_threshold, cp.text_bands, cp.text_rows)
+        similarity.lsh_recall(cp.JACCARD_THRESHOLD, cp.text_bands, cp.text_rows)
         >= similarity.SIZING_MIN_RECALL
     )
-    p = similarity.cosine_collision_p(cp.cosine_threshold)
+    p = similarity.cosine_collision_p(cp.COSINE_THRESHOLD)
     assert (
         similarity.lsh_recall(p, cp.emb_bands, cp.emb_rows)
         >= similarity.SIZING_MIN_RECALL

@@ -2,10 +2,9 @@
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 
+from batch_data_pipeline_exercise_spark.obs import measure
 from batch_data_pipeline_exercise_spark.operators import graph
 
 
@@ -77,18 +76,6 @@ def test_pagerank_scaled_deterministic_and_ranks_hubs(spark):
     assert all(v > 0 for v in a.values())
 
 
-def _jobs_and_labels(spark, edges, **kwargs):
-    sc = spark.sparkContext
-    group = f"cc-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = comp_map(graph.connected_components(edges, **kwargs))
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-
 @pytest.mark.parametrize("side", ["broadcast", "shuffle"])
 def test_max_edges_bound_skips_the_count_with_identical_labels(spark, monkeypatch, side):
     # an upper bound on the symmetrized edge count replaces the upfront
@@ -100,8 +87,12 @@ def test_max_edges_bound_skips_the_count_with_identical_labels(spark, monkeypatc
         # force the shuffle strategy for both calls with a gate below
         # the graph's real size
         monkeypatch.setattr(graph, "CC_BROADCAST_MAX_EDGES", bound - 1)
-    counted_jobs, counted = _jobs_and_labels(spark, edges)
-    bounded_jobs, bounded = _jobs_and_labels(spark, edges, max_edges=bound)
+    counted, rec = measure(spark, lambda: comp_map(graph.connected_components(edges)))
+    counted_jobs = len(rec["jobs"])
+    bounded, rec = measure(
+        spark, lambda: comp_map(graph.connected_components(edges, max_edges=bound))
+    )
+    bounded_jobs = len(rec["jobs"])
     assert bounded == counted == {1: 1, 5: 1, 9: 1, 2: 2, 3: 2, 4: 2, 7: 7, 8: 7}
     # the count is two jobs under adaptive execution: the distinct's
     # shuffle map stage, then the count itself

@@ -10,6 +10,7 @@ import uuid
 
 import pytest
 
+from batch_data_pipeline_exercise_spark.obs import measure
 from batch_data_pipeline_exercise_spark.plans.pipeline import Pipeline
 from batch_data_pipeline_exercise_spark.sources.warehouse import Warehouse
 
@@ -98,17 +99,9 @@ def test_branch_jobs_keep_the_callers_job_group_and_tags(spark, tmp_path):
     d1, _ = _feeds(tmp_path)
     p = _pipeline(spark, str(tmp_path / "wh"))
     sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
 
     def marker_job() -> int:
-        group = f"marker-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            sc.parallelize([1]).count()
-        finally:
-            sc._jsc.clearJobGroup()
-        bus.waitUntilEmpty()
-        (job,) = sc.statusTracker().getJobIdsForGroup(group)
+        (job,) = measure(spark, sc.parallelize([1]).count)[1]["jobs"]
         return job
 
     group, tag = f"run-orders-{uuid.uuid4().hex}", f"run-orders-tag-{uuid.uuid4().hex}"

@@ -161,18 +161,14 @@ def test_conf_snapshot_excludes_runtime_identity_keys(spark):
     assert "spark.sql.session.timeZone" in snap
 
 
-def test_recycle_replays_extra_conf_and_runtime_sets(tmp_path):
-    """Round-12 advice + r12 verdict task 5, in two steps: recycled
-    sessions were originally rebuilt from only (app, master, shuffle
-    partitions); r12 added the constructor ``extra_conf`` replay; r13
-    lifted the remaining documented limitation by snapshotting the LIVE
-    session's explicitly-set confs (the ``SET`` list — builder configs
-    and runtime ``spark.conf.set`` alike) immediately before the stop
-    (``session.rebuild_session``). Three contracts pinned here:
-    constructor ``extra_conf`` survives; a post-construction runtime
-    ``conf.set`` NOT in any ``extra_conf`` survives; and a runtime
-    override of an ``extra_conf`` key wins (the live value was the
-    session's operative one)."""
+def test_recycle_replays_builder_and_runtime_confs(tmp_path):
+    """Recycled sessions were originally rebuilt from only (app, master,
+    shuffle partitions); r13 snapshots the LIVE session's explicitly-set
+    confs (the ``SET`` list — builder configs and runtime
+    ``spark.conf.set`` alike) immediately before the stop
+    (``session.rebuild_session``). Pinned here: a builder-time custom
+    key survives a recycle of either pipeline, and post-construction
+    runtime ``conf.set`` calls survive too."""
     script = r"""
 import json, sys
 from batch_data_pipeline_exercise_spark.plans.corpus_pipeline import CorpusPipeline
@@ -181,32 +177,23 @@ from batch_data_pipeline_exercise_spark.session import get_spark
 
 KEY = "spark.sql.autoBroadcastJoinThreshold"
 KEY2 = "spark.sql.parquet.filterPushdown"
-spark = get_spark(app_name="conf-test", master="local[2]", shuffle_partitions=4)
+TAG = "spark.my.app.tag"
+spark = get_spark(app_name="conf-test", master="local[2]", shuffle_partitions=4,
+                  extra_conf={TAG: "nightly"})
 spark.sparkContext.setLogLevel("ERROR")
 
-marker = {KEY: "1048576"}
-pipe = Pipeline(spark, sys.argv[1], extra_conf=marker)
-pipe.recycle_session()
-v_pipe = pipe.spark.conf.get(KEY)
-
-cp = CorpusPipeline(pipe.spark, sys.argv[2], extra_conf=marker)
+cp = CorpusPipeline(spark, sys.argv[2])
 cp.recycle_session()
-v_corpus = cp.spark.conf.get(KEY)
+v_corpus = cp.spark.conf.get(TAG)
 
 bare = Pipeline(cp.spark, sys.argv[1])
-bare.spark.conf.set(KEY, "2097152")   # runtime set, not in extra_conf
+bare.spark.conf.set(KEY, "2097152")   # runtime set of a builder-default key
 bare.spark.conf.set(KEY2, "false")    # runtime set of an untouched key
 bare.recycle_session()
 v_bare = bare.spark.conf.get(KEY)
 v_bare2 = bare.spark.conf.get(KEY2)
-
-# runtime override of an extra_conf key: the live value must win
-both = Pipeline(bare.spark, sys.argv[1], extra_conf={KEY: "1048576"})
-both.spark.conf.set(KEY, "4194304")
-both.recycle_session()
-v_both = both.spark.conf.get(KEY)
-print(json.dumps({"pipe": v_pipe, "corpus": v_corpus, "bare": v_bare,
-                  "bare2": v_bare2, "both": v_both}))
+print(json.dumps({"corpus": v_corpus, "pipe": bare.spark.conf.get(TAG),
+                  "bare": v_bare, "bare2": v_bare2}))
 """
     r = subprocess.run(
         [sys.executable, "-c", script, str(tmp_path / "wh"), str(tmp_path / "cwh")],
@@ -214,12 +201,9 @@ print(json.dumps({"pipe": v_pipe, "corpus": v_corpus, "bare": v_bare,
     )
     assert r.returncode == 0, r.stderr[-2000:]
     out = json.loads(r.stdout.strip().splitlines()[-1])
-    # extra_conf survives the recycle in both pipelines (the marker was
-    # NOT part of the first session build, so only the replay explains it)
-    assert out["pipe"] == "1048576"
-    assert out["corpus"] == "1048576"
+    # a builder-time custom key survives recycles of both pipelines
+    assert out["corpus"] == "nightly"
+    assert out["pipe"] == "nightly"
     # r13: runtime-set confs survive too — no silently-dropped settings
     assert out["bare"] == "2097152"
     assert out["bare2"] == "false"
-    # live runtime override beats the constructor extra_conf on conflict
-    assert out["both"] == "4194304"

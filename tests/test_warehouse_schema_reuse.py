@@ -6,11 +6,11 @@ from __future__ import annotations
 
 import sys
 import threading
-import uuid
 
 import pytest
 import pyspark.sql.types as T
 
+from batch_data_pipeline_exercise_spark.obs import measure
 from batch_data_pipeline_exercise_spark.sources.warehouse import Warehouse
 
 #: one unpartitioned and one Hive-partitioned layout
@@ -20,20 +20,6 @@ LAYOUTS = [None, ["p"]]
 @pytest.fixture()
 def wh(spark, tmp_path):
     return Warehouse(spark, str(tmp_path / "wh"))
-
-
-def _jobs_during(spark, fn):
-    """Run ``fn`` under a fresh job group; return its result and the ids
-    of the Spark jobs it launched."""
-    sc = spark.sparkContext
-    group = f"schema-reuse-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _rows(df):
@@ -49,17 +35,17 @@ def _base(spark):
 @pytest.mark.parametrize("partition_by", LAYOUTS)
 def test_repeated_read_launches_no_job(spark, wh, partition_by):
     wh.overwrite(_base(spark), "t", partition_by=partition_by)
-    first, jobs = _jobs_during(spark, lambda: wh.read("t"))
-    assert jobs, "the first read infers the schema with a Spark job"
-    again, jobs = _jobs_during(spark, lambda: wh.read("t"))
-    assert jobs == []
+    first, rec = measure(spark, lambda: wh.read("t"))
+    assert rec["jobs"], "the first read infers the schema with a Spark job"
+    again, rec = measure(spark, lambda: wh.read("t"))
+    assert rec["jobs"] == []
     assert again.schema == first.schema
     assert _rows(again) == _rows(first)
     # append conforms to the existing columns, so the schema stays known
     wh.append(spark.createDataFrame([("c", 4, "w")], "p string, id int, v string"), "t",
               partition_by=partition_by)
-    after, jobs = _jobs_during(spark, lambda: wh.read("t"))
-    assert jobs == []
+    after, rec = measure(spark, lambda: wh.read("t"))
+    assert rec["jobs"] == []
     assert after.count() == 4
 
 
@@ -91,9 +77,9 @@ def test_append_after_read_launches_no_inference_job(spark, wh, tmp_path, partit
             w = w.partitionBy(*partition_by)
         w.parquet(str(tmp_path / "bare"))
 
-    _, bare = _jobs_during(spark, bare_append)
-    _, jobs = _jobs_during(spark, lambda: wh.append(more, "t", partition_by=partition_by))
-    assert len(jobs) == len(bare)
+    _, bare = measure(spark, bare_append)
+    _, rec = measure(spark, lambda: wh.append(more, "t", partition_by=partition_by))
+    assert len(rec["jobs"]) == len(bare["jobs"])
     assert wh.read("t").count() == 4
 
 
