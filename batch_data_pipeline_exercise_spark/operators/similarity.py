@@ -8,6 +8,12 @@ sign-sketch key run as vectorized mapInArrow kernels
 (``_cosine_pairs_arrow_batches``, ``_sketch_arrow_batches``) whose
 sequential folds match the JVM ``aggregate`` forms bit for bit. Both
 paths are deterministic: hyperplanes come from a seeded generator.
+
+Embedding near-dup pairs have one producer, ``incremental_embedding_pairs``:
+a one-shot search is its no-history case (``prior_index=None``). A pair
+that collides in several bands is kept only at its smallest colliding
+band, by a map-side filter in the verify join, so no pair-wide
+``distinct`` exchange sits between the sketch and the scored pairs.
 """
 
 from __future__ import annotations
@@ -53,7 +59,8 @@ def cosine_topk_bruteforce(
 ) -> DataFrame:
     """Exact top-k neighbors per query by cosine. Queries are broadcast
     (the expected shape: few queries × huge corpus); ranking ties break on
-    neighbor id for determinism. Self-matches (same id) are excluded.
+    neighbor id for determinism. Self-matches (same id) are excluded, and
+    so is any pair with a NULL cosine (a NULL vector is nobody's neighbor).
 
     Output: (query_id, neighbor_id, rank, cosine).
     """
@@ -74,7 +81,7 @@ def cosine_topk_bruteforce(
     joined = F.broadcast(q).join(e, F.col("query_id") != F.col("neighbor_id"))
     scored = _cosine_scored_pairs(
         joined, "query_id", "neighbor_id", "__q", "__v", "__nq", "__nv"
-    )
+    ).filter(F.col("cosine").isNotNull())
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
@@ -83,6 +90,16 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     """Deterministic random hyperplanes (Gaussian components, seeded)."""
     rng = random.Random(seed)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
+
+
+def _vector_width(df: DataFrame, vec_col: str) -> int:
+    """Width of the first non-NULL, non-empty vector in ``vec_col`` — one
+    Spark action, the probe behind every ``dim=None`` call. NULL and
+    empty vectors key to 0 in every band at ANY width, so an input
+    holding no other vector reports width 1, which every kernel accepts
+    (its pairs all verify to a NULL cosine: no pairs)."""
+    row = df.select(vec_col).filter(F.size(vec_col) > 0).first()
+    return len(row[0]) if row is not None else 1
 
 
 def cosine_topk_lsh(
@@ -105,7 +122,7 @@ def cosine_topk_lsh(
     Pass ``dim`` explicitly in pipelines — the ``.first()`` fallback costs
     one extra Spark action to probe the vector width."""
     if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
+        dim = _vector_width(embeddings, vec_col)
 
     def bucketed(df, id_in, vec_in, id_out, v, nrm, bkt):
         # the sign-sketch kernel as ONE band of n_planes rows: bucket
@@ -126,7 +143,7 @@ def cosine_topk_lsh(
     )
     scored = _cosine_scored_pairs(
         joined, "query_id", "neighbor_id", "__q", "__v", "__nq", "__nv"
-    )
+    ).filter(F.col("cosine").isNotNull())
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
@@ -429,193 +446,6 @@ def ivf_assignment_audit(assigned: DataFrame, centroids: DataFrame) -> DataFrame
     return argmax_ok.join(F.broadcast(finite)).join(F.broadcast(cells))
 
 
-def embedding_near_dup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    bands: int = 8,
-    rows_per_band: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    bucket_cap: int | None = None,
-    max_candidates: int | None = None,
-    on_over_budget: str = "raise",
-    n_rows: int | None = None,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via MULTI-BAND sign-bit LSH
-    (the minhash-band construction transplanted to random hyperplanes):
-    candidates = any-band collision, verified by exact cosine ≥
-    threshold. Output (id1, id2, cosine).
-
-    Per band, the key packs ``rows_per_band`` sign bits → 2^rows_per_band
-    buckets per band; a pair collides if ALL bits of SOME band agree.
-    For p = 1 - acos(cos)/π, recall = 1 - (1 - p^rows)^bands: with the
-    8×8 default, a 0.95-cosine pair is caught 98.8% of the time while an
-    uncorrelated pair (p≈0.5) collides in a band with chance 2^-8. The
-    scale knobs are independent: raise ``rows_per_band`` to shrink
-    buckets as the corpus grows (each +1 bit halves expected bucket
-    occupancy n/2^rows), raise ``bands`` to buy recall back — the single
-    fixed-2^8-bucket sketch this replaces had a hard n/256 occupancy
-    ceiling and degenerated toward the quadratic join at ~10^9 vectors.
-
-    Pass ``dim`` explicitly in pipelines — the ``.first()`` fallback costs
-    one extra Spark action to probe the vector width.
-
-    ``bucket_cap`` (default ``SIGN_BUCKET_CAP``) is the per-bucket
-    occupancy guardrail — see ``_bucketed_self_pairs``: over-cap buckets
-    contribute the identical pairs through a chunk-split so one
-    degenerate bucket cannot pin an executor core; output is
-    byte-identical at any cap.
-
-    ``max_candidates`` (opt-in) prices the candidate join BEFORE
-    launching it and raises ``LshCandidateBudgetError`` with the exact
-    collision count and a sized ``rows_per_band`` suggestion when the
-    verify join would exceed the budget. The gate reads the occupancy
-    summary off the SAME pinned sketch the join uses, so it costs one
-    narrow (band, key) count shuffle over already-materialized keys —
-    the hyperplane projection is NOT repeated (a refusal does pay the
-    linear sketch materialization, which is the bounded cost that makes
-    the quadratic join refusable at all). When the scout passes, output
-    is identical to the unbudgeted call (the guard never touches the
-    plan).
-
-    ``on_over_budget`` (r13 verdict task 3) chooses the guardrail's
-    over-budget behavior: ``"raise"`` (default) refuses with the sized
-    suggestion; ``"resize"`` auto-escalates — the pick the refusal
-    would only have SUGGESTED is applied instead
-    (``auto_sized_sketch_pick`` at the operator's own threshold and
-    ``SIZING_MIN_RECALL``), the sketch rebuilt, and the actual scout
-    count re-gated (content-skewed corpora can exceed the uniform
-    model; each retry raises the row floor, so the loop terminates).
-    Because resizing changes which near-threshold pairs the sketch can
-    catch, the mode is opt-in AND self-describing: every output row
-    carries a constant-key broadcast audit block — requested_bands/
-    requested_rows (the caller's pinned config), sketch_bands/
-    sketch_rows (what actually ran), sketch_resized — so a downstream
-    reader can always tell an escalated run from a pinned one. The
-    escalation never fires under budget: a "resize" run that fits at
-    the pinned config is the pinned plan plus the audit columns."""
-    if on_over_budget not in ("raise", "resize"):
-        raise ValueError(f"on_over_budget must be 'raise' or 'resize', got {on_over_budget!r}")
-    if on_over_budget == "resize" and max_candidates is None:
-        raise ValueError(
-            "on_over_budget='resize' needs max_candidates: without a budget "
-            "there is no over-budget signal to escalate on"
-        )
-    eff_bands, eff_rows, resized = bands, rows_per_band, False
-    vecs = banded_sign_sketch(embeddings, eff_bands, eff_rows, seed, id_col, vec_col, dim)
-    bk = _explode_band_keys(vecs)
-    # ONE sizing probe feeds BOTH downstream gates (round-10: every
-    # extra Spark action costs a fixed ~2-5 executor-CPU s on a 32-way
-    # local session regardless of data size — the r9 guardrails' two
-    # added actions doubled this query's small-corpus CPU; see
-    # evidence/ABSCOUT_r10.jsonl). Gated callers already pay one action
-    # for the occupancy summary, which carries the EXACT item count —
-    # reuse it instead of relearning n with a second probe; ungated
-    # callers learn it from a LIMIT-capped count. Either way the count
-    # decides (a) whether _bucketed_self_pairs can skip the over-cap
-    # occupancy scan (no bucket can need splitting at tiny n) and
-    # (b) whether the pinned vectors fit the verify broadcast gate.
-    if max_candidates is not None:
-        p = cosine_collision_p(threshold)
-        row = _occupancy_summary(bk, eff_bands).first()
-        # auto-escalation loop: apply the sized pick instead of refusing,
-        # then re-gate the ACTUAL count at the new config. Bounded — the
-        # row floor strictly increases per retry and the pick raises when
-        # it runs out of rows; 4 attempts is already past any plausible
-        # model-vs-content skew (each +1 row halves expected occupancy).
-        attempts = 4
-        while (
-            on_over_budget == "resize"
-            and attempts > 0
-            and (row["candidate_pairs"] or 0) > max_candidates
-            and (row["n_vectors"] or 0) > 0
-        ):
-            eff_bands, eff_rows, _rec = auto_sized_sketch_pick(
-                row["n_vectors"], max_candidates, p, min_rows=eff_rows + 1
-            )
-            resized = True
-            vecs = banded_sign_sketch(
-                embeddings, eff_bands, eff_rows, seed, id_col, vec_col, dim
-            )
-            bk = _explode_band_keys(vecs)
-            row = _occupancy_summary(bk, eff_bands).first()
-            attempts -= 1
-        s = _check_candidate_budget(
-            row, max_candidates, eff_bands, eff_rows,
-            p=p,
-            threshold_label=f"cosine >= {threshold}",
-        )
-        n = s["n_vectors"] or 0
-        if n == 0:
-            n_exact, do_broadcast = 0, False
-        else:
-            width = dim if dim is not None else len(vecs.select("__v").first()[0])
-            threshold_rows = int(VERIFY_BROADCAST_MAX_BYTES / (width * 8 * 1.5))
-            n_exact = n if n <= max(threshold_rows, SPLIT_GATE_MAX_ROWS) else None
-            do_broadcast = n <= threshold_rows
-    elif dim is not None:
-        # width is known from the caller — the only open question is n,
-        # and vecs is the just-pinned checkpoint, so ONE full count over
-        # materialized blocks answers it in a single job. The dim-less
-        # probe below pays two extra actions (a first() for the width
-        # plus a global-LIMIT count that scans in up to three
-        # incremental partition waves) to learn what the caller already
-        # told us — measured at sf0.1 (r14, isolated noop-sink loop):
-        # 21.1 -> 6.4 executor-CPU s / 6.5 -> 2.5 s wall for the
-        # registry query, which passes dim.
-        # ``n_rows`` (r15): a caller that already knows the input row
-        # count — e.g. from the parquet footer, free of any Spark job —
-        # retires even that one count action. The sketch emits exactly
-        # one output row per input row (NULL/empty vectors included), so
-        # the caller's input count IS the sketch count; the gates it
-        # feeds are monotone, so an upper bound is also sound.
-        threshold_rows = int(VERIFY_BROADCAST_MAX_BYTES / (dim * 8 * 1.5))
-        n_probe = n_rows if n_rows is not None else vecs.count()
-        if n_probe == 0:
-            n_exact, do_broadcast = 0, False
-        else:
-            n_exact = n_probe if n_probe <= max(threshold_rows, SPLIT_GATE_MAX_ROWS) else None
-            do_broadcast = n_probe <= threshold_rows
-    else:
-        first = vecs.select("__v").first()
-        if first is None:
-            n_exact, do_broadcast = 0, False
-        else:
-            threshold_rows = int(VERIFY_BROADCAST_MAX_BYTES / (len(first[0]) * 8 * 1.5))
-            probe_cap = max(threshold_rows, SPLIT_GATE_MAX_ROWS)
-            n_probe = vecs.limit(probe_cap + 1).count()
-            n_exact = n_probe if n_probe <= probe_cap else None
-            do_broadcast = n_probe <= threshold_rows
-    # across-band duplicate folding moved OUT of a pair-wide .distinct()
-    # exchange into the verify projection's map-side min-colliding-band
-    # filter (guide §2.4): identical output row set, zero shuffles
-    # between the pinned sketch scan and the scored pairs
-    cand = _bucketed_self_pairs(bk, bucket_cap, n_rows=n_exact, keep_band=True)
-    out = _verify_cosine_pairs(
-        cand, vecs, threshold, broadcast=do_broadcast, min_band_dedup=True
-    )
-    if on_over_budget == "resize":
-        # self-describing escalation: the pick rides the output as a
-        # constant-key broadcast HASH join (the ivf audit pattern,
-        # plans/contract_ext.py) — 5 tiny columns, keyed so the
-        # plan-quality CI's no-BNLJ rule holds
-        audit = embeddings.sparkSession.createDataFrame(
-            [(bands, rows_per_band, eff_bands, eff_rows, resized)],
-            "requested_bands int, requested_rows int, "
-            "sketch_bands int, sketch_rows int, sketch_resized boolean",
-        )
-        out = (
-            out.withColumn("__one", F.lit(1))
-            .join(F.broadcast(audit.withColumn("__one", F.lit(1))), "__one")
-            .drop("__one")
-        )
-    return out
-
-
-
-
 class LshCandidateBudgetError(ValueError):
     """The pre-flight scout priced the LSH candidate join OVER the
     caller's budget: carries the exact per-band collision count and a
@@ -739,61 +569,6 @@ def bands_rows_for(
     return best
 
 
-def auto_sized_sketch_pick(
-    n: int,
-    max_candidates: int,
-    p: float,
-    min_recall: float = SIZING_MIN_RECALL,
-    min_rows: int = 1,
-    max_bands: int = 4096,
-    max_rows: int = 62,
-) -> tuple[int, int, float]:
-    """Cheapest ``(bands, rows_per_band, predicted_recall)`` whose
-    EXPECTED per-band collision count fits ``max_candidates`` — the
-    sizing solve behind the auto-escalation path (r13 verdict task 3).
-
-    ``bands_rows_for`` sizes to a caller-chosen occupancy target; this
-    variant sizes to the caller's candidate BUDGET directly, which is
-    what the over-budget guardrail actually knows: under the uniform
-    sign-bit model, expected occupancy is n/2^rows per (band, key)
-    bucket and expected per-band collisions are bands·n·occ/2, so each
-    extra row halves the candidate volume while the recall floor sets
-    the band count (1-(1-p^r)^b >= min_recall). Scanning rows upward
-    from ``min_rows`` returns the FIRST config that fits — the
-    narrowest sketch, hence the cheapest projection pass and index.
-
-    The model is exact for sign-LSH over centered data; content-skewed
-    corpora can exceed it, which is why the caller re-gates the actual
-    scout count after resizing (and calls back here with a higher
-    ``min_rows``) instead of trusting the expectation. Raises
-    ``ValueError`` when no config within (max_bands, max_rows) holds
-    both floors — tiny budgets at low thresholds (p < 0.5 makes the
-    band growth outpace the occupancy halving)."""
-    if n <= 0:
-        raise ValueError(f"auto sizing needs a positive corpus size, got n={n}")
-    if not 0.0 < min_recall < 1.0:
-        raise ValueError(f"min_recall must be in (0, 1), got {min_recall}")
-    p = min(max(p, 1e-6), 1.0 - 1e-9)
-    for rows in range(max(1, min_rows), max_rows + 1):
-        miss = 1.0 - p**rows
-        if miss >= 1.0:  # p^rows underflowed: no band count reaches the floor
-            break
-        bands = 1 if miss <= 0.0 else max(
-            1, math.ceil(math.log(1.0 - min_recall) / math.log(miss))
-        )
-        if bands > max_bands:
-            continue
-        expected = bands * n * (n / 2.0**rows) / 2.0
-        if expected <= max_candidates:
-            return bands, rows, lsh_recall(p, bands, rows)
-    raise ValueError(
-        f"no sketch with bands <= {max_bands} and rows_per_band <= {max_rows} "
-        f"holds both recall >= {min_recall} (per-row collision p={p:.4f}) and "
-        f"expected per-band collisions <= {max_candidates:,} at n={n:,}; raise "
-        "max_candidates, relax min_recall, or shard the corpus"
-    )
-
-
 def _check_candidate_budget(
     stats_df: DataFrame,
     max_candidates: int,
@@ -822,11 +597,8 @@ def _check_candidate_budget(
 
     Returns the summary Row so a passing caller can reuse the exact
     item count it already paid one action for (e.g. to skip the sizing
-    probe) instead of relearning it with another. ``stats_df`` may also
-    be an already-collected summary Row — the auto-escalation path
-    (r13 verdict task 3) gates each attempt off the Row it already
-    holds instead of paying a second action."""
-    s = stats_df.first() if isinstance(stats_df, DataFrame) else stats_df
+    probe) instead of relearning it with another."""
+    s = stats_df.first()
     # aggregating ZERO rows yields null n/candidate_pairs — an empty
     # corpus must read as "0 candidates: under budget", not a TypeError
     # out of the None > int comparison
@@ -912,7 +684,8 @@ def sign_lsh_occupancy_stats(
     pair operators instead, which reads the same summary off the pinned
     keys without repeating the projection. Returns a single row of the
     numbers that decide whether
-    ``embedding_near_dup_pairs`` at these parameters is launchable:
+    ``incremental_embedding_pairs(None, …)`` at these parameters is
+    launchable:
 
       n_vectors, n_buckets, max_occupancy, p99_occupancy,
       mean_occupancy, candidate_pairs — Σ occ·(occ−1)/2 over all
@@ -930,7 +703,7 @@ def sign_lsh_occupancy_stats(
     mid-spill — while 8×12 predicts 81M, which completes in 112 s wall
     / 2,274 executor-CPU s; SCALE.md round-9)."""
     if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
+        dim = _vector_width(embeddings, vec_col)
     # same pre-projection spread as banded_sign_sketch: the scout repeats
     # the compute-dense hyperplane projection, and on single-row-group
     # inputs it would otherwise fold onto one core — turning the
@@ -1142,7 +915,7 @@ def banded_sign_sketch(
     checkpoint instead of re-folding the bands × rows × dim
     multiply-adds (same pathology class as lsh_candidate_pairs)."""
     if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
+        dim = _vector_width(embeddings, vec_col)
     # spread BEFORE the sketch projection when the input arrives in fewer
     # partitions than cores (single-row-group files): the sketch is
     # compute-dense per row and would otherwise fold on one core. Skipped
@@ -1188,14 +961,26 @@ SIGN_BUCKET_CAP = 512
 SPLIT_GATE_MAX_ROWS = 4096
 
 
+def _band_self_join(bk: DataFrame) -> DataFrame:
+    """(id1, id2, band) for every id1 < id2 sharing a (band, key) bucket."""
+    return (
+        bk.alias("a")
+        .join(bk.alias("b"), ["band", "key"])
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"), "band")
+    )
+
+
 def _bucketed_self_pairs(
-    bk: DataFrame, cap: int | None = None, n_rows: int | None = None,
-    keep_band: bool = False,
+    bk: DataFrame, cap: int | None = None, n_rows: int | None = None
 ) -> DataFrame:
-    """Candidate pairs (id1 < id2) from a band-key table via the per-bucket
-    equi self-join, with an OCCUPANCY GUARDRAIL: buckets holding more than
-    ``cap`` members are handled by a triangle chunk-split that emits the
-    IDENTICAL pair set across ceil(m/cap)·(ceil(m/cap)+1)/2 join tasks.
+    """Candidate pairs (id1, id2, band), id1 < id2, from a band-key table
+    via the per-bucket equi self-join — EXACTLY ONE ROW PER (pair,
+    colliding band) on every path, so ``_verify_cosine_pairs`` folds the
+    across-band duplicates with its min-colliding-band filter. The join
+    carries an OCCUPANCY GUARDRAIL: buckets holding more than ``cap``
+    members are handled by a triangle chunk-split that emits the
+    IDENTICAL rows across ceil(m/cap)·(ceil(m/cap)+1)/2 join tasks.
 
     The skew problem this solves is invisible to AQE: a hot bucket is a
     few hundred INPUT rows (far under any skewed-partition byte
@@ -1205,12 +990,12 @@ def _bucketed_self_pairs(
     mod n_chunks and meets chunk pairs (i ≤ j) in separate tasks: a
     member is replicated to its a-side tasks (c, j≥c) and b-side tasks
     (i≤c, c) — ~2·(m/cap) copies, linear — and every unordered pair
-    meets in exactly the one task (min-chunk, max-chunk) (twice, then
-    deduped, when both ends share a chunk: the caller's any-band
-    ``distinct`` already folds that). Total candidate work is unchanged —
-    these are true candidates the verify stage must score — only its
-    placement changes, so output is byte-identical with or without the
-    cap at every SF (asserted in tests with a cap forced below observed
+    meets in exactly the one task (min-chunk, max-chunk); the same-chunk
+    task (``__i == __j``) sees both orderings and keeps only id1 < id2,
+    like the plain join. Total candidate work is unchanged — these are
+    true candidates the verify stage must score — only its placement
+    changes, so output is byte-identical with or without the cap at
+    every SF (asserted in tests with a cap forced below observed
     occupancy).
 
     Round-10 small-corpus fix (quiet-box A/B in
@@ -1219,47 +1004,26 @@ def _bucketed_self_pairs(
     four extra plan subtrees, not data cost): two gates now drop the
     guardrail when it provably cannot help, byte-identically.
 
-    1. ``n_rows`` (the caller's exact row count, when known from a probe
-       it already paid for): if ``n_rows <= cap`` NO bucket can exceed
-       the cap — skip the scan outright. With the DEFAULT cap, also skip
-       while ``n_rows <= SPLIT_GATE_MAX_ROWS``: the degenerate
-       worst-case single task is then sub-second. An explicit cap is
-       always honored.
+    1. ``n_rows`` (the caller's row count or any upper bound, when known
+       from a probe it already paid for): if ``n_rows <= cap`` NO bucket
+       can exceed the cap — skip the scan outright. With the DEFAULT
+       cap, also skip while ``n_rows <= SPLIT_GATE_MAX_ROWS``: the
+       degenerate worst-case single task is then sub-second. An explicit
+       cap is always honored.
     2. Otherwise the over-cap bucket list (at most rows/cap entries by
        construction) is materialized ONCE (``localCheckpoint``) and,
        when EMPTY, the split plan — four extra subtrees, each re-scanning
        band keys and rebuilding the broadcast — is dropped for the plain
        self-join. A healthy large corpus pays exactly one narrow
        (band, key) count shuffle + one empty-checkpoint read; a
-       degenerate one pays the same count plus the split it needs.
-
-    ``keep_band`` additionally emits the band the pair collided in —
-    (id1, id2, band), EXACTLY ONE ROW PER (pair, colliding band) on
-    every path — so a caller can fold the across-band duplicates with a
-    map-side min-colliding-band filter instead of a pair-wide
-    ``distinct`` exchange (see ``embedding_near_dup_pairs``). The
-    once-per-band guarantee holds on the split path too: the one task
-    where BOTH ends share a chunk (``__i == __j``) orders the pair by id
-    like the plain join does, where it previously emitted both
-    orderings and leaned on the caller's distinct to fold them.
-
-    Output is byte-identical on every path: an empty (or impossible)
-    over-list makes the split plan degenerate to the plain join
-    row-for-row."""
-    out_cols = (["id1", "id2", "band"] if keep_band else ["id1", "id2"])
+       degenerate one pays the same count plus the split it needs."""
     explicit_cap = cap is not None
     if cap is None:
         cap = SIGN_BUCKET_CAP
     if n_rows is not None and (
         n_rows <= cap or (not explicit_cap and n_rows <= SPLIT_GATE_MAX_ROWS)
     ):
-        return (
-            bk.alias("a")
-            .join(bk.alias("b"), ["band", "key"])
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"), "band")
-            .select(*out_cols)
-        )
+        return _band_self_join(bk)
     over_occ = (
         bk.groupBy("band", "key")
         .agg(F.count(F.lit(1)).alias("__occ"))
@@ -1267,21 +1031,10 @@ def _bucketed_self_pairs(
         .localCheckpoint()
     )
     if not over_occ.take(1):
-        return (
-            bk.alias("a")
-            .join(bk.alias("b"), ["band", "key"])
-            .filter(F.col("a.id") < F.col("b.id"))
-            .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"), "band")
-            .select(*out_cols)
-        )
+        return _band_self_join(bk)
     over = F.broadcast(over_occ)
-    small = bk.join(over.select("band", "key"), ["band", "key"], "left_anti")
-    pairs_small = (
-        small.alias("a")
-        .join(small.alias("b"), ["band", "key"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"), "band")
-        .select(*out_cols)
+    pairs_small = _band_self_join(
+        bk.join(over.select("band", "key"), ["band", "key"], "left_anti")
     )
     member = (
         bk.join(over, ["band", "key"])
@@ -1307,8 +1060,7 @@ def _bucketed_self_pairs(
         # cross-chunk pairs meet in exactly one task with one ordering;
         # the SAME-chunk task (__i == __j) sees both orderings, so keep
         # only id < __idb there — each unordered pair then comes out
-        # exactly once per band (before this, the same-chunk duplicate
-        # survived to the caller's distinct)
+        # exactly once per band
         .filter(
             F.when(F.col("__i") == F.col("__j"), F.col("id") < F.col("__idb")).otherwise(
                 F.col("id") != F.col("__idb")
@@ -1319,7 +1071,6 @@ def _bucketed_self_pairs(
             F.greatest(F.col("id"), F.col("__idb")).alias("id2"),
             "band",
         )
-        .select(*out_cols)
     )
     return pairs_small.unionByName(pairs_big)
 
@@ -1496,63 +1247,59 @@ def _verify_cosine_pairs(
     vecs: DataFrame,
     threshold: float,
     broadcast: bool | None = None,
-    min_band_dedup: bool = False,
 ) -> DataFrame:
-    """``min_band_dedup`` replaces the caller's pair-wide ``.distinct()``
-    with a MAP-SIDE filter (guide §2.4 — remove the shuffle outright):
-    ``cand`` then carries the colliding ``band`` per row (exactly one row
-    per (pair, colliding band) — ``_bucketed_self_pairs(keep_band=True)``)
-    and, with both sides' ``__bands`` arrays attached by the verify join
-    anyway, a pair is kept only at its SMALLEST colliding band:
-    ``array_min`` over the per-band key-equality zip. Every colliding
-    pair has exactly one minimal colliding band, so the output row set is
-    identical to distinct-then-verify while the candidate relation never
-    crosses an exchange (the across-band duplicate factor is ~1.02 at the
+    """Verified (id1, id2, cosine ≥ threshold) pairs from ``cand``, which
+    holds one row per (pair, colliding band) — ``_bucketed_self_pairs``
+    and the new×prior probe of ``incremental_embedding_pairs``. A pair
+    that collides in several bands is kept only at its SMALLEST
+    colliding band: with both sides' ``__bands`` arrays attached by the
+    verify join anyway, ``array_min`` over the per-band key-equality zip
+    names that band, and a map-side filter drops the other rows (guide
+    §2.4 — remove the shuffle outright). Every colliding pair has
+    exactly one minimal colliding band, so the row set equals
+    distinct-then-verify while the candidate relation never crosses a
+    pair-wide exchange (the across-band duplicate factor is ~1.02 at the
     shipped SFs — near-dup pairs are rare — so the duplicated probe work
     this trades in is noise)."""
     va = vecs.select(
         F.col("id").alias("id1"), F.col("__v").alias("__va"), F.col("__n").alias("__na"),
-        *([F.col("__bands").alias("__ba")] if min_band_dedup else []),
+        F.col("__bands").alias("__ba"),
     )
     vb = vecs.select(
         F.col("id").alias("id2"), F.col("__v").alias("__vb"), F.col("__n").alias("__nb"),
-        *([F.col("__bands").alias("__bb")] if min_band_dedup else []),
+        F.col("__bands").alias("__bb"),
     )
-    # broadcast=None → self-probe. vecs is USUALLY the materialized
-    # sketch pin, but the incremental path unions in a caller-supplied
-    # prior index that may be an arbitrary unpinned plan (e.g. read
-    # straight from parquet) — so the sizing probe must stay cheap on
-    # oversized inputs: a LIMIT-capped count stops scanning at
-    # threshold_rows+1 instead of paying a full count (twice) just to
-    # learn the index will never broadcast. Callers that already probed
-    # (embedding_near_dup_pairs shares one probe across its gates) pass
-    # the decision in to avoid repeating the actions.
+    # broadcast=None → self-probe. The incremental path unions in a
+    # caller-supplied prior index that may be an arbitrary unpinned plan
+    # (e.g. read straight from parquet) — so the sizing probe must stay
+    # cheap on oversized inputs: a LIMIT-capped count stops scanning at
+    # threshold_rows+1 instead of paying a full count just to learn the
+    # index will never broadcast. The no-prior call already knows n and
+    # passes the decision in.
     if broadcast is None:
-        first = vecs.select("__v").first()
-        broadcast = False
-        if first is not None:
-            threshold_rows = int(VERIFY_BROADCAST_MAX_BYTES / (len(first[0]) * 8 * 1.5))
-            broadcast = vecs.limit(threshold_rows + 1).count() <= threshold_rows
+        threshold_rows = int(VERIFY_BROADCAST_MAX_BYTES / (_vector_width(vecs, "__v") * 8 * 1.5))
+        broadcast = vecs.limit(threshold_rows + 1).count() <= threshold_rows
     if broadcast:
         va, vb = F.broadcast(va), F.broadcast(vb)
-    joined = cand.join(va, "id1").join(vb, "id2")
-    if min_band_dedup:
-        # first (minimum) colliding band of the pair, from the two band
-        # arrays: keys are equal at position i iff the pair collides in
-        # band i (arrays are band-ordered by construction in the sketch
-        # kernel; the band fields are compared anyway for safety). The
-        # emitted band row survives only when it IS that minimum, which
-        # keeps exactly one row per colliding pair — before the cosine
-        # kernel, so the scoring work matches the distinct path's.
-        first_band = F.array_min(
-            F.zip_with(
-                "__ba", "__bb",
-                lambda x, y: F.when(
-                    (x["band"] == y["band"]) & (x["key"] == y["key"]), x["band"]
-                ),
-            )
+    # first (minimum) colliding band of the pair, from the two band
+    # arrays: keys are equal at position i iff the pair collides in band
+    # i (arrays are band-ordered by construction in the sketch kernel;
+    # the band fields are compared anyway for safety). The emitted band
+    # row survives only when it IS that minimum — before the cosine
+    # kernel, so each pair is scored once.
+    first_band = F.array_min(
+        F.zip_with(
+            "__ba", "__bb",
+            lambda x, y: F.when(
+                (x["band"] == y["band"]) & (x["key"] == y["key"]), x["band"]
+            ),
         )
-        joined = joined.filter(F.col("band") == first_band).drop("band", "__ba", "__bb")
+    )
+    joined = (
+        cand.join(va, "id1").join(vb, "id2")
+        .filter(F.col("band") == first_band)
+        .drop("band", "__ba", "__bb")
+    )
     return _cosine_scored_pairs(joined, "id1", "id2", "__va", "__vb", "__na", "__nb").filter(
         F.col("cosine") >= threshold
     )
@@ -1572,9 +1319,23 @@ def incremental_embedding_pairs(
     max_candidates: int | None = None,
     n_new_rows: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Batch-over-batch embedding near-dup detection: sketch ONLY the new
-    batch and probe it against the stored sign-sketch index — the
-    embedding-space twin of ``dedup.incremental_minhash_pairs``.
+    """Embedding-cosine near-duplicate pairs via MULTI-BAND sign-bit LSH
+    (the minhash-band construction transplanted to random hyperplanes):
+    candidates = any-band collision, verified by exact cosine ≥
+    threshold. The one producer of embedding near-dup pairs: sketch ONLY
+    the new batch and probe it against the stored sign-sketch index —
+    the embedding-space twin of ``dedup.incremental_minhash_pairs``. A
+    one-shot search over a whole corpus is the no-history case,
+    ``prior_index=None``.
+
+    Per band, the key packs ``rows_per_band`` sign bits → 2^rows_per_band
+    buckets per band; a pair collides if ALL bits of SOME band agree.
+    For p = 1 - acos(cos)/π, recall = 1 - (1 - p^rows)^bands: with the
+    8×8 default, a 0.95-cosine pair is caught 98.8% of the time while an
+    uncorrelated pair (p≈0.5) collides in a band with chance 2^-8. The
+    scale knobs are independent: raise ``rows_per_band`` to shrink
+    buckets as the corpus grows (each +1 bit halves expected bucket
+    occupancy n/2^rows), raise ``bands`` to buy recall back.
 
     A growing embedding store must not re-fold its history's bands ×
     rows × dim sketch every increment. The ``banded_sign_sketch`` table
@@ -1588,49 +1349,66 @@ def incremental_embedding_pairs(
     pairs where at least one side is new, and the index to persist for
     the next increment.
 
+    Pass ``dim`` explicitly in pipelines — the ``.first()`` fallback costs
+    one extra Spark action to probe the vector width (the first
+    non-NULL, non-empty vector's).
+
+    ``bucket_cap`` (default ``SIGN_BUCKET_CAP``) is the within-increment
+    join's per-bucket occupancy guardrail — see ``_bucketed_self_pairs``;
+    output is byte-identical at any cap. The new×prior probe is already
+    bounded by increment occupancy × prior occupancy per bucket.
+
     ``max_candidates`` (opt-in) prices the increment's candidate join
     BEFORE launching it — per bucket, c_new·(c_new−1)/2 within-increment
     pairs plus c_new·c_prior probe hits against the stored index — and
     raises ``LshCandidateBudgetError`` with the exact count and a sized
     ``rows_per_band`` suggestion when it exceeds the budget. The scout
-    reads the pinned increment sketch (one narrow count shuffle) plus
-    one occupancy pass over the stored index's keys (a scan of the
-    persisted index table — its vectors are never read); a passing
-    scout changes nothing downstream.
+    reads the pinned increment sketch (one narrow count shuffle) plus,
+    with a prior, one occupancy pass over the stored index's keys (a
+    scan of the persisted index table — its vectors are never read); a
+    passing scout changes nothing downstream.
 
     ``n_new_rows`` (optional) is the caller's count — or any UPPER
     bound — of the increment's rows, for callers that already know it
-    (the corpus pipeline gets it free from its load observation). The
-    within-increment pair join uses it to skip the over-cap occupancy
-    scan when no bucket can possibly exceed the cap (see
-    ``_bucketed_self_pairs``; the gates are monotone, so an upper
-    bound is sound) — this retires the scan's fixed per-action cost
-    (~2-5 CPU s on local[32], evidence/ABSCOUT_r10.jsonl) from every
-    small daily increment."""
+    (the corpus pipeline from its load observation, the registry from
+    the parquet footer). The sketch emits exactly one row per input row
+    (NULL/empty vectors included), and the gates it feeds are monotone,
+    so an upper bound is sound. It lets the within-increment join skip
+    its over-cap occupancy scan on small increments (~2-5 CPU s of fixed
+    per-action cost on local[32], evidence/ABSCOUT_r10.jsonl).
+
+    Sizing without a prior costs at most one action: the split gate and
+    the verify broadcast both read n from the budget scout's exact count
+    when a budget is set, else from ``n_new_rows``, else from ONE count
+    over the pinned sketch (round-10: every extra Spark action costs a
+    fixed ~2-5 executor-CPU s on a 32-way local session regardless of
+    data size). With a prior, the verify join probes the union's size
+    itself (``_verify_cosine_pairs``)."""
+    p = cosine_collision_p(threshold)
+    label = f"cosine >= {threshold}"
+    if dim is None:
+        dim = _vector_width(new_embeddings, vec_col)
     new_vecs = banded_sign_sketch(new_embeddings, bands, rows_per_band, seed, id_col, vec_col, dim)
     new_bk = _explode_band_keys(new_vecs)
     if prior_index is None:
+        n = n_new_rows
         if max_candidates is not None:
-            _check_candidate_budget(
+            n = _check_candidate_budget(
                 _occupancy_summary(new_bk, bands), max_candidates, bands, rows_per_band,
-                p=cosine_collision_p(threshold),
-                threshold_label=f"cosine >= {threshold}",
-            )
-        cand = _bucketed_self_pairs(new_bk, bucket_cap, n_rows=n_new_rows).distinct()
-        return _verify_cosine_pairs(cand, new_vecs, threshold), new_vecs
+                p=p, threshold_label=label,
+            )["n_vectors"] or 0
+        elif n is None:
+            n = new_vecs.count()
+        threshold_rows = int(VERIFY_BROADCAST_MAX_BYTES / (dim * 8 * 1.5))
+        cand = _bucketed_self_pairs(new_bk, bucket_cap, n_rows=n)
+        pairs = _verify_cosine_pairs(cand, new_vecs, threshold, broadcast=0 < n <= threshold_rows)
+        return pairs, new_vecs
     prior_bk = _explode_band_keys(prior_index)
     if max_candidates is not None:
         _check_candidate_budget(
             _incremental_occupancy_summary(new_bk, prior_bk, bands),
-            max_candidates,
-            bands,
-            rows_per_band,
-            p=cosine_collision_p(threshold),
-            threshold_label=f"cosine >= {threshold}",
+            max_candidates, bands, rows_per_band, p=p, threshold_label=label,
         )
-    # within-increment pairs take the same occupancy guardrail as the
-    # rebuild; the new×prior probe below is already bounded by increment
-    # occupancy × prior occupancy per bucket (the increment side is small)
     new_new = _bucketed_self_pairs(new_bk, bucket_cap, n_rows=n_new_rows)
     # one equi probe of the stored index — touches only colliding
     # buckets, never the history's vectors
@@ -1641,8 +1419,14 @@ def incremental_embedding_pairs(
         .select(
             F.least(F.col("a.id"), F.col("b.id")).alias("id1"),
             F.greatest(F.col("a.id"), F.col("b.id")).alias("id2"),
+            "band",
         )
     )
-    cand = new_new.unionByName(cross).distinct()
+    # the candidate union crosses no exchange, so AQE never coalesces it:
+    # cap its partitions at the core count, or the cosine kernel runs one
+    # Python task per output partition of both joins
+    cand = new_new.unionByName(cross).coalesce(
+        new_embeddings.sparkSession.sparkContext.defaultParallelism
+    )
     all_vecs = prior_index.unionByName(new_vecs)
     return _verify_cosine_pairs(cand, all_vecs, threshold), all_vecs

@@ -1155,7 +1155,7 @@ _NEARDUP_PLANES = similarity.hyperplanes(EMB_DIM, n_planes=_NEARDUP_BANDS * _NEA
 
 def _banded_bk_sql() -> str:
     """UNION ALL of one band-key projection per band — mirrors the key
-    packing of ``similarity.embedding_near_dup_pairs`` exactly (same
+    packing of ``similarity.banded_sign_sketch`` exactly (same
     plane order, same bit order, same ``>= 0`` sign rule; cross-engine
     dot-product bit-identity established in round 1)."""
     selects = []
@@ -1190,12 +1190,12 @@ def _banded_bk_sql() -> str:
 )
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
-    out = similarity.embedding_near_dup_pairs(
-        e, threshold=0.4, bands=_NEARDUP_BANDS, rows_per_band=_NEARDUP_ROWS, seed=42,
+    out, _index = similarity.incremental_embedding_pairs(
+        None, e, threshold=0.4, bands=_NEARDUP_BANDS, rows_per_band=_NEARDUP_ROWS, seed=42,
         dim=EMB_DIM,
         # footer row count: retires the operator's one sizing count()
         # action (a whole Spark job) — same number, read driver-side
-        n_rows=parquet_num_rows(sf_dir, "embeddings"),
+        n_new_rows=parquet_num_rows(sf_dir, "embeddings"),
     )
     return out.select("id1", "id2")
 
@@ -1579,9 +1579,11 @@ def dedup_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "embeddings")
-    pairs = similarity.embedding_near_dup_pairs(
-        e, threshold=0.4, bands=_NEARDUP_BANDS, rows_per_band=_NEARDUP_ROWS, seed=42, dim=EMB_DIM
-    ).select("id1", "id2")
+    pairs, _index = similarity.incremental_embedding_pairs(
+        None, e, threshold=0.4, bands=_NEARDUP_BANDS, rows_per_band=_NEARDUP_ROWS, seed=42,
+        dim=EMB_DIM,
+    )
+    pairs = pairs.select("id1", "id2")
     clusters = graph.dedup_clusters(pairs, e.select("vec_id"), id_col="vec_id")
     return (
         clusters.groupBy("cluster")

@@ -611,8 +611,7 @@ class CorpusPipeline:
                 )
             emb_in = embeddings.join(kept.select("doc_id"), "doc_id", "left_semi")
             if emb_in.limit(1).count() == 0:
-                # nothing to sketch (banded_sign_sketch derives dim from
-                # the first row)
+                # nothing to sketch: no pairs and no index rows today
                 return None, None, stats
             try:
                 pairs, sign_union = similarity.incremental_embedding_pairs(

@@ -8,6 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from batch_data_pipeline_exercise_spark.obs import measure
 from batch_data_pipeline_exercise_spark.operators import multimodal, similarity
 
 
@@ -21,6 +22,11 @@ def vecs(spark):
     rows.append((100, [x + 0.001 for x in rows[10][1]]))
     rows.append((102, list(rows[0][1])))
     return spark.createDataFrame(rows, "vec_id int, embedding array<double>").cache()
+
+
+def near_dup_pairs(embeddings, **kw):
+    """One-shot near-dup pairs: the no-history call of the one operator."""
+    return similarity.incremental_embedding_pairs(None, embeddings, **kw)[0]
 
 
 def brute_force_expected(rows, qid, k):
@@ -62,7 +68,7 @@ def test_cosine_topk_lsh_recall(spark, vecs):
 
 
 def test_embedding_near_dup_pairs(spark, vecs):
-    pairs = {(r["id1"], r["id2"]): r["cosine"] for r in similarity.embedding_near_dup_pairs(vecs, threshold=0.99).collect()}
+    pairs = {(r["id1"], r["id2"]): r["cosine"] for r in near_dup_pairs(vecs, threshold=0.99).collect()}
     assert (0, 102) in pairs and pairs[(0, 102)] == pytest.approx(1.0)
     assert (10, 100) in pairs and pairs[(10, 100)] > 0.999
     assert len(pairs) == 2  # random gaussians don't fake-pair at 0.99
@@ -77,18 +83,18 @@ def test_bucket_cap_split_is_byte_identical(spark, sf_dir):
     kw = dict(threshold=0.4, bands=8, rows_per_band=8, seed=42, dim=64)
     uncapped = {
         (r["id1"], r["id2"])
-        for r in similarity.embedding_near_dup_pairs(e, bucket_cap=10**9, **kw).collect()
+        for r in near_dup_pairs(e, bucket_cap=10**9, **kw).collect()
     }
     split = {
         (r["id1"], r["id2"])
-        for r in similarity.embedding_near_dup_pairs(e, bucket_cap=2, **kw).collect()
+        for r in near_dup_pairs(e, bucket_cap=2, **kw).collect()
     }
     assert uncapped and split == uncapped
 
 
 def test_bucketed_self_pairs_exhaustive_tiny():
     """Every unordered pair inside one bucket must appear exactly once
-    after distinct, for chunk counts from 1 (no split) through > members
+    (one band), for chunk counts from 1 (no split) through > members
     (every chunk singleton)."""
     import itertools
 
@@ -100,11 +106,9 @@ def test_bucketed_self_pairs_exhaustive_tiny():
     )
     want = {(a, b) for a, b in itertools.combinations(range(9), 2)}
     for cap in (1, 2, 4, 8, 100):
-        got = {
-            (r["id1"], r["id2"])
-            for r in similarity._bucketed_self_pairs(bk, cap).distinct().collect()
-        }
-        assert got == want, f"cap={cap}"
+        rows = similarity._bucketed_self_pairs(bk, cap).select("id1", "id2").collect()
+        assert len(rows) == len(want), f"cap={cap}"
+        assert {(r["id1"], r["id2"]) for r in rows} == want, f"cap={cap}"
 
 
 def test_banded_lsh_recall_vs_exact(spark, sf_dir):
@@ -119,7 +123,7 @@ def test_banded_lsh_recall_vs_exact(spark, sf_dir):
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     got = {
         (r["id1"], r["id2"])
-        for r in similarity.embedding_near_dup_pairs(
+        for r in near_dup_pairs(
             e, threshold=0.4, bands=8, rows_per_band=8, seed=42, dim=64
         ).collect()
     }
@@ -167,26 +171,27 @@ def test_incremental_embedding_equals_rebuild(spark, sf_dir):
     """Incremental probe (new batch vs stored index) must equal the full
     rebuild's verified pairs restricted to pairs touching a new vector —
     the exact-reconstruction property the 100 TB increment story rests
-    on. Also: a second increment emits no pair twice."""
+    on. Also: a second increment emits no pair twice. Run at the default
+    cap and at cap 2, which routes the within-increment join through the
+    chunk-split: the min-colliding-band rule must hold on both paths."""
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    full = {
-        (r["id1"], r["id2"])
-        for r in similarity.embedding_near_dup_pairs(e, threshold=0.4, dim=64).collect()
-    }
     prior = e.filter(F.col("vec_id") % 5 != 0)
     new = e.filter(F.col("vec_id") % 5 == 0)
     idx = similarity.banded_sign_sketch(prior, dim=64)
-    pairs, updated = similarity.incremental_embedding_pairs(idx, new, threshold=0.4, dim=64)
-    got = {(r["id1"], r["id2"]) for r in pairs.collect()}
-    want = {(a, b) for a, b in full if a % 5 == 0 or b % 5 == 0}
-    assert got == want
-    # the updated index reproduces the full-corpus index state
-    assert updated.count() == e.count()
-    # first-batch path (no prior index) = self-join of the new batch only
-    first, first_idx = similarity.incremental_embedding_pairs(None, new, threshold=0.4, dim=64)
-    got_first = {(r["id1"], r["id2"]) for r in first.collect()}
-    assert got_first == {(a, b) for a, b in full if a % 5 == 0 and b % 5 == 0}
-    assert first_idx.count() == new.count()
+    for cap in (None, 2):
+        kw = dict(threshold=0.4, dim=64, bucket_cap=cap)
+        full = {(r["id1"], r["id2"]) for r in near_dup_pairs(e, **kw).collect()}
+        pairs, updated = similarity.incremental_embedding_pairs(idx, new, **kw)
+        got = [(r["id1"], r["id2"]) for r in pairs.collect()]
+        assert len(got) == len(set(got)), f"cap={cap}"
+        assert set(got) == {(a, b) for a, b in full if a % 5 == 0 or b % 5 == 0}, f"cap={cap}"
+        # the updated index reproduces the full-corpus index state
+        assert updated.count() == e.count()
+        # first-batch path (no prior index) = self-join of the new batch only
+        first, first_idx = similarity.incremental_embedding_pairs(None, new, **kw)
+        got_first = {(r["id1"], r["id2"]) for r in first.collect()}
+        assert got_first == {(a, b) for a, b in full if a % 5 == 0 and b % 5 == 0}
+        assert first_idx.count() == new.count()
 
 
 def test_image_codec_gate(spark):
@@ -260,7 +265,7 @@ def test_sign_lsh_occupancy_stats_exact(spark, sf_dir):
     assert stats["max_occupancy"] == max(occ)
     assert stats["candidate_pairs"] == sum(c * (c - 1) // 2 for c in occ)
 
-    n_cand = similarity._bucketed_self_pairs(bk).distinct().count()
+    n_cand = similarity._bucketed_self_pairs(bk).select("id1", "id2").distinct().count()
     assert n_cand <= stats["candidate_pairs"]
 
 
@@ -270,11 +275,11 @@ def test_candidate_budget_gate(spark, vecs, sf_dir):
     nothing in the output."""
     kw = dict(threshold=0.99, bands=8, rows_per_band=8, seed=42, dim=16)
     with pytest.raises(similarity.LshCandidateBudgetError, match="rows_per_band="):
-        similarity.embedding_near_dup_pairs(vecs, max_candidates=1, **kw).collect()
-    base = {(r["id1"], r["id2"]) for r in similarity.embedding_near_dup_pairs(vecs, **kw).collect()}
+        near_dup_pairs(vecs, max_candidates=1, **kw).collect()
+    base = {(r["id1"], r["id2"]) for r in near_dup_pairs(vecs, **kw).collect()}
     gated = {
         (r["id1"], r["id2"])
-        for r in similarity.embedding_near_dup_pairs(vecs, max_candidates=10**9, **kw).collect()
+        for r in near_dup_pairs(vecs, max_candidates=10**9, **kw).collect()
     }
     assert gated == base and base
 
@@ -297,7 +302,7 @@ def test_candidate_budget_empty_corpus(spark):
     read as "0 candidates: under budget" (the zero-row aggregate yields
     null n/candidate_pairs), not crash with None > int."""
     empty = spark.createDataFrame([], "vec_id int, embedding array<float>")
-    out = similarity.embedding_near_dup_pairs(
+    out = near_dup_pairs(
         empty, threshold=0.9, bands=2, rows_per_band=2, seed=1, dim=4, max_candidates=10
     )
     assert out.count() == 0
@@ -419,6 +424,60 @@ def test_incremental_n_new_rows_hint_is_result_identical(spark, vecs):
             # the probe path must find the fixture's cross-boundary dups;
             # the 2-doc first batch legitimately holds no within pairs
             assert {(10, 100), (0, 102)} <= base
+
+
+def test_null_first_vector(spark):
+    """A NULL vector in the first scanned row must not break the width
+    probes: the pair and top-k operators return what they return for the
+    same input without the NULL row — with dim unset and set, with and
+    without a prior index — and the occupancy scout runs."""
+    rows = [(1, None), (2, [1.0, 0.0, 0.0]), (3, [1.0, 0.0, 0.0]), (4, [0.0, 1.0, 0.0])]
+    schema = "vec_id int, embedding array<double>"
+    with_null = spark.createDataFrame(rows, schema).coalesce(1)
+    without = spark.createDataFrame(rows[1:], schema).coalesce(1)
+
+    def pairset(df):
+        return {(r["id1"], r["id2"]) for r in df.collect()}
+
+    for dim in (None, 3):
+        kw = dict(bands=4, rows_per_band=2, dim=dim)
+        assert pairset(near_dup_pairs(with_null, **kw)) == {(2, 3)}
+        # the NULL row sits in the stored index, ahead of every vector
+        prior = similarity.banded_sign_sketch(with_null.filter("vec_id <= 2"), 4, 2, dim=dim)
+        pairs, _ = similarity.incremental_embedding_pairs(
+            prior, with_null.filter("vec_id > 2"), **kw
+        )
+        assert pairset(pairs) == {(2, 3)}
+
+    queries = without.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    for topk in (similarity.cosine_topk_lsh, similarity.cosine_topk_bruteforce):
+        got, want = (
+            sorted(tuple(r) for r in topk(e, queries, k=3).collect())
+            for e in (with_null, without)
+        )
+        assert got == want and want
+    assert similarity.sign_lsh_occupancy_stats(with_null).first()["n_vectors"] == 4
+    # an input with no vector at all yields no pairs
+    assert not near_dup_pairs(with_null.filter("vec_id = 1")).collect()
+
+
+def test_no_prior_sizing_launches_no_job(spark, vecs):
+    """With dim and n_new_rows given, building the no-prior call launches
+    exactly the sketch's own jobs: the split gate and the verify
+    broadcast are decided without a count (the registry's
+    embedding_near_dup_pairs relies on this)."""
+    kw = dict(bands=8, rows_per_band=8, seed=42, dim=16)
+    n = vecs.count()
+    _, sketch = measure(spark, lambda: similarity.banded_sign_sketch(vecs, **kw))
+    _, build = measure(
+        spark,
+        lambda: similarity.incremental_embedding_pairs(
+            None, vecs, threshold=0.99, n_new_rows=n, **kw
+        ),
+    )
+    assert sketch["jobs"] and len(build["jobs"]) == len(sketch["jobs"])
 
 
 def test_pil_skip_retirement_tripwire():

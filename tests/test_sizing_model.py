@@ -27,7 +27,6 @@ import pytest
 
 from batch_data_pipeline_exercise_spark.operators.similarity import (
     SIZING_MIN_RECALL,
-    auto_sized_sketch_pick,
     bands_rows_for,
     cosine_collision_p,
     lsh_recall,
@@ -132,56 +131,3 @@ def test_model_matches_measured_recall_probe():
             f"{cfg['sized']}: predicted total lost {predicted_total:.0f} vs "
             f"observed {observed_total}"
         )
-
-
-def test_auto_sized_sketch_pick_budget_solve():
-    """The auto-escalation solve (r13 verdict task 3): cheapest
-    (bands, rows) whose EXPECTED per-band collisions b*n*(n/2^r)/2 fit
-    the budget while the recall floor 1-(1-p^r)^b >= min_recall holds.
-    Every returned config must satisfy both, and rows-1 must NOT fit at
-    its own recall-solved band count (cheapest = first fitting row)."""
-    p95 = cosine_collision_p(0.95)
-    for n, budget, min_rows in (
-        (600_000, 50_000_000, 9),   # the verdict's 600k scenario
-        (200_000, 50_000_000, 9),   # sf10's corpus
-        (600_000, 5_000_000, 9),
-        (60_000, 2_000_000, 9),
-    ):
-        b, r, rec = auto_sized_sketch_pick(n, budget, p95, min_rows=min_rows)
-        assert rec >= SIZING_MIN_RECALL
-        assert lsh_recall(p95, b, r) == pytest.approx(rec)
-        assert b * n * (n / 2.0**r) / 2.0 <= budget, (n, budget, b, r)
-        assert r >= min_rows
-        if r > min_rows:
-            # the row below was checked and rejected: its recall-solved
-            # band count must overflow the budget
-            miss = 1.0 - p95 ** (r - 1)
-            b_prev = max(1, math.ceil(math.log(1.0 - SIZING_MIN_RECALL) / math.log(miss)))
-            assert b_prev * n * (n / 2.0 ** (r - 1)) / 2.0 > budget
-
-
-def test_auto_sized_sketch_pick_verdict_scenario():
-    """Pin the exact pick for the verdict's numbers: 600k vectors,
-    50M-candidate budget, cosine 0.95 anchor, escalating past the 8x8
-    config (min_rows=9) -> 12x16 at predicted recall ~0.91."""
-    b, r, rec = auto_sized_sketch_pick(
-        600_000, 50_000_000, cosine_collision_p(0.95), min_rows=9
-    )
-    assert (b, r) == (12, 16)
-    assert 0.90 <= rec < 0.95
-
-
-def test_auto_sized_sketch_pick_min_rows_and_errors():
-    p95 = cosine_collision_p(0.95)
-    # min_rows respected even when a shallower sketch would fit
-    b_lo, r_lo, _ = auto_sized_sketch_pick(1_000, 10**12, p95, min_rows=1)
-    b_hi, r_hi, _ = auto_sized_sketch_pick(1_000, 10**12, p95, min_rows=r_lo + 3)
-    assert r_lo == 1 and r_hi == r_lo + 3
-    with pytest.raises(ValueError, match="positive corpus size"):
-        auto_sized_sketch_pick(0, 10**6, p95)
-    with pytest.raises(ValueError, match="min_recall"):
-        auto_sized_sketch_pick(1_000, 10**6, p95, min_recall=1.0)
-    # infeasible: low threshold (p < 0.5 -> band growth outpaces the
-    # occupancy halving) at a tiny budget names all three knobs
-    with pytest.raises(ValueError, match="max_candidates"):
-        auto_sized_sketch_pick(10_000_000, 10, 0.3)
